@@ -12,14 +12,14 @@
 #
 # Env knobs: SRC (source sf dir, default /root/testdata/sf0.1),
 #            WORK (scratch dir, default /tmp/graft_scale),
-#            SPARK_GRAFT_CPUS (default 32),
+#            SPARK_GRAFT_CPUS (default: nproc),
 #            KEEP=1 to skip regeneration when $WORK/sf10 already exists.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SRC=${SRC:-/root/testdata/sf0.1}
 WORK=${WORK:-/tmp/graft_scale}
-export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32}
+export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
 # similarity/curation family + the bread-and-butter OLAP shapes (round-8
 # mandate: a semantics round must not silently regress core operators'
 # scaling either)

@@ -4,21 +4,14 @@ import org.apache.spark.sql.functions.broadcast
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // larger columnar batches amortize per-batch reader overhead on the
-      // pure-scan yardsticks (default 4096)
-      .config("spark.sql.parquet.columnarReaderBatchSize", "32768")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // UTC, hash-agg fallback threshold, and parquet aggregate pushdown are
     // the engine's own session defaults — the bench runs exactly what an
     // embedder gets
-    GraftSession.configure(spark)
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.local(cpus)
+    // larger columnar batches amortize per-batch reader overhead on the
+    // pure-scan yardsticks (default 4096)
+    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "32768")
     // warm the session (codegen, parquet footers, page cache) so the first
     // timed query is not charged JVM/session startup
     Seq("lineitem", "orders", "customer", "part", "supplier", "nation",
@@ -120,7 +113,7 @@ object Bench {
       println(json)
       System.out.flush()
     }
-    val nCores = cpus.toInt
+    val nCores = cpus
     if (only.isDefined) { // dev iteration: skip the multi-minute scan yardstick
       emit(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"controls":$cs,"sf":"$sfDir"}""")
       return

@@ -39,6 +39,25 @@ object GraftSession {
     * per-query entry points cost one map lookup after the first call. */
   private val configuredKey = "spark.graft.sessionDefaultsApplied"
 
+  /** CPUs for a local session: `SPARK_GRAFT_CPUS`, else every core. */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one local-mode session builder (Bench, Verify, the tools and the
+    * specs): `local[cpus]` with as many shuffle partitions, the UI off,
+    * parquet TIMESTAMP(NANOS) read as long (Spark's reader rejects it;
+    * Sources.events normalizes it), WARN logging, then [[configure]]. */
+  def local(cpus: Int = defaultCpus): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    configure(spark)
+  }
+
   def configure(spark: SparkSession): SparkSession = {
     if (!spark.conf.getOption(configuredKey).contains("true")) synchronized {
       if (!spark.conf.getOption(configuredKey).contains("true")) {

@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS) which Spark's reader rejects;
-      // read as long and normalize in Sources.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // UTC, hash-agg fallback threshold, parquet agg pushdown: the engine's
-    // own session defaults (GraftSession), not launcher-special config
-    GraftSession.configure(spark)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=name1,name2 restricts the dump (dev iteration) —
     // the driver runs unset = the full suite, same convention as Bench

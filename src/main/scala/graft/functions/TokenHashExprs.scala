@@ -115,9 +115,10 @@ case class Simhash64Expr(child: Expression) extends UnaryExpression {
     TokenHashExprs.simhash64(v.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
+      val r = ctx.freshName("r")
       s"""
-         |Object r = graft.functions.TokenHashExprs.simhash64($c);
-         |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = ((Long) r).longValue(); }
+         |Object $r = graft.functions.TokenHashExprs.simhash64($c);
+         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = ((Long) $r).longValue(); }
        """.stripMargin
     })
   override protected def withNewChildInternal(newChild: Expression): Simhash64Expr =
@@ -137,10 +138,11 @@ case class MinhashSigExpr(child: Expression, sigLen: Int) extends UnaryExpressio
     TokenHashExprs.minhashSig(v.asInstanceOf[ArrayData], sigLen)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
+      val r = ctx.freshName("r")
       s"""
-         |Object r = graft.functions.TokenHashExprs.minhashSig($c, $sigLen);
-         |if (r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) r; }
+         |Object $r = graft.functions.TokenHashExprs.minhashSig($c, $sigLen);
+         |if ($r == null) { ${ev.isNull} = true; }
+         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
        """.stripMargin
     })
   override protected def withNewChildInternal(newChild: Expression): MinhashSigExpr =

@@ -115,10 +115,10 @@ object MovingAverageQuery {
   private final case class Averager(tpe: String, name: String,
       fieldName: String, buckets: Int, cycleSize: Int, retval: Float)
 
-  /** Execute a parsed movingAverage query. `runInner` runs a native JSON
-    * query string through the full NativeQuery machinery. */
+  /** Execute a parsed movingAverage query. `runInner` runs a parsed native
+    * query through the full NativeQuery machinery. */
   def run(spark: SparkSession, q: JValue,
-      runInner: String => DataFrame): DataFrame = {
+      runInner: JValue => DataFrame): DataFrame = {
     val timeCol = strOpt(q \ "timeColumn").getOrElse("__time")
     val period = periodOf(q \ "granularity")
 
@@ -171,8 +171,7 @@ object MovingAverageQuery {
     val inner = JObject(innerFields ++ List(
       "queryType" -> JString("groupBy"),
       "intervals" -> JArray(extended.map { case (s, e) => JString(s"$s/$e") })))
-    val innerDf0 = runInner(org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(inner)))
+    val innerDf0 = runInner(inner)
     val dimNames = arr(q \ "dimensions").map {
       case JString(d) => d
       case o => strOpt(o \ "outputName").getOrElse(str(o \ "dimension"))

@@ -50,9 +50,15 @@ object NativeQuery {
   type Resolver = String => DataFrame
 
   def run(spark: SparkSession, json: String, resolve: Resolver): DataFrame =
-    run(spark, json, resolve, LookupRegistry.global)
+    run(spark, JsonMethods.parse(json), resolve, LookupRegistry.global)
 
   def run(spark: SparkSession, json: String, resolve: Resolver,
+      lookups: LookupRegistry): DataFrame =
+    run(spark, JsonMethods.parse(json), resolve, lookups)
+
+  /** Compile an already-parsed native query (the HTTP façade parses each
+    * body once; subqueries recurse on their parsed form). */
+  def run(spark: SparkSession, q0: JValue, resolve: Resolver,
       lookups: LookupRegistry): DataFrame = {
     // engine session defaults (hash-agg fallback threshold, parquet agg
     // pushdown, UTC) hold wherever a query enters — not just the launchers
@@ -62,7 +68,6 @@ object NativeQuery {
     // scalars (plans.HofUnroll) — the interpreted-lambda tax is the native
     // dialect's dominant per-row cost
     graft.plans.HofUnroll.enable(spark)
-    val q0 = JsonMethods.parse(json)
     // the `finalize` context key (QueryContexts.isFinalize): false skips
     // AggregatorFactory.finalizeComputation so sketch aggregators emit their
     // RAW state (the merged collector / sketch bytes). The broker runs every
@@ -532,7 +537,7 @@ object NativeQuery {
       // re-enters this dispatch so every datasource/filter/agg feature
       // composes (MovingAverageQueryRunner.java runs the same inner query)
       case "movingAverage" =>
-        MovingAverageQuery.run(spark, q, innerJson => run(spark, innerJson, resolve))
+        MovingAverageQuery.run(spark, q, inner => run(spark, inner, resolve, lookups))
       // surfaces as QueryUnsupportedException — "Unsupported query" at 501
       // (QueryUnsupportedException.java:39-40, QueryResourceTest
       // testUnsupportedQueryThrowsException)
@@ -570,7 +575,7 @@ object NativeQuery {
                 ("context" -> JObject(ctx :+ ("finalize" -> JBool(false)))))
             case x => x
           }
-          val sub0 = run(spark, JsonMethods.compact(JsonMethods.render(innerQ)), resolve, lookups)
+          val sub0 = run(spark, innerQ, resolve, lookups)
           // a groupBy's merged result is ORDERED by bucket time then
           // dimensions (RowBasedGrouperHelper merge order) — the row order
           // is part of the subquery contract: an outer first/last breaks

@@ -10,6 +10,7 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.operators.NativeQuery
 import graft.sources.LookupRegistry
+import scala.util.{Success, Try}
 
 /** Thin HTTP query façade — the reference's actual entry points
   * (sql/.../http/SqlResource.java:73 `/druid/v2/sql`,
@@ -62,142 +63,134 @@ import graft.sources.LookupRegistry
 object HttpFacade {
 
   final class Facade(server: HttpServer, val requestLog: RequestLog,
-      val planCache: PlanCache, val resultCache: ResultCache) {
+      val planCache: QueryCache[DataFrame], val resultCache: QueryCache[String]) {
     def port: Int = server.getAddress.getPort
     def stop(): Unit = server.stop(0)
   }
 
-  /** Small LRU of compiled native-query DataFrames (What's-wrong r8 #2: the
-    * tiny-query latency floor is plan construction + analysis + codegen of
-    * large comparator expression trees, constant at any data scale — a
-    * repeated JSON shape should not pay it twice). Results are NOT cached —
-    * execution always runs; only the compiled plan is reused, and Spark's
-    * codegen cache then reuses the generated classes. Keys include the
-    * lookup registry's generation and the ingest layer's data generation,
-    * so a lookup update or an in-process write/compaction invalidates every
-    * cached plan (the reference's CachingClusteredClient keys on segment
-    * identifiers the same way); execution-irrelevant context keys (queryId,
-    * timeout, priority, lane) are stripped from the key so per-request ids
-    * don't defeat the cache. */
-  /** Cache key normalization shared by the plan and result caches:
-    * execution-irrelevant context keys (queryId, timeout, priority, lane)
-    * and cache-control flags are stripped so per-request ids don't defeat
-    * the caches. */
-  private[server] def normalizeBody(body: String): String =
-    JsonMethods.parseOpt(body) match {
-      case Some(o: JObject) =>
-        val ctx = (o \ "context") match {
-          case c: JObject => JObject(c.obj.filterNot(kv =>
-            Set("queryId", "timeout", "priority", "lane",
-              "useCache", "populateCache").contains(kv._1)))
-          case _ => JObject()
-        }
-        JsonMethods.compact(JsonMethods.render(
-          JObject(o.obj.filterNot(_._1 == "context") ++
-            (if (ctx.obj.nonEmpty) List("context" -> (ctx: JValue)) else Nil))))
+  /** The generation-keyed LRU behind both façade caches:
+    *
+    *  - the PLAN cache holds compiled DataFrames (What's-wrong r8 #2: the
+    *    tiny-query latency floor is plan construction + analysis + codegen
+    *    of large comparator expression trees, constant at any data scale —
+    *    a repeated query shape should not pay it twice). Execution always
+    *    runs; Spark's codegen cache then reuses the generated classes.
+    *  - the RESULT cache holds rendered response payloads (the reference's
+    *    broker-level result cache, CachingClusteredClient.java:506-537 +
+    *    CacheStrategy). Per-query `context` flags `useCache` /
+    *    `populateCache` opt out (CacheUtil.isUseResultCache
+    *    /isPopulateResultCache — Druid's broker defaults both true when the
+    *    cache is configured), and values failing `fits` are not stored (the
+    *    reference's `cache.resultLevelCacheLimit`).
+    *
+    * Keys include the lookup registry's generation and the ingest layer's
+    * data generation, so a lookup update or an in-process write/compaction
+    * invalidates every entry (the reference's CachingClusteredClient keys
+    * on segment identifiers the same way). The generations only see
+    * IN-PROCESS writes (BatchIngest.write/registerSpec, lookup updates) —
+    * data rewritten by an external writer (a direct spark write to the same
+    * path, another process) is invisible to them, so operators must POST
+    * the invalidation endpoint after out-of-band changes. A build that
+    * throws counts as neither hit nor miss. */
+  private[server] final class QueryCache[V](lookups: LookupRegistry,
+      fits: V => Boolean = (_: V) => true, capacity: Int = 64) {
+    private val hitCount = new java.util.concurrent.atomic.AtomicLong(0L)
+    private val missCount = new java.util.concurrent.atomic.AtomicLong(0L)
+    private val map =
+      new java.util.LinkedHashMap[(String, Long, Long), V](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[(String, Long, Long), V]): Boolean =
+          size() > capacity
+      }
+
+    def get(key: String, useCache: Boolean = true, populateCache: Boolean = true)
+        (build: => V): V = {
+      val k = (key, lookups.generation, graft.sources.BatchIngest.dataGeneration)
+      if (useCache) map.synchronized(Option(map.get(k))) match {
+        case Some(v) => hitCount.incrementAndGet(); return v
+        case None => ()
+      }
+      val v = build
+      missCount.incrementAndGet()
+      if (populateCache && fits(v)) map.synchronized(map.put(k, v))
+      v
+    }
+
+    def invalidateAll(): Unit = map.synchronized(map.clear())
+    def hits: Long = hitCount.get()
+    def misses: Long = missCount.get()
+  }
+
+  /** One POSTed query, parsed once at entry; every later step — id,
+    * timeout/lane/priority, cache flags and key, execution, envelope —
+    * reads this value. `query` is the body with the server-level default
+    * context (DefaultQueryConfig.java — the `druid.query.default.context.*`
+    * runtime properties) merged under the request's own `context`: a key
+    * the request sets always wins (QueryResourceTest
+    * .testGoodQueryWithQueryConfigOverrideDefault /
+    * testGoodQueryWithQueryConfigDoesNotOverrideQueryContext — the
+    * lifecycle's initialize() only copies default keys absent from the
+    * query's context), so a default like skipEmptyBuckets/priority reaches
+    * the query exactly as if the client had set it. Both routes share the
+    * defaults, like the reference's QueryLifecycle/SqlLifecycle sharing one
+    * supplier. A body that is not JSON keeps its parse failure: the native
+    * route rethrows it, the SQL route reads the body as bare SQL text. */
+  private[server] final class QueryRequest(val body: String, defaults: JObject) {
+    private val parsed: Try[JValue] = Try(JsonMethods.parse(body))
+    val query: Try[JValue] = parsed.map {
+      case o: JObject if defaults.obj.nonEmpty =>
+        val own = (o \ "context") match { case c: JObject => c.obj; case _ => Nil }
+        JObject(o.obj.filterNot(_._1 == "context") :+ ("context" -> JObject(
+          defaults.obj.filterNot(kv => own.exists(_._1 == kv._1)) ++ own)))
+      case v => v
+    }
+    def field(name: String): JValue = query.fold(_ => JNothing, _ \ name)
+    def context: JValue = field("context")
+
+    /** The native id comes from the request's OWN context.queryId, never a
+      * default's (QueryLifecycle.initialize assigns it before merging). */
+    def nativeId: String = parsed.fold(_ => JNothing, _ \ "context" \ "queryId") match {
+      case JString(id) => id; case _ => java.util.UUID.randomUUID().toString
+    }
+    /** The SQL id comes from the MERGED context's sqlQueryId. */
+    def sqlId: String = (context \ "sqlQueryId") match {
+      case JString(id) => id; case _ => java.util.UUID.randomUUID().toString
+    }
+    // context.timeout in millis (QueryContexts.TIMEOUT_KEY)
+    def timeoutMs: Long = (context \ "timeout") match {
+      case JInt(n) => n.toLong; case JLong(n) => n; case _ => 0L
+    }
+    def lane: Option[String] = (context \ "lane") match {
+      case JString(l) => Some(l); case _ => None
+    }
+    def priority: Option[Int] = (context \ "priority") match {
+      case JInt(n) => Some(n.toInt); case JLong(n) => Some(n.toInt); case _ => None
+    }
+    def flag(name: String, default: Boolean): Boolean = (context \ name) match {
+      case JBool(b) => b; case _ => default
+    }
+
+    /** What the native request-log line records: the executed query — the
+      * body as sent, or its rendering once defaults were merged in. */
+    def text: String = query match {
+      case Success(o: JObject) if defaults.obj.nonEmpty => JsonMethods.compact(JsonMethods.render(o))
       case _ => body
     }
 
-  private[server] final class PlanCache(lookups: LookupRegistry, capacity: Int = 64) {
-    private val hitCount = new java.util.concurrent.atomic.AtomicLong(0L)
-    private val missCount = new java.util.concurrent.atomic.AtomicLong(0L)
-    private val map =
-      new java.util.LinkedHashMap[(String, Long, Long), DataFrame](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), DataFrame]): Boolean =
-          size() > capacity
-      }
-
-    def get(body: String)(build: => DataFrame): DataFrame =
-      getKeyed("native:" + normalizeBody(body))(build)
-
-    /** SQL-route plans cache under the BOUND statement text (positional
-      * parameters are already inlined, so the key carries the parameter
-      * signature) plus every execution-relevant planner knob. */
-    def getSql(boundSql: String, knobs: String)(build: => DataFrame): DataFrame =
-      getKeyed("sql:" + knobs + ":" + boundSql)(build)
-
-    private def getKeyed(norm: String)(build: => DataFrame): DataFrame = {
-      val key = (norm, lookups.generation,
-        graft.sources.BatchIngest.dataGeneration)
-      map.synchronized(Option(map.get(key))) match {
-        case Some(df) => hitCount.incrementAndGet(); df
-        case None =>
-          val df = build
-          map.synchronized(map.put(key, df))
-          missCount.incrementAndGet()
-          df
-      }
-    }
-
-    /** Drop every cached plan. The generation keys only see IN-PROCESS
-      * writes (BatchIngest.write/registerSpec, lookup updates) — data
-      * rewritten by an external writer (a direct spark write to the same
-      * path, another process) is invisible to them, so operators must POST
-      * the invalidation endpoint after out-of-band changes. */
-    def invalidateAll(): Unit = map.synchronized(map.clear())
-
-    def hits: Long = hitCount.get()
-    def misses: Long = missCount.get()
-  }
-
-  /** Native-route RESULT cache (the reference's broker-level result cache,
-    * CachingClusteredClient.java:506-537 + CacheStrategy): the rendered
-    * response payload keyed on the normalized query body and the same
-    * lookup/ingest generation keys as the plan cache, so an in-process
-    * write or lookup update invalidates automatically. Per-query `context`
-    * flags `useCache` / `populateCache` opt out (CacheUtil.isUseResultCache
-    * /isPopulateResultCache — Druid's broker defaults both true when the
-    * cache is configured). Entries above `maxEntryBytes` are not stored
-    * (the reference's `cache.resultLevelCacheLimit`). Same out-of-band
-    * caveat as the plan cache: external writers require the admin
-    * invalidation endpoint (which clears BOTH caches). */
-  private[server] final class ResultCache(lookups: LookupRegistry,
-      capacity: Int = 64, maxEntryBytes: Int = 2 << 20) {
-    private val hitCount = new java.util.concurrent.atomic.AtomicLong(0L)
-    private val missCount = new java.util.concurrent.atomic.AtomicLong(0L)
-    private val map =
-      new java.util.LinkedHashMap[(String, Long, Long), String](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), String]): Boolean =
-          size() > capacity
-      }
-    def get(body: String, useCache: Boolean, populateCache: Boolean)
-        (build: => String): String =
-      getKeyed("native:" + normalizeBody(body), useCache, populateCache)(build)
-
-    /** SQL-route results cache under the BOUND statement + every
-      * execution-relevant knob INCLUDING the plan-check context flags and
-      * the response format — a hit skips planning AND the plan checks, so
-      * a different check/format combination must key separately. */
-    def getSql(boundSql: String, knobs: String, useCache: Boolean,
-        populateCache: Boolean)(build: => String): String =
-      getKeyed("sql:" + knobs + ":" + boundSql, useCache, populateCache)(build)
-
-    private def getKeyed(norm: String, useCache: Boolean, populateCache: Boolean)
-        (build: => String): String = {
-      val key = (norm, lookups.generation,
-        graft.sources.BatchIngest.dataGeneration)
-      if (useCache) map.synchronized(Option(map.get(key))) match {
-        case Some(payload) => hitCount.incrementAndGet(); return payload
-        case None => ()
-      }
-      val payload = build
-      missCount.incrementAndGet()
-      if (populateCache && payload.length <= maxEntryBytes)
-        map.synchronized(map.put(key, payload))
-      payload
-    }
-    def invalidateAll(): Unit = map.synchronized(map.clear())
-    def hits: Long = hitCount.get()
-    def misses: Long = missCount.get()
-  }
-
-  // the requesting client's address, set per-exchange by the handlers so
-  // the request log can record it (the reference passes remoteAddr through
-  // RequestLogLine.forNative/forSql)
-  private val currentRemoteAddr = new ThreadLocal[String] {
-    override def initialValue(): String = ""
+    /** The native key both caches share: execution-irrelevant context keys
+      * (queryId, timeout, priority, lane) and the cache-control flags are
+      * stripped so per-request ids don't defeat the caches. */
+    lazy val cacheKey: String = "native:" + (query match {
+      case Success(o: JObject) =>
+        val ctx = (o \ "context") match {
+          case c: JObject => c.obj.filterNot(kv => Set("queryId", "timeout", "priority",
+            "lane", "useCache", "populateCache").contains(kv._1))
+          case _ => Nil
+        }
+        JsonMethods.compact(JsonMethods.render(JObject(o.obj.filterNot(_._1 == "context") ++
+          (if (ctx.nonEmpty) List("context" -> JObject(ctx)) else Nil))))
+      case _ => body
+    })
   }
 
   /** Raised when a request's query was cancelled through the DELETE
@@ -288,12 +281,11 @@ object HttpFacade {
     }
   }
 
-  /** Total concurrency guard — the QueryScheduler's total-lane analog.
+  /** Total + per-lane concurrency guard — the QueryScheduler analog.
     * `limit <= 0` means unlimited (the default: this driver-side facade is
     * usually single-tenant; a shared broker sets a limit sized to its
     * executor slots so queued queries fail fast instead of piling onto the
-    * scheduler). */
-  /** Total + per-lane concurrency guard — the QueryScheduler analog. The
+    * scheduler). The
     * "low" lane follows HiLoQueryLaningStrategy: a query lands there when
     * its context names the lane or carries a negative priority
     * (HiLoQueryLaningStrategy.java:76-85), and the lane's capacity is
@@ -308,8 +300,6 @@ object HttpFacade {
       else 0
     private val lowSem =
       if (lowLimit > 0) Some(new java.util.concurrent.Semaphore(lowLimit)) else None
-
-    def run[A](body: => A): A = run(None, None)(body)
 
     def run[A](lane: Option[String], priority: Option[Int])(body: => A): A = {
       val effectiveLane =
@@ -412,27 +402,6 @@ object HttpFacade {
     }
   }
 
-  /** Server-level default query context (DefaultQueryConfig.java — the
-    * `druid.query.default.context.*` runtime properties): each entry is
-    * merged under the request's own `context`, and a key the request
-    * already sets always wins (QueryResourceTest
-    * .testGoodQueryWithQueryConfigOverrideDefault /
-    * testGoodQueryWithQueryConfigDoesNotOverrideQueryContext — the
-    * lifecycle's initialize() only copies default keys absent from the
-    * query's context). Applies to both the native and SQL routes, like the
-    * reference's QueryLifecycle/SqlLifecycle sharing one supplier. */
-  private def withDefaultContext(body: String, defaults: JObject): String =
-    if (defaults.obj.isEmpty) body
-    else JsonMethods.parseOpt(body) match {
-      case Some(o: JObject) =>
-        val reqCtx = (o \ "context") match { case c: JObject => c; case _ => JObject() }
-        val merged = JObject(
-          defaults.obj.filterNot(kv => reqCtx.obj.exists(_._1 == kv._1)) ++ reqCtx.obj)
-        JsonMethods.compact(JsonMethods.render(
-          JObject(o.obj.filterNot(_._1 == "context") :+ ("context" -> (merged: JValue)))))
-      case _ => body
-    }
-
   def start(spark: SparkSession, resolve: NativeQuery.Resolver,
       lookups: LookupRegistry = LookupRegistry.global, port: Int = 0,
       maxResultRows: Int = 100000, maxConcurrentQueries: Int = 0,
@@ -459,13 +428,18 @@ object HttpFacade {
     val cancels = new CancelRegistry(spark.sparkContext)
     val capacity = new CapacityGuard(maxConcurrentQueries, maxLowPercent)
     val requestLog = new RequestLog()
-    val planCache = new PlanCache(lookups)
-    val resultCache = new ResultCache(lookups)
+    val planCache = new QueryCache[DataFrame](lookups)
+    // payloads above 2 MiB are served but not stored
+    val resultCache = new QueryCache[String](lookups, _.length <= (2 << 20))
+    // the defaults take the form a parsed request body gives them
+    val defaults = JsonMethods.parse(JsonMethods.compact(JsonMethods.render(defaultContext)))
+      .asInstanceOf[JObject]
 
-    server.createContext("/druid/v2/sql", sqlHandler(cancels, capacity, requestLog, defaultContext) { body =>
+    server.createContext("/druid/v2/sql", queryHandler(sql = true, cancels, capacity,
+        requestLog, defaults) { req =>
       val (sqlText, format, header, typesHeader, sqlTypesHeader, context) =
-        JsonMethods.parseOpt(body) match {
-        case Some(o: JObject) =>
+        req.query match {
+        case Success(o: JObject) =>
           val q = (o \ "query") match {
             case JString(s) => s
             case _ => throw new IllegalArgumentException("missing \"query\"")
@@ -502,7 +476,7 @@ object HttpFacade {
           }
           (bindParameters(q, params), fmt, hdr, tHdr, sHdr, ctx)
         case _ => // bare SQL string body
-          (body, "object", false, false, false, JObject())
+          (req.body, "object", false, false, false, JObject())
       }
       // context-parameter validation (reference: QueryContexts.java —
       // maxNumericInFilters must be positive and may not exceed the
@@ -594,7 +568,7 @@ object HttpFacade {
               val knobs = s"$approxCountDistinct:$outerLimit:" +
                 sqlZone.map(_.getId).getOrElse("UTC")
               def produce(): String = {
-                val df = if (cacheable) planCache.getSql(sqlText, knobs)(build())
+                val df = if (cacheable) planCache.get(s"sql:$knobs:$sqlText")(build())
                          else build()
                 if (requireTime) graft.plans.PlannerChecks.requireTimeCondition(df)
                 if (!mvUnnesting) graft.plans.PlannerChecks.requireNoMultiValueUnnesting(df)
@@ -606,13 +580,11 @@ object HttpFacade {
               // cacheability rules as the plan cache; the key adds the
               // plan-check flags and the response format, so a hit never
               // skips a check or format the entry wasn't produced under)
-              def ctxBool(name: String, default: Boolean): Boolean =
-                (context \ name) match { case JBool(b) => b; case _ => default }
               val resultKnobs = s"$knobs:$requireTime:$mvUnnesting:$maxNumericIn:" +
                 s"$format:$header:$typesHeader:$sqlTypesHeader"
               if (cacheable)
-                resultCache.getSql(sqlText, resultKnobs,
-                  ctxBool("useCache", true), ctxBool("populateCache", true))(produce())
+                resultCache.get(s"sql:$resultKnobs:$sqlText",
+                  req.flag("useCache", true), req.flag("populateCache", true))(produce())
               else produce()
           }
         }
@@ -623,75 +595,17 @@ object HttpFacade {
       }
     })
 
-    // registered second so the more specific /druid/v2/sql path wins.
-    // DELETE /druid/v2/{id} is the native cancellation endpoint
-    // (QueryResource.java:142-166 cancelQuery): the reference answers 202
-    // even for an id the scheduler never registered (it only warns), so the
-    // status is ACCEPTED either way
-    // the id assigned to the in-flight native request: generated ONCE per
-    // request (in respHeaders, which runs first on the same handler thread)
-    // and reused for cancel registration, so the X-Druid-Query-Id a client
-    // reads back is always the id DELETE /druid/v2/{id} can cancel — the
-    // reference assigns the id in QueryLifecycle.initialize before both
-    val nativeAssignedId = new ThreadLocal[String]
-    server.createContext("/druid/v2", statusHandler(rawBody => {
-      // one request-log line per query — success or failure — matching
-      // QueryLifecycle.emitLogsAndMetrics feeding the RequestLogger
-      val startNs = System.nanoTime()
-      def elapsedMs() = (System.nanoTime() - startNs) / 1000000L
-      // server-level context defaults merge under the request's context
-      // (request keys win), and the merged body is what executes — so a
-      // default like skipEmptyBuckets/priority reaches the query exactly as
-      // if the client had set it (QueryLifecycle.initialize)
-      val body = withDefaultContext(rawBody, defaultContext)
-      try {
-        val q = JsonMethods.parse(body)
-        val queryId = Option(nativeAssignedId.get)
-          .getOrElse(java.util.UUID.randomUUID().toString)
-        val timeoutMs = (q \ "context" \ "timeout") match {
-          case JInt(n) => n.toLong; case JLong(n) => n; case _ => 0L
-        }
-        // result cache first (broker result-level cache): a hit returns the
-        // rendered payload without planning or executing; context flags
-        // useCache/populateCache opt out per query
-        def ctxBool(name: String, default: Boolean): Boolean =
-          (q \ "context" \ name) match { case JBool(b) => b; case _ => default }
-        def exec(): String =
-          resultCache.get(body, ctxBool("useCache", true), ctxBool("populateCache", true)) {
-            envelope(q,
-              planCache.get(body)(NativeQuery.run(spark, body, resolve, lookups)),
-              maxResultRows)
-          }
-        val lane = (q \ "context" \ "lane") match {
-          case JString(l) => Some(l); case _ => None
-        }
-        val priority = (q \ "context" \ "priority") match {
-          case JInt(n) => Some(n.toInt); case JLong(n) => Some(n.toInt); case _ => None
-        }
-        // every query is cancel-registered under its assigned id (the
-        // reference's QueryScheduler registers unconditionally), so a DELETE
-        // with the returned header id works even without a client queryId
-        val payload =
-          capacity.run(lane, priority)(cancels.run(queryId, timeoutMs)(exec()))
-        requestLog.logNative(currentRemoteAddr.get, body, elapsedMs(),
-          payload.getBytes(StandardCharsets.UTF_8).length.toLong, None)
-        (200, payload)
-      } catch { case e: Throwable =>
-        requestLog.logNative(currentRemoteAddr.get, body, elapsedMs(), 0L, Some(e))
-        throw e
+    // registered second so the more specific /druid/v2/sql path wins
+    server.createContext("/druid/v2", queryHandler(sql = false, cancels, capacity,
+        requestLog, defaults) { req =>
+      val q = req.query.get
+      // result cache first (broker result-level cache): a hit returns the
+      // rendered payload without planning or executing
+      resultCache.get(req.cacheKey, req.flag("useCache", true), req.flag("populateCache", true)) {
+        envelope(q, planCache.get(req.cacheKey)(NativeQuery.run(spark, q, resolve, lookups)),
+          maxResultRows)
       }
-    }, onDelete = Some(id => { cancels.cancel(id); 202 }),
-      // X-Druid-Query-Id on every native response — the context's id when
-      // the client set one, a fresh one otherwise (QueryResource
-      // QUERY_ID_RESPONSE_HEADER; the SQL route stamps its SQL analog)
-      respHeaders = body => {
-        val id = try JsonMethods.parse(body) \ "context" \ "queryId" match {
-          case JString(s) => s
-          case _ => java.util.UUID.randomUUID().toString
-        } catch { case _: Throwable => java.util.UUID.randomUUID().toString }
-        nativeAssignedId.set(id)
-        Seq("X-Druid-Query-Id" -> id)
-      }))
+    })
 
     // lookup admin CRUD + introspection (LookupCoordinatorResource.java,
     // LookupIntrospectionResource.java) over the registry the lookup
@@ -779,148 +693,120 @@ object HttpFacade {
       override def handle(ex: HttpExchange): Unit = {
         val (status, payload) =
           try {
-            val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+            val body = readBody(ex)
             val sub = ex.getRequestURI.getPath.stripPrefix(ex.getHttpContext.getPath) +
               Option(ex.getRequestURI.getQuery).map("?" + _).getOrElse("")
             f(ex.getRequestMethod, sub, body)
           } catch { case e: Throwable => queryError(e) }
         if (payload.isEmpty) {
           ex.sendResponseHeaders(status, -1)
-        } else {
-          val bytes = payload.getBytes(StandardCharsets.UTF_8)
-          ex.getResponseHeaders.set("Content-Type", "application/json")
-          ex.sendResponseHeaders(status, bytes.length)
-          ex.getResponseBody.write(bytes)
-        }
-        ex.close()
+          ex.close()
+        } else respond(ex, status, "application/json", payload)
       }
     }
 
-  private def handler(f: String => String): HttpHandler =
-    statusHandler(body => (200, f(body)))
-
-  /** Like handler, but `f` chooses the HTTP status itself (the Avatica
-    * endpoint answers 500 with its own ErrorResponse envelope on failure,
-    * matching Calcite's AvaticaJsonHandler). `onDelete` serves
-    * `DELETE <context>/{id}` — the cancellation routes — returning just a
-    * status with an empty body, like the reference's Response.status(...)
-    * .build(). */
-  private def statusHandler(f: String => (Int, String),
-      onDelete: Option[String => Int] = None,
-      respHeaders: String => Seq[(String, String)] = _ => Nil): HttpHandler = new HttpHandler {
+  /** POST-only handler whose `f` chooses the HTTP status itself (the
+    * Avatica endpoint answers 500 with its own ErrorResponse envelope on
+    * failure, matching Calcite's AvaticaJsonHandler). */
+  private def statusHandler(f: String => (Int, String)): HttpHandler = new HttpHandler {
     override def handle(ex: HttpExchange): Unit = {
-      if (ex.getRequestMethod == "DELETE" && onDelete.isDefined) {
-        val id = ex.getRequestURI.getPath
-          .stripPrefix(ex.getHttpContext.getPath).stripPrefix("/")
-        val status = try onDelete.get(id) catch { case _: Throwable => 500 }
-        ex.sendResponseHeaders(status, -1)
-        ex.close()
-        return
-      }
       val (status, payload) =
         try {
-          if (ex.getRequestMethod != "POST")
-            (405, """{"error":"POST only"}""")
-          else {
-            currentRemoteAddr.set(Option(ex.getRemoteAddress)
-              .map(_.getAddress.getHostAddress).getOrElse(""))
-            val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-            try respHeaders(body).foreach { case (k, v) => ex.getResponseHeaders.set(k, v) }
-            catch { case _: Throwable => }
-            f(body)
-          }
+          if (ex.getRequestMethod != "POST") (405, PostOnly)
+          else f(readBody(ex))
         } catch { case e: Throwable => queryError(e) }
-      val bytes = payload.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(status, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
+      respond(ex, status, "application/json", payload)
     }
   }
 
-  /** The SQL endpoint's wrapper: stamps X-Druid-SQL-Query-Id on EVERY
-    * response (SqlResource.java:75,173 — context.sqlQueryId when the client
-    * set one, a fresh id otherwise, including on errors: SqlResourceTest
-    * .testErrorResponseReturnSameQueryIdWhenSetInContext), serves the
-    * format's content type (ResultFormat.java:38-96 — array/object JSON,
-    * the Lines formats text/plain, csv text/csv), and renders failures as
-    * the reference's QueryException envelope. */
-  private def sqlHandler(cancels: CancelRegistry, capacity: CapacityGuard,
-      requestLog: RequestLog, defaultContext: JObject = JObject())(
-      f: String => String): HttpHandler = new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = {
-      // DELETE /druid/v2/sql/{id}: 202 when the id names a registered
-      // in-flight query, 404 otherwise (SqlResource.java:264-290;
-      // SqlResourceTest.testCancelInvalidQuery expects NOT_FOUND)
-      if (ex.getRequestMethod == "DELETE") {
-        val id = ex.getRequestURI.getPath
-          .stripPrefix(ex.getHttpContext.getPath).stripPrefix("/")
-        val status = if (cancels.cancel(id)) 202 else 404
-        ex.sendResponseHeaders(status, -1)
-        ex.close()
-        return
-      }
-      val body =
-        if (ex.getRequestMethod == "POST")
-          withDefaultContext(
-            new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8),
-            defaultContext)
-        else ""
-      val parsed = JsonMethods.parseOpt(body)
-      val sqlQueryId = parsed.flatMap(o => (o \ "context" \ "sqlQueryId") match {
-        case JString(id) => Some(id); case _ => None
-      }).getOrElse(java.util.UUID.randomUUID().toString)
-      val format = parsed.flatMap(o => (o \ "resultFormat") match {
-        case JString(fmt) => Some(canonicalFormat(fmt)); case _ => None
-      }).getOrElse("object")
-      // context.timeout in millis (QueryContexts.TIMEOUT_KEY)
-      val timeoutMs = parsed.map(o => (o \ "context" \ "timeout") match {
-        case JInt(n) => n.toLong; case JLong(n) => n; case _ => 0L
-      }).getOrElse(0L)
-      // lane assignment: context.lane, or the low lane on negative priority
-      // (HiLoQueryLaningStrategy.java:76-85)
-      val lane = parsed.flatMap(o => (o \ "context" \ "lane") match {
-        case JString(l) => Some(l); case _ => None
-      })
-      val priority = parsed.flatMap(o => (o \ "context" \ "priority") match {
-        case JInt(n) => Some(n.toInt); case JLong(n) => Some(n.toInt); case _ => None
-      })
-      val startNs = System.nanoTime()
-      def elapsedMs() = (System.nanoTime() - startNs) / 1000000L
-      val remoteAddr = Option(ex.getRemoteAddress)
-        .map(_.getAddress.getHostAddress).getOrElse("")
-      val sqlText = parsed.flatMap(o => (o \ "query") match {
-        case JString(s) => Some(s); case _ => None
-      }).getOrElse("")
-      val sqlContext = parsed.map(o => o \ "context").getOrElse(JNothing)
-      val (status, payload, contentType) =
-        try {
-          if (ex.getRequestMethod != "POST")
-            (405, """{"error":"POST only"}""", "application/json")
-          // registered for the request's full lifecycle — parse, plan,
-          // execute — like SqlLifecycleManager.add at doPost entry, so a
-          // cancel landing between plan and execute still voids the request
-          else {
-            val out = capacity.run(lane, priority)(cancels.run(sqlQueryId, timeoutMs)(f(body)))
-            requestLog.logSql(remoteAddr, sqlText, sqlContext, elapsedMs(),
-              out.getBytes(StandardCharsets.UTF_8).length.toLong, None)
+  /** The one request lifecycle of both query routes — the reference's
+    * QueryLifecycle (/druid/v2, QueryResource.java:90) and SqlLifecycle
+    * (/druid/v2/sql, SqlResource.java:73):
+    *
+    *  - `DELETE <route>/{id}` cancels. The native route answers 202 even
+    *    for an id the scheduler never registered (QueryResource.java:142-166
+    *    only warns); the SQL route answers 404 for it (SqlResource.java
+    *    :264-290, SqlResourceTest.testCancelInvalidQuery).
+    *  - A POST body is parsed once, into a [[QueryRequest]].
+    *  - Every native POST response carries X-Druid-Query-Id
+    *    (QueryResource QUERY_ID_RESPONSE_HEADER) and every SQL response
+    *    X-Druid-SQL-Query-Id (SqlResource.java:75,173), errors included
+    *    (SqlResourceTest.testErrorResponseReturnSameQueryIdWhenSetInContext).
+    *  - The query runs under the capacity guard and is cancel-registered
+    *    under that id for its whole lifecycle — plan and execute — so a
+    *    DELETE with the returned id works even without a client id, and a
+    *    cancel landing between plan and execute still voids the request
+    *    (the QueryScheduler registers unconditionally; SqlLifecycleManager
+    *    .add runs at doPost entry).
+    *  - One request-log line per query, success or failure
+    *    (QueryLifecycle.emitLogsAndMetrics feeding the RequestLogger).
+    *  - Failures render as the QueryException envelope; SQL successes carry
+    *    the format's content type (ResultFormat.java:38-96 — array/object
+    *    JSON, the Lines formats text/plain, csv text/csv). */
+  private def queryHandler(sql: Boolean, cancels: CancelRegistry, capacity: CapacityGuard,
+      requestLog: RequestLog, defaults: JObject)(run: QueryRequest => String): HttpHandler =
+    new HttpHandler {
+      override def handle(ex: HttpExchange): Unit = {
+        if (ex.getRequestMethod == "DELETE") {
+          val id = ex.getRequestURI.getPath
+            .stripPrefix(ex.getHttpContext.getPath).stripPrefix("/")
+          val status = try { if (cancels.cancel(id) || !sql) 202 else 404 }
+            catch { case _: Throwable => 500 }
+          ex.sendResponseHeaders(status, -1)
+          ex.close()
+          return
+        }
+        val post = ex.getRequestMethod == "POST"
+        val req = new QueryRequest(if (post) readBody(ex) else "", defaults)
+        val queryId = if (sql) req.sqlId else req.nativeId
+        if (sql) ex.getResponseHeaders.set("X-Druid-SQL-Query-Id", queryId)
+        else if (post) ex.getResponseHeaders.set("X-Druid-Query-Id", queryId)
+        val remoteAddr = Option(ex.getRemoteAddress)
+          .map(_.getAddress.getHostAddress).getOrElse("")
+        val startNs = System.nanoTime()
+        def log(bytes: Long, failure: Option[Throwable]): Unit = {
+          val ms = (System.nanoTime() - startNs) / 1000000L
+          if (!sql) requestLog.logNative(remoteAddr, req.text, ms, bytes, failure)
+          else requestLog.logSql(remoteAddr, req.field("query") match {
+            case JString(s) => s; case _ => ""
+          }, req.context, ms, bytes, failure)
+        }
+        val (status, payload, contentType) =
+          if (!post) (405, PostOnly, "application/json")
+          else try {
+            // a native body that is not JSON fails before admission
+            if (!sql) req.query.get
+            val out = capacity.run(req.lane, req.priority)(
+              cancels.run(queryId, req.timeoutMs)(run(req)))
+            log(out.getBytes(StandardCharsets.UTF_8).length.toLong, None)
+            val format = req.field("resultFormat") match {
+              case JString(f) if sql => canonicalFormat(f); case _ => "object"
+            }
             (200, out, format match {
               case "objectLines" | "arrayLines" => "text/plain"
               case "csv" => "text/csv"
               case _ => "application/json"
             })
+          } catch { case e: Throwable =>
+            log(0L, Some(e))
+            val (s, p) = queryError(e); (s, p, "application/json")
           }
-        } catch { case e: Throwable =>
-          requestLog.logSql(remoteAddr, sqlText, sqlContext, elapsedMs(), 0L, Some(e))
-          val (s, p) = queryError(e); (s, p, "application/json")
-        }
-      val bytes = payload.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", contentType)
-      ex.getResponseHeaders.set("X-Druid-SQL-Query-Id", sqlQueryId)
-      ex.sendResponseHeaders(status, bytes.length)
-      ex.getResponseBody.write(bytes)
-      ex.close()
+        respond(ex, status, contentType, payload)
+      }
     }
+
+  private val PostOnly = """{"error":"POST only"}"""
+
+  private def readBody(ex: HttpExchange): String =
+    new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+
+  private def respond(ex: HttpExchange, status: Int, contentType: String,
+      payload: String): Unit = {
+    val bytes = payload.getBytes(StandardCharsets.UTF_8)
+    ex.getResponseHeaders.set("Content-Type", contentType)
+    ex.sendResponseHeaders(status, bytes.length)
+    ex.getResponseBody.write(bytes)
+    ex.close()
   }
 
   /** Exceeding `maxResultRows` is the reference's "Resource limit exceeded"

@@ -62,12 +62,6 @@ object PlannerResources {
     s != null && s.contains(name.toLowerCase)
   }
 
-  /** `TABLE(EXTERN('inputSource','inputFormat','signature'))` — replaced by
-    * an inert relation for parse-level analysis (never read here). */
-  private val ExternRe =
-    ("(?is)TABLE\\s*\\(\\s*EXTERN\\s*\\(\\s*" +
-      "'((?:[^']|'')*)'\\s*,\\s*'((?:[^']|'')*)'\\s*,\\s*'((?:[^']|'')*)'\\s*\\)\\s*\\)").r
-
   /** Positional `?` parameters carry no resources — analysis replaces them
     * with an inert literal so the statement parses unbound (the reference
     * analyzes resources before parameters bind: testDynamicParameters). */
@@ -114,10 +108,11 @@ object PlannerResources {
     }
 
     var external = false
-    val neutralized = ExternRe.replaceAllIn(neutralizeParameters(selectSql), _ => {
-      external = true
-      "__extern__"
-    })
+    val neutralized = graft.sources.SqlInsertDml.ExternRe.replaceAllIn(
+      neutralizeParameters(selectSql), _ => {
+        external = true
+        "__extern__"
+      })
 
     val parsed = spark.sessionState.sqlParser.parsePlan(neutralized)
     val fromTables = collectRelations(parsed).filterNot(_ == Seq("__extern__"))

@@ -45,12 +45,21 @@ object SqlInsertDml {
       segmentGranularity: String,          // ISO period, or "ALL"
       clusteredBy: Seq[(String, Boolean)]) // (column name or 1-based ordinal, descending)
 
-  // target: a dotted chain of quoted ("a""b" doubles escape) or bare
-  // identifiers — the reference's Calcite grammar accepts INSERT INTO
-  // "druid".dst and quoted names containing dots
+  // Quoted SQL text is matched unrolled and possessive: java.util.regex
+  // recurses once per repetition of an alternation group like
+  // `(?:[^']|'')*`, so a multi-KB inline EXTERN literal would overflow the
+  // stack. A quoted identifier ("a""b" doubles escape; the lookahead keeps
+  // it non-empty):
+  private val QuotedIdent = "\"(?=[^\"]|\"\")[^\"]*+(?:\"\"[^\"]*+)*+\""
+  // a single-quoted literal, its body captured:
+  private val QuotedLiteral = "'([^']*+(?:''[^']*+)*+)'"
+
+  // target: a dotted chain of quoted or bare identifiers — the reference's
+  // Calcite grammar accepts INSERT INTO "druid".dst and quoted names
+  // containing dots
   private val InsertHead =
     ("(?is)^\\s*(INSERT|UPSERT)\\s+INTO\\s+" +
-      "((?:\"(?:[^\"]|\"\")+\"|[A-Za-z_]\\w*)(?:\\.(?:\"(?:[^\"]|\"\")+\"|[A-Za-z_]\\w*))*)" +
+      "((?:" + QuotedIdent + "|[A-Za-z_]\\w*)(?:\\.(?:" + QuotedIdent + "|[A-Za-z_]\\w*))*)" +
       "\\s*(\\([^)]*\\))?\\s+(.*)$").r
   private val PartitionedBy = "(?is)\\bPARTITIONED\\s+BY\\b".r
   private val ClusteredBy = "(?is)\\bCLUSTERED\\s+BY\\b".r
@@ -186,9 +195,9 @@ object SqlInsertDml {
     * through Catalyst unchanged. `http` sources are rejected (this sandbox
     * has no egress; a deployment would route them through the same reader).
     */
-  private val ExternRe =
-    ("(?is)TABLE\\s*\\(\\s*EXTERN\\s*\\(\\s*" +
-      "'((?:[^']|'')*)'\\s*,\\s*'((?:[^']|'')*)'\\s*,\\s*'((?:[^']|'')*)'\\s*\\)\\s*\\)").r
+  private[graft] val ExternRe =
+    ("(?is)TABLE\\s*\\(\\s*EXTERN\\s*\\(\\s*" + QuotedLiteral + "\\s*,\\s*" +
+      QuotedLiteral + "\\s*,\\s*" + QuotedLiteral + "\\s*\\)\\s*\\)").r
 
   /** Replace every TABLE(EXTERN(...)) with a registered temp view. */
   def rewriteExtern(spark: SparkSession, sql: String): String =

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Dump `.explain("formatted")` output for named gate queries to files —
   * the optimization-round evidence artifact (`plans/r16/<q>_<suffix>.txt`).
   * Bench-only queries are included so segment_metadata_approx is dumpable.
@@ -7,14 +6,8 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("plan-dump")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.configure(spark)
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 1) args(1) else "plans/r16"
     val suffix = if (args.length > 2) args(2) else "before"

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import org.apache.spark.sql.SparkSession
 import graft.server.HttpFacade
 import graft.sources.Sources
 
@@ -20,14 +19,7 @@ object ResultCacheProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val facade = HttpFacade.start(spark, name => Sources.table(spark, sfDir, name))
     val body =
       """{"queryType": "groupBy", "dataSource": "lineitem",

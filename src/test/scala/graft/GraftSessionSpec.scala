@@ -35,6 +35,19 @@ class GraftSessionSpec extends SparkSpecBase {
     (resp.statusCode(), JsonMethods.parse(resp.body()))
   }
 
+  test("local(cpus) is the one local session shape: local[cpus], as many shuffle " +
+      "partitions, UI off, nanos read as long, engine defaults applied") {
+    // the spec session is GraftSession.local(4)
+    assert(spark.sparkContext.master == "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.conf.get("spark.graft.sessionDefaultsApplied") == "true")
+    // launchers default to SPARK_GRAFT_CPUS, else every core
+    assert(GraftSession.defaultCpus == sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors))
+  }
+
   test("configure raises defaults, keeps explicit embedder settings, and is idempotent") {
     val s = defaultConfigSession()
     assert(s.conf.get(thresholdKey) == "128") // genuinely default-config

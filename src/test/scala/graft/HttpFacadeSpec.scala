@@ -849,7 +849,7 @@ class HttpFacadeSpec extends SparkSpecBase {
       "never overrides an explicit query context (QueryResourceTest.java:255,325)") {
     val facade = HttpFacade.start(spark, name => Sources.table(spark, sf(), name),
       defaultContext = JObject("skipEmptyBuckets" -> JBool(true),
-        "sqlQueryId" -> JString("cfg-default-id")))
+        "sqlQueryId" -> JString("cfg-default-id"), "queryId" -> JString("cfg-native-id")))
     try {
       def postRaw(path: String, body: String): (Int, String, java.net.http.HttpHeaders) = {
         val client = HttpClient.newHttpClient()
@@ -912,7 +912,45 @@ class HttpFacadeSpec extends SparkSpecBase {
         """{"query": "SELECT 1 AS one", "context": {"sqlQueryId": "mine"}}""")
       assert(s4 == 200)
       assert(h4.firstValue("X-Druid-SQL-Query-Id").orElse("") == "mine")
+      // a native id never comes from the defaults: QueryLifecycle.initialize
+      // assigns it from the request's OWN context.queryId (a fresh one when
+      // it has none) before merging them
+      val (s5, _, h5) = postRaw("/druid/v2", tsBody(""))
+      assert(s5 == 200)
+      val id5 = h5.firstValue("X-Druid-Query-Id").orElse("")
+      assert(id5.nonEmpty && id5 != "cfg-native-id")
+      val (s6, _, h6) = postRaw("/druid/v2",
+        tsBody(""", "context": {"queryId": "own-native-id"}"""))
+      assert(s6 == 200)
+      assert(h6.firstValue("X-Druid-Query-Id").orElse("") == "own-native-id")
     } finally facade.stop()
+  }
+
+  test("INSERT whose inline EXTERN argument is 400 CSV rows (~6 KB) lands every " +
+      "row, read back through /druid/v2/sql") {
+    val facade = HttpFacade.start(spark, name => Sources.table(spark, sf(), name))
+    val target = s"dst_big_extern_${System.nanoTime()}"
+    try {
+      val rows = (0 until 400).map(i => (i.toLong, s"name_$i"))
+      val data = rows.map { case (id, n) => s"$id,$n" }.mkString("\\n")
+      val insert = s"INSERT INTO $target SELECT id, name FROM TABLE(EXTERN(" +
+        s"""'{"type":"inline","data":"$data"}', '{"type":"csv","columns":["id","name"]}', """ +
+        """'[{"name":"id","type":"LONG"},{"name":"name","type":"STRING"}]')) """ +
+        "PARTITIONED BY ALL TIME"
+      val (s1, j1) = post(facade.port, "/druid/v2/sql",
+        JsonMethods.compact(JsonMethods.render(JObject("query" -> JString(insert)))))
+      assert(s1 == 200, JsonMethods.compact(JsonMethods.render(j1)))
+      assert(j1 == JArray(List(JObject("inserted" -> JInt(400)))))
+      val (s2, j2) = post(facade.port, "/druid/v2/sql",
+        s"""{"query": "SELECT id, name FROM $target ORDER BY id", "resultFormat": "array"}""")
+      assert(s2 == 200)
+      assert(j2 == JArray(rows.toList.map { case (id, n) => JArray(List(JInt(id), JString(n))) }))
+    } finally {
+      facade.stop()
+      spark.catalog.dropTempView(target)
+      val dir = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_dml/$target")
+      if (dir.exists) org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
   }
 
   test("request log: one line per native/SQL query with time/bytes/success, " +

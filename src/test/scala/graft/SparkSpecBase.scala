@@ -11,18 +11,7 @@ trait SparkSpecBase extends AnyFunSuite {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // UTC + hash-agg fallback threshold come from the engine's own session
-    // defaults — the suites run the same path an embedder gets
-    graft.GraftSession.configure(s)
-    s
-  }
+  // UTC + hash-agg fallback threshold come from the engine's own session
+  // defaults — the suites run the same path an embedder gets
+  lazy val session: SparkSession = graft.GraftSession.local(4)
 }

@@ -79,4 +79,29 @@ class TokenHashExprsSpec extends SparkSpecBase {
     assert(sigs.map(_.getLong(0)).toSet == Set(1L))
     assert(sigs.head.getSeq[Any](1).forall(_ != null))
   }
+
+  test("two simhash64_row and two minhash_sig_row in one projection over " +
+      "non-nullable children compile (no interpreted fallback)") {
+    // array(...) is non-nullable, so each expression's code lands in the
+    // projection's own scope, where fixed local names would collide
+    val t = spark.range(50).select(
+      array(col("id").cast("string"), lit("x"), (col("id") % 7).cast("string")).as("a"),
+      array(lit("y"), (col("id") * 3).cast("string")).as("b"))
+    def project() = t.select(SF.simhash64Row(col("a")), SF.simhash64Row(col("b")),
+      SF.minhashSigRow(col("a"), 4), SF.minhashSigRow(col("b"), 4)).collect().toSeq
+    def withConfs[A](kvs: (String, String)*)(body: => A): A = {
+      val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val compiled = withConfs("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(project())
+    val interpreted = withConfs("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(project())
+    assert(compiled.length == 50)
+    assert(compiled == interpreted)
+  }
 }
