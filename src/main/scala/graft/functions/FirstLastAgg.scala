@@ -78,6 +78,11 @@ case class FirstLastFoldAgg(
     try {
       val gen = org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
         .generate(Seq(SortOrder(BoundReference(0, key.dataType, nullable = true), Ascending)))
+      // ra/rb are shared mutable buffers with no lock: safe only because
+      // the lazy val is @transient, so each task deserializes its own
+      // expression instance and builds its own pair, and a task's
+      // aggregation runs on one thread. An instance shared across threads
+      // would race here.
       val ra = new GenericInternalRow(1)
       val rb = new GenericInternalRow(1)
       new Ordering[Any] {

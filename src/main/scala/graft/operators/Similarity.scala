@@ -270,9 +270,9 @@ object Similarity {
     // merges small per-segment results centrally the same way. The probe is
     // a limit(T+1) collect — bounded whatever the graph size — and any
     // larger graph falls through to the alternating loop unchanged (the
-    // checkpoint is already materialized either way). T defaults to 1M pair
-    // rows (~16 MB of longs — trivial for any driver; override with
-    // spark.graft.cc.localThreshold).
+    // checkpoint is already materialized either way). The probe holds up to
+    // T+1 pairs on the driver as boxed `Row`s; T defaults to 1M pair rows
+    // (override with spark.graft.cc.localThreshold).
     val localT = spark0.conf.getOption("spark.graft.cc.localThreshold")
       .map(_.toInt).getOrElse(1 << 20)
     val head = pc.limit(localT + 1).collect()
@@ -293,11 +293,21 @@ object Similarity {
         x
       }
       def add(x: Long): Unit = if (!parent.containsKey(x)) parent.put(x, x)
+      // null ids as on the distributed path: an edge with a null endpoint
+      // joins nothing (`a =!= b` drops it), its other endpoint still labels
+      // itself, and the null node is one (null, null) row
+      var nullNode = false
       head.foreach { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        add(a); add(b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
+        if (r.isNullAt(0) || r.isNullAt(1)) {
+          nullNode = true
+          if (!r.isNullAt(0)) add(r.getLong(0))
+          if (!r.isNullAt(1)) add(r.getLong(1))
+        } else {
+          val a = r.getLong(0); val b = r.getLong(1)
+          add(a); add(b)
+          val ra = find(a); val rb = find(b)
+          if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
+        }
       }
       // component minimum per root (roots are already minima under the
       // min-directed unions above, but a second pass keeps that invariant
@@ -310,7 +320,7 @@ object Similarity {
         val cur = minOf.getOrDefault(r, Long.MaxValue)
         if (n < cur) minOf.put(r, n)
       }
-      val out = new Array[org.apache.spark.sql.Row](parent.size())
+      val out = new Array[org.apache.spark.sql.Row](parent.size() + (if (nullNode) 1 else 0))
       val it1 = parent.keySet().iterator()
       var i = 0
       while (it1.hasNext) {
@@ -318,6 +328,7 @@ object Similarity {
         out(i) = org.apache.spark.sql.Row(n, minOf.get(find(n)))
         i += 1
       }
+      if (nullNode) out(i) = org.apache.spark.sql.Row(null, null)
       // nullability mirrors the distributed path's schema (id from a
       // distinct over nullable inputs; cluster_id from a coalesce) so the
       // dumped parquet schema is identical either way

@@ -2,7 +2,7 @@ package graft.server
 
 import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -80,6 +80,12 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
     def str(k: String): String = (req \ k) match {
       case JString(s) => s; case _ => ""
     }
+    // a metadata search pattern, bare or as a {"s": ...} wrapper; absent
+    // matches everything
+    def likePattern(k: String): scala.util.matching.Regex = likeRe((req \ k) match {
+      case JString(s) => s
+      case o => (o \ "s") match { case JString(s) => s; case _ => "%" }
+    })
     def num(k: String, default: Long = -1L): Long = (req \ k) match {
       case JInt(n) => n.toLong; case JLong(n) => n
       case JDouble(d) => d.toLong; case _ => default
@@ -120,11 +126,12 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
             // planned here — Spark executes command plans eagerly on
             // spark.sql(), and the reference's DruidMeta.prepare only plans,
             // never runs side effects
-            if (graft.sources.SqlInsertDml.parse(st.sql.get).isDefined)
-              st.statementType = "INSERT"
-            else st.metas =
-              try signatureOf(st.sql.get)
-              catch { case _: Exception => Nil }
+            SqlLifecycle.classify(st.sql.get) match {
+              case _: SqlLifecycle.Insert => st.statementType = "INSERT"
+              case _: SqlLifecycle.Explain => st.metas = SqlLifecycle.ExplainColumns
+              case SqlLifecycle.Query(q) =>
+                st.metas = try signatureOf(q) catch { case _: Exception => Nil }
+            }
             JObject("response" -> JString("prepare"),
               "statement" -> JObject(
                 "connectionId" -> JString(cid), "id" -> JInt(st.id),
@@ -148,7 +155,7 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
               }
               case _ => Nil
             }
-            runGuarded(cid, st, HttpFacade.bindParameters(
+            runGuarded(cid, st, SqlLifecycle.bindParameters(
               st.sql.getOrElse(throw new IllegalStateException("not prepared")), params))
             executeResults(cid, st, num("maxRowsInFirstFrame", maxRowsPerFrame).toInt)
           case "fetch" =>
@@ -169,12 +176,7 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
           case "getCatalogs" => metaResult(str("connectionId"),
             Seq("TABLE_CAT"), Seq(Seq(JString("druid"))))
           case "getSchemas" =>
-            val pattern = likeRe((req \ "schemaPattern" \ "s") match {
-              case JString(s) => s
-              case _ => (req \ "schemaPattern") match {
-                case JString(s) => s; case _ => "%"
-              }
-            })
+            val pattern = likePattern("schemaPattern")
             // the reference's schema set (information_schema/druid/sys);
             // TABLE_CATALOG is the fixed "druid" catalog
             val schemas = Seq("druid", "information_schema", "sys")
@@ -182,12 +184,7 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
             metaResult(str("connectionId"), Seq("TABLE_SCHEM", "TABLE_CATALOG"),
               schemas.map(s => Seq(JString(s), JString("druid"))))
           case "getTables" =>
-            val pattern = likeRe((req \ "tableNamePattern" \ "s") match {
-              case JString(s) => s
-              case _ => (req \ "tableNamePattern") match {
-                case JString(s) => s; case _ => "%"
-              }
-            })
+            val pattern = likePattern("tableNamePattern")
             val tables = spark.catalog.listTables().collect()
               .map(_.name).filter(pattern.matches).sorted.toSeq
             metaResult(str("connectionId"),
@@ -195,23 +192,16 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
               tables.map(t => Seq(JString("druid"), JString("druid"),
                 JString(t), JString("TABLE"))))
           case "getColumns" =>
-            def pattern(key: String): scala.util.matching.Regex =
-              likeRe((req \ key \ "s") match {
-                case JString(s) => s
-                case _ => (req \ key) match {
-                  case JString(s) => s; case _ => "%"
-                }
-              })
-            val tablePattern = pattern("tableNamePattern")
-            val columnPattern = pattern("columnNamePattern")
+            val tablePattern = likePattern("tableNamePattern")
+            val columnPattern = likePattern("columnNamePattern")
             val tables = spark.catalog.listTables().collect()
               .map(_.name).filter(tablePattern.matches).sorted.toSeq
             val rows = tables.flatMap { t =>
               spark.table(t).schema.fields.zipWithIndex.collect {
                 case (f, i) if columnPattern.matches(f.name) =>
-                  val (jdbcId, typeName) = jdbcType(f.dataType)
                   Seq(JString("druid"), JString("druid"), JString(t),
-                    JString(f.name), JInt(jdbcId), JString(typeName),
+                    JString(f.name), JInt(jdbcType(HttpFacade.colMeta(f).sqlType)._1),
+                    JString(typeName(f)),
                     JInt(i + 1), JString(if (f.nullable) "YES" else "NO"))
               }
             }
@@ -276,40 +266,21 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
 
   // ---- SQL execution (the same lenient planning surface as /druid/v2/sql) ----
 
-  private def plan(sqlText: String): Either[Seq[JObject], DataFrame] = {
-    graft.functions.GraftSqlFunctions.register(spark)
-    // metadata queries see the live catalog without a manual re-register
-    SystemSchema.refreshIfMetadataQuery(spark, sqlText)
-    // ANSI-off via the shared thread-safe scope (concurrent JDBC clients
-    // must not race the session toggle)
-    HttpFacade.SessionScope.run(spark) {
-      val ExplainRe = "(?is)\\s*EXPLAIN\\s+PLAN\\s+FOR\\s+(.*)".r
-      sqlText match {
-        case ExplainRe(inner) => Left(HttpFacade.explainRows(spark, inner))
-        case _ => Right(spark.sql(sqlText))
-      }
-    }
-  }
+  // JDBC connections set no planner context knobs
+  private val noContext = new SqlLifecycle.PlannerContext(JObject())
 
-  private val explainMetas = Seq(
-    HttpFacade.ColMeta("PLAN", Some("STRING"), "VARCHAR"),
-    HttpFacade.ColMeta("RESOURCES", Some("STRING"), "VARCHAR"))
-
+  /** A query's result columns, planned but not executed. Command
+    * statements are refused: spark.sql() executes command plans (DDL,
+    * Spark-dialect DML) eagerly, and prepare must never run side effects
+    * (DruidMeta.prepare only plans). */
   private def signatureOf(sqlText: String): Seq[HttpFacade.ColMeta] = {
-    val ExplainRe = "(?is)\\s*EXPLAIN\\s+PLAN\\s+FOR\\s+(.*)".r
-    if (ExplainRe.matches(sqlText)) return explainMetas
-    // refuse to signature non-query statements: spark.sql() executes
-    // command plans (DDL, Spark-dialect DML) eagerly, and prepare must
-    // never run side effects (DruidMeta.prepare only plans)
     val parsed = spark.sessionState.sqlParser.parsePlan(sqlText)
     val isCommand = parsed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command] ||
       parsed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement]
     if (isCommand)
       throw new IllegalArgumentException("cannot prepare a non-query statement")
-    plan(sqlText) match {
-      case Left(_) => explainMetas
-      case Right(df) => df.schema.fields.toSeq.map(HttpFacade.colMeta)
-    }
+    SqlLifecycle.scoped(spark, sqlText, noContext)(SqlLifecycle.plan(spark, sqlText, noContext))
+      .schema.fields.toSeq.map(HttpFacade.colMeta)
   }
 
   /** One line per executed SQL statement — the RequestLogger surface the
@@ -347,34 +318,28 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
     st.sql = Some(sqlText)
     st.updateCount = -1L
     st.statementType = "SELECT"
-    // JDBC executeUpdate surface: INSERT DML routes through the ingest
-    // path and reports the published row count as the update count; the
-    // signature carries the DML statement type (Meta.StatementType.INSERT)
-    if (graft.sources.SqlInsertDml.parse(sqlText).isDefined) {
-      st.metas = Nil
-      st.rows = Vector.empty
-      st.statementType = "INSERT"
-      st.updateCount = graft.sources.SqlInsertDml.run(spark, sqlText).count()
-      return
-    }
-    // execution rides the same lenient-cast scope as planning (runtime
-    // casts must not throw either); the scope is reentrant, so the nested
-    // plan() call shares this thread's toggle
-    HttpFacade.SessionScope.run(spark) {
-      plan(sqlText) match {
-        case Left(explain) =>
-          st.metas = explainMetas
-          st.rows = explain.toIndexedSeq.map(o =>
-            JArray(List(o \ "PLAN", o \ "RESOURCES")))
-        case Right(df) =>
-          st.metas = df.schema.fields.toSeq.map(HttpFacade.colMeta)
-          val collected = df.limit(maxResultRows + 1).collect()
-          if (collected.length > maxResultRows)
-            throw new IllegalStateException(s"result exceeds maxResultRows=$maxResultRows")
-          val fields = df.schema.fields
-          st.rows = collected.toIndexedSeq.map { r =>
-            JArray(fields.indices.toList.map(i => cell(r.get(i), fields(i).dataType)))
-          }
+    SqlLifecycle.classify(sqlText) match {
+      // JDBC executeUpdate surface: INSERT DML reports the published row
+      // count as the update count; the signature carries the DML statement
+      // type (Meta.StatementType.INSERT). It runs outside the planning
+      // scope, under the session's own ANSI setting
+      case ins: SqlLifecycle.Insert =>
+        st.metas = Nil
+        st.rows = Vector.empty
+        st.statementType = "INSERT"
+        st.updateCount = SqlLifecycle.insert(spark, ins)
+      case e: SqlLifecycle.Explain => SqlLifecycle.scoped(spark, sqlText, noContext) {
+        st.metas = SqlLifecycle.ExplainColumns
+        st.rows = SqlLifecycle.explainRows(spark, e).toIndexedSeq.map(o =>
+          JArray(List(o \ "PLAN", o \ "RESOURCES")))
+      }
+      case _: SqlLifecycle.Query => SqlLifecycle.scoped(spark, sqlText, noContext) {
+        val df = SqlLifecycle.plan(spark, sqlText, noContext)
+        val fields = df.schema.fields
+        st.metas = fields.toSeq.map(HttpFacade.colMeta)
+        st.rows = HttpFacade.capRows(df, maxResultRows).toIndexedSeq.map { r =>
+          JArray(fields.indices.toList.map(i => cell(r.get(i), fields(i).dataType)))
+        }
       }
     }
   }
@@ -453,21 +418,7 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
     * JSON transport might switch longs to integers"
     * (DruidStatementTest.testSignature asserts these clazz names). */
   private def columnMetaData(m: HttpFacade.ColMeta, ordinal: Int): JObject = {
-    val (id, name, rep, clazz) = m.sqlType match {
-      case "TIMESTAMP" => (93, "TIMESTAMP", "LONG", "java.lang.Long")
-      case "DATE" => (91, "DATE", "INTEGER", "java.lang.Integer")
-      case "BIGINT" => (-5, "BIGINT", "NUMBER", "java.lang.Number")
-      case "INTEGER" => (4, "INTEGER", "NUMBER", "java.lang.Number")
-      case "SMALLINT" => (5, "SMALLINT", "NUMBER", "java.lang.Number")
-      case "TINYINT" => (-6, "TINYINT", "NUMBER", "java.lang.Number")
-      case "BOOLEAN" => (16, "BOOLEAN", "BOOLEAN", "java.lang.Boolean")
-      case "FLOAT" => (6, "FLOAT", "FLOAT", "java.lang.Float")
-      case "DOUBLE" => (8, "DOUBLE", "DOUBLE", "java.lang.Double")
-      case "DECIMAL" => (3, "DECIMAL", "DOUBLE", "java.lang.Double")
-      case "VARCHAR" => (12, "VARCHAR", "STRING", "java.lang.String")
-      case "ARRAY" => (2003, "ARRAY", "ARRAY", "java.sql.Array")
-      case _ => (1111, "OTHER", "OBJECT", "java.lang.Object")
-    }
+    val (id, name, rep, clazz) = jdbcType(m.sqlType)
     JObject(
       "ordinal" -> JInt(ordinal),
       "autoIncrement" -> JBool(false), "caseSensitive" -> JBool(true),
@@ -502,7 +453,7 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
   }
 
   /** Avatica TypedValue type → the SQL-endpoint parameter type vocabulary
-    * (HttpFacade.bindParameters). */
+    * (SqlLifecycle.bindParameters). */
   private def avaticaParamType(t: String): String = t.toUpperCase match {
     case "STRING" | "CHARACTER_STRING" => "VARCHAR"
     case "LONG" | "PRIMITIVE_LONG" | "INTEGER" | "PRIMITIVE_INT" => "BIGINT"
@@ -514,23 +465,31 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
     case _ => "VARCHAR"
   }
 
-  private def jdbcType(dt: DataType): (Int, String) = dt match {
-    case TimestampType | TimestampNTZType => (93, "TIMESTAMP")
-    case DateType => (91, "DATE")
-    case LongType => (-5, "BIGINT")
-    case IntegerType => (4, "INTEGER")
-    case ShortType => (5, "SMALLINT")
-    case ByteType => (-6, "TINYINT")
-    case BooleanType => (16, "BOOLEAN")
-    case FloatType => (6, "FLOAT")
-    case DoubleType => (8, "DOUBLE")
-    case _: DecimalType => (3, "DECIMAL")
-    case StringType => (12, "VARCHAR")
-    case ArrayType(e, _) =>
-      val inner = jdbcType(e)._2
-      (2003, s"ARRAY<$inner>")
-    case BinaryType => (1111, "COMPLEX")
-    case _ => (1111, "OTHER")
+  /** The JDBC typing of a SQL type name ([[HttpFacade.colMeta]]'s
+    * sqlType): (java.sql.Types id, type name, Avatica rep, column class). */
+  private def jdbcType(sqlType: String): (Int, String, String, String) = sqlType match {
+    case "TIMESTAMP" => (93, "TIMESTAMP", "LONG", "java.lang.Long")
+    case "DATE" => (91, "DATE", "INTEGER", "java.lang.Integer")
+    case "BIGINT" => (-5, "BIGINT", "NUMBER", "java.lang.Number")
+    case "INTEGER" => (4, "INTEGER", "NUMBER", "java.lang.Number")
+    case "SMALLINT" => (5, "SMALLINT", "NUMBER", "java.lang.Number")
+    case "TINYINT" => (-6, "TINYINT", "NUMBER", "java.lang.Number")
+    case "BOOLEAN" => (16, "BOOLEAN", "BOOLEAN", "java.lang.Boolean")
+    case "FLOAT" => (6, "FLOAT", "FLOAT", "java.lang.Float")
+    case "DOUBLE" => (8, "DOUBLE", "DOUBLE", "java.lang.Double")
+    case "DECIMAL" => (3, "DECIMAL", "DOUBLE", "java.lang.Double")
+    case "VARCHAR" => (12, "VARCHAR", "STRING", "java.lang.String")
+    case "ARRAY" => (2003, "ARRAY", "ARRAY", "java.sql.Array")
+    case _ => (1111, "OTHER", "OBJECT", "java.lang.Object")
+  }
+
+  /** getColumns TYPE_NAME: the JDBC type name, with the element type
+    * spelled out for arrays (ARRAY<VARCHAR>) and COMPLEX for binary
+    * (sketch) columns. */
+  private def typeName(f: StructField): String = f.dataType match {
+    case ArrayType(e, _) => s"ARRAY<${typeName(StructField(f.name, e))}>"
+    case BinaryType => "COMPLEX"
+    case _ => jdbcType(HttpFacade.colMeta(f).sqlType)._2
   }
 
   /** JDBC LIKE pattern (`%`, `_`, `\` escape) → anchored regex. The JDBC

@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.time.{Instant, LocalDateTime, OffsetDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.operators.NativeQuery
@@ -225,62 +225,6 @@ object HttpFacade {
         "Please try your query again later.")
   }
 
-  /** Guards the session-level conf toggles the SQL entry points apply
-    * around each query (ANSI off for Druid's lenient-cast semantics, the
-    * optional per-query sqlTimeZone). The server runs requests on a thread
-    * pool, so naive save/set/restore races: a query could save ANOTHER
-    * query's toggled value and "restore" the session to it permanently.
-    * ANSI-off is reference-counted (first query in saves the true session
-    * value, last one out restores it); a query that changes the session
-    * time zone runs exclusively, since two zones cannot share one session.
-    */
-  private[server] object SessionScope {
-    private val rw = new java.util.concurrent.locks.ReentrantReadWriteLock
-    private var depth = 0
-    private var savedAnsi: Option[String] = None
-
-    private def enterAnsiOff(spark: SparkSession): Unit = synchronized {
-      if (depth == 0) {
-        savedAnsi = spark.conf.getOption("spark.sql.ansi.enabled")
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-      }
-      depth += 1
-    }
-    private def exitAnsiOff(spark: SparkSession): Unit = synchronized {
-      depth -= 1
-      if (depth == 0) savedAnsi match {
-        case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
-        case None => spark.conf.unset("spark.sql.ansi.enabled")
-      }
-    }
-
-    /** Run with ANSI off; concurrent callers share the toggle safely. */
-    def run[A](spark: SparkSession)(body: => A): A = {
-      rw.readLock.lock()
-      enterAnsiOff(spark)
-      try body finally {
-        exitAnsiOff(spark)
-        rw.readLock.unlock()
-      }
-    }
-
-    /** Run with ANSI off AND the session time zone set — exclusive. */
-    def runZoned[A](spark: SparkSession, zone: java.time.ZoneId)(body: => A): A = {
-      rw.writeLock.lock()
-      val prevZone = spark.conf.getOption("spark.sql.session.timeZone")
-      spark.conf.set("spark.sql.session.timeZone", zone.getId)
-      enterAnsiOff(spark)
-      try body finally {
-        exitAnsiOff(spark)
-        prevZone match {
-          case Some(v) => spark.conf.set("spark.sql.session.timeZone", v)
-          case None => spark.conf.unset("spark.sql.session.timeZone")
-        }
-        rw.writeLock.unlock()
-      }
-    }
-  }
-
   /** Total + per-lane concurrency guard — the QueryScheduler analog.
     * `limit <= 0` means unlimited (the default: this driver-side facade is
     * usually single-tenant; a shared broker sets a limit sized to its
@@ -474,124 +418,62 @@ object HttpFacade {
             }
             case _ => Nil
           }
-          (bindParameters(q, params), fmt, hdr, tHdr, sHdr, ctx)
+          (SqlLifecycle.bindParameters(q, params), fmt, hdr, tHdr, sHdr, ctx)
         case _ => // bare SQL string body
           (req.body, "object", false, false, false, JObject())
       }
-      // context-parameter validation (reference: QueryContexts.java —
-      // maxNumericInFilters must be positive and may not exceed the
-      // system cap of 100)
-      (context \ "maxNumericInFilters") match {
-        case JInt(n) if n <= 0 =>
-          throw new IllegalArgumentException("[maxNumericInFilters] must be greater than 0")
-        case JInt(n) if n > 100 =>
-          throw new IllegalArgumentException(
-            "Expected parameter[maxNumericInFilters] cannot exceed system set value of [100]")
-        case _ => ()
-      }
-      val requireTime = (context \ "requireTimeCondition") match {
-        case JBool(b) => b; case _ => false
-      }
-      // GroupByQueryConfig.CTX_KEY_ENABLE_MULTI_VALUE_UNNESTING (default true)
-      val mvUnnesting = (context \ "groupByEnableMultiValueUnnesting") match {
-        case JBool(b) => b; case _ => true
-      }
-      val maxNumericIn = (context \ "maxNumericInFilters") match {
-        case JInt(n) => Some(n.toInt); case _ => None
-      }
-      // PlannerContext.CTX_SQL_TIME_ZONE: evaluate AND render in the
-      // query's zone (SqlResourceTest.testTimestampsInResponseLosAngeles
-      // TimeZone expects "1999-12-31T16:00:00.000-08:00")
-      val sqlZone = (context \ "sqlTimeZone") match {
-        case JString(z) => Some(java.time.ZoneId.of(z)); case _ => None
-      }
-      // PlannerContext.CTX_SQL_OUTER_LIMIT: cap the outermost result —
-      // consoles set it to bound ad-hoc queries without editing the SQL
-      val outerLimit = (context \ "sqlOuterLimit") match {
-        case JInt(n) => Some(n.toInt); case JLong(n) => Some(n.toInt); case _ => None
-      }
-      // PlannerConfig.useApproximateCountDistinct — COUNT(DISTINCT) plans to
-      // an HLL++ estimate (opt-in here; the engine's default stays exact)
-      val approxCountDistinct = (context \ "useApproximateCountDistinct") match {
-        case JBool(b) => b; case _ => false
-      }
-      graft.functions.GraftSqlFunctions.register(spark)
-      // metadata queries see the live catalog without a manual re-register
-      SystemSchema.refreshIfMetadataQuery(spark, sqlText)
-      // Druid SQL never throws on a malformed cast — a mismatched-type
-      // comparison plans to null / no-match (sql/.../planner/Calcites.java
-      // lenient coercion; CalciteParameterQueryTest.java:623 binds VARCHAR
-      // 'wat' against a float and expects 0 rows, not an error) — so the
-      // SQL endpoint analyzes queries with ANSI cast errors off via the
-      // thread-safe SessionScope (concurrent requests share the toggle).
-      def evaluate(): String = {
-        val ExplainRe = "(?is)\\s*EXPLAIN\\s+PLAN\\s+FOR\\s+(.*)".r
-        sqlText match {
-          case ExplainRe(inner) => renderObjects(explainRows(spark, inner),
-            Seq(ColMeta("PLAN", Some("STRING"), "VARCHAR"),
-              ColMeta("RESOURCES", Some("STRING"), "VARCHAR")),
-            format, header, typesHeader, sqlTypesHeader)
-          case _ => graft.sources.SqlInsertDml.parse(sqlText) match {
-            case Some(_) =>
-              // INSERT DML routes through the ingest path; where the reference
-              // hands back an ingest task handle, this facade reports the
-              // published row count (the write is synchronous here)
-              val published = graft.sources.SqlInsertDml.run(spark, sqlText)
-              renderObjects(Seq(JObject("inserted" -> JLong(published.count()))),
-                Seq(ColMeta("inserted", Some("LONG"), "BIGINT")),
-                format, header, typesHeader, sqlTypesHeader)
-            case None =>
-              def build(): DataFrame = {
-                val df1 = spark.sql(sqlText)
-                val df0 =
-                  if (approxCountDistinct) graft.plans.PlannerChecks.approximateCountDistinct(df1)
-                  else df1
-                outerLimit.fold(df0)(df0.limit)
-              }
-              // repeated dashboard SQL pays the same constant
-              // plan-construction floor as native JSON, so the compiled
-              // DataFrame caches under the BOUND text (parameters already
-              // inlined) + planner knobs + zone. Skipped for metadata
-              // queries (the plan would snapshot catalog temp views) and
-              // statements with evaluation-time "now" functions
-              // (ComputeCurrentTime would freeze them into the cached plan).
-              val lower = sqlText.toLowerCase(java.util.Locale.ROOT)
-              val trimmed = lower.trim
-              // only plain read statements: DDL/SET execute eagerly inside
-              // spark.sql and must never be skipped by a cache hit
-              val cacheable =
-                (trimmed.startsWith("select") || trimmed.startsWith("with") ||
-                  trimmed.startsWith("values")) &&
-                !lower.contains("information_schema.") &&
-                !lower.contains("sys.") && !lower.contains("current_") &&
-                !lower.contains("now()") && !lower.contains("localtimestamp")
-              val knobs = s"$approxCountDistinct:$outerLimit:" +
-                sqlZone.map(_.getId).getOrElse("UTC")
-              def produce(): String = {
-                val df = if (cacheable) planCache.get(s"sql:$knobs:$sqlText")(build())
-                         else build()
-                if (requireTime) graft.plans.PlannerChecks.requireTimeCondition(df)
-                if (!mvUnnesting) graft.plans.PlannerChecks.requireNoMultiValueUnnesting(df)
-                maxNumericIn.foreach(graft.plans.PlannerChecks.requireMaxNumericInFilters(df, _))
-                render(df, format, header, typesHeader, sqlTypesHeader, maxResultRows,
-                  sqlZone.getOrElse(ZoneOffset.UTC))
-              }
-              // result-level cache over the rendered payload (same
-              // cacheability rules as the plan cache; the key adds the
-              // plan-check flags and the response format, so a hit never
-              // skips a check or format the entry wasn't produced under)
-              val resultKnobs = s"$knobs:$requireTime:$mvUnnesting:$maxNumericIn:" +
-                s"$format:$header:$typesHeader:$sqlTypesHeader"
-              if (cacheable)
-                resultCache.get(s"sql:$resultKnobs:$sqlText",
-                  req.flag("useCache", true), req.flag("populateCache", true))(produce())
-              else produce()
-          }
+      val planner = new SqlLifecycle.PlannerContext(context)
+      val statement = SqlLifecycle.classify(sqlText)
+      SqlLifecycle.scoped(spark, sqlText, planner) {
+        statement match {
+          case e: SqlLifecycle.Explain =>
+            renderObjects(SqlLifecycle.explainRows(spark, e), SqlLifecycle.ExplainColumns,
+              format, header, typesHeader, sqlTypesHeader)
+          case ins: SqlLifecycle.Insert =>
+            renderObjects(Seq(JObject("inserted" -> JLong(SqlLifecycle.insert(spark, ins)))),
+              Seq(ColMeta("inserted", Some("LONG"), "BIGINT")),
+              format, header, typesHeader, sqlTypesHeader)
+          case _: SqlLifecycle.Query =>
+            // repeated dashboard SQL pays the same constant
+            // plan-construction floor as native JSON, so the compiled
+            // DataFrame caches under the BOUND text (parameters already
+            // inlined) + planner knobs + zone. Skipped for metadata
+            // queries (the plan would snapshot catalog temp views) and
+            // statements with evaluation-time "now" functions
+            // (ComputeCurrentTime would freeze them into the cached plan).
+            val lower = sqlText.toLowerCase(java.util.Locale.ROOT)
+            val trimmed = lower.trim
+            // only plain read statements: DDL/SET execute eagerly inside
+            // spark.sql and must never be skipped by a cache hit
+            val cacheable =
+              (trimmed.startsWith("select") || trimmed.startsWith("with") ||
+                trimmed.startsWith("values")) &&
+              !lower.contains("information_schema.") &&
+              !lower.contains("sys.") && !lower.contains("current_") &&
+              !lower.contains("now()") && !lower.contains("localtimestamp")
+            val knobs = s"${planner.useApproximateCountDistinct}:${planner.sqlOuterLimit}:" +
+              planner.sqlTimeZone.map(_.getId).getOrElse("UTC")
+            def produce(): String = {
+              val df =
+                if (cacheable)
+                  planCache.get(s"sql:$knobs:$sqlText")(SqlLifecycle.plan(spark, sqlText, planner))
+                else SqlLifecycle.plan(spark, sqlText, planner)
+              SqlLifecycle.check(df, planner)
+              render(df, format, header, typesHeader, sqlTypesHeader, maxResultRows,
+                planner.sqlTimeZone.getOrElse(ZoneOffset.UTC))
+            }
+            // result-level cache over the rendered payload (same
+            // cacheability rules as the plan cache; the key adds the
+            // plan-check flags and the response format, so a hit never
+            // skips a check or format the entry wasn't produced under)
+            val resultKnobs = s"$knobs:${planner.requireTimeCondition}:" +
+              s"${planner.groupByEnableMultiValueUnnesting}:${planner.maxNumericInFilters}:" +
+              s"$format:$header:$typesHeader:$sqlTypesHeader"
+            if (cacheable)
+              resultCache.get(s"sql:$resultKnobs:$sqlText",
+                req.flag("useCache", true), req.flag("populateCache", true))(produce())
+            else produce()
         }
-      }
-      sqlZone match {
-        case Some(z) => SessionScope.runZoned(spark, z)(evaluate())
-        case None => SessionScope.run(spark)(evaluate())
       }
     })
 
@@ -869,73 +751,45 @@ object HttpFacade {
       "host" -> JNull))))
   }
 
-  /** Materialize at most `maxRows` result rows as parsed JSON objects;
-    * one row past the cap fails the request instead of OOMing the driver. */
-  private def materialize(df: DataFrame, maxRows: Int): Seq[JObject] = {
-    val objects = df.toJSON.limit(maxRows + 1).collect()
-    if (objects.length > maxRows)
+  /** The one result-row cap: collect at most `maxRows` rows; one row past
+    * the cap fails the request instead of OOMing the driver. */
+  private[server] def capRows[T](ds: Dataset[T], maxRows: Int): Array[T] = {
+    val rows = ds.limit(maxRows + 1).collect()
+    if (rows.length > maxRows)
       throw new ResourceLimitExceededException(s"result exceeds maxResultRows=$maxRows")
-    objects.toSeq.map(o => JsonMethods.parse(o).asInstanceOf[JObject])
+    rows
   }
+
+  /** Result rows as parsed JSON objects, under the row cap. */
+  private def materialize(df: DataFrame, maxRows: Int): Seq[JObject] =
+    capRows(df.toJSON, maxRows).toSeq.map(o => JsonMethods.parse(o).asInstanceOf[JObject])
+
+  /** A timestamp cell's instant: an ISO instant or offset date-time as
+    * written, a local date-time or date (midnight) read in `zone`. */
+  private def instantOf(s: String, zone: java.time.ZoneId): Option[Instant] =
+    Try(Instant.parse(s)).orElse(Try(OffsetDateTime.parse(s).toInstant))
+      .orElse(Try(LocalDateTime.parse(s).atZone(zone).toInstant))
+      .orElse(Try(java.time.LocalDate.parse(s).atStartOfDay(zone).toInstant)).toOption
 
   /** Druid renders bucket timestamps as ISO-8601 with milliseconds in UTC
     * (e.g. "2012-01-01T00:00:00.000Z"); normalize Spark's rendering. */
-  private val IsoMillis =
-    DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'").withZone(ZoneOffset.UTC)
-  private[server] def isoMillis(v: JValue): JValue = v match {
-    case JString(s) =>
-      val inst =
-        try Some(Instant.parse(s))
-        catch { case _: Exception =>
-          try Some(OffsetDateTime.parse(s).toInstant)
-          catch { case _: Exception =>
-            try Some(LocalDateTime.parse(s).toInstant(ZoneOffset.UTC))
-            catch { case _: Exception =>
-              try Some(java.time.LocalDate.parse(s).atStartOfDay(ZoneOffset.UTC).toInstant)
-              catch { case _: Exception => None }
-            }
-          }
-        }
-      inst.fold(v: JValue)(i => JString(IsoMillis.format(i)))
-    case other => other
-  }
+  private[server] def isoMillis(v: JValue): JValue = isoMillisZoned(v, ZoneOffset.UTC)
 
   /** isoMillis in a query-specified zone: the offset renders instead of Z
     * (the reference uses ISODateTimeFormat with the sqlTimeZone; DATE cells
     * are that zone's midnight). */
   private val IsoMillisOffset = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
-  private[server] def isoMillisZoned(v: JValue, zone: java.time.ZoneId): JValue =
-    if (zone == ZoneOffset.UTC) isoMillis(v)
-    else v match {
-      case JString(s) =>
-        val inst =
-          try Some(Instant.parse(s))
-          catch { case _: Exception =>
-            try Some(OffsetDateTime.parse(s).toInstant)
-            catch { case _: Exception =>
-              try Some(LocalDateTime.parse(s).atZone(zone).toInstant)
-              catch { case _: Exception =>
-                try Some(java.time.LocalDate.parse(s).atStartOfDay(zone).toInstant)
-                catch { case _: Exception => None }
-              }
-            }
-          }
-        inst.fold(v: JValue)(i => JString(IsoMillisOffset.withZone(zone).format(i)))
-      case other => other
-    }
+  private[server] def isoMillisZoned(v: JValue, zone: java.time.ZoneId): JValue = v match {
+    case JString(s) => instantOf(s, zone).fold(v)(i => JString(IsoMillisOffset.withZone(zone).format(i)))
+    case other => other
+  }
 
   /** serializeDateTimeAsLong (docs/querying/query-context.md:55 — "DateTime
     * is serialized as long in the result returned by Broker"): render a
     * timestamp cell as epoch millis instead of ISO-8601. Parsing mirrors
     * [[isoMillis]]; unparseable cells pass through unchanged. */
   private[server] def epochMillis(v: JValue): JValue = v match {
-    case JString(s) =>
-      isoMillis(JString(s)) match {
-        case JString(iso) if iso.endsWith("Z") =>
-          try JLong(Instant.parse(iso).toEpochMilli)
-          catch { case _: Exception => v }
-        case _ => v
-      }
+    case JString(s) => instantOf(s, ZoneOffset.UTC).fold(v)(i => JLong(i.toEpochMilli))
     case other => other
   }
 
@@ -1254,114 +1108,5 @@ object HttpFacade {
     // users can't confuse it with the blank trailer line
     if (vals.length == 1 && vals.head.isEmpty) "\"\""
     else vals.map(csvField).mkString(",")
-  }
-
-  /** `EXPLAIN PLAN FOR <sql>`: one row with PLAN + RESOURCES VARCHAR columns
-    * (DruidPlanner.getExplainStructType, DruidPlanner.java:669). PLAN is the
-    * Catalyst plan (this engine's native form, where the reference embeds
-    * its native JSON); RESOURCES lists the referenced datasources as the
-    * reference's resource-action JSON string. */
-  private[server] def explainRows(spark: SparkSession, sql: String): Seq[JObject] = {
-    // resource collection (typing, sys/metadata exclusion, INSERT write
-    // targets, EXTERN) lives in PlannerResources — the same set the
-    // reference's authorizer sees
-    val resourceSet = PlannerResources.analyze(spark, sql)
-    // `EXPLAIN PLAN FOR INSERT ...` explains the inner SELECT's plan (the
-    // reference renders the underlying scan query: CalciteInsertDmlTest
-    // .testExplainInsertFromExternal)
-    val plan = graft.sources.SqlInsertDml.parse(sql) match {
-      case Some(ins) =>
-        val selectSql = graft.sources.SqlInsertDml.rewriteExtern(spark, ins.selectSql)
-        spark.sql(selectSql).queryExecution.explainString(
-          org.apache.spark.sql.execution.SimpleMode).trim
-      case None =>
-        spark.sql(sql).queryExecution.explainString(
-          org.apache.spark.sql.execution.SimpleMode).trim
-    }
-    val resources = JsonMethods.compact(JsonMethods.render(JArray(
-      resourceSet.toList.sortBy(r => (r.name, r.resourceType))
-        .map(r => JObject("name" -> JString(r.name), "type" -> JString(r.resourceType))))))
-    Seq(JObject("PLAN" -> JString(plan), "RESOURCES" -> JString(resources)))
-  }
-
-  /** Bind positional `?` placeholders to typed parameter literals — the
-    * reference's prepared-statement path (SqlQuery.java getParameterList →
-    * Calcite TypedValue binding). Literal rendering by declared SQL type;
-    * `?` inside string literals, `--` line comments, and (*) block comments
-    * is left alone. */
-  private[server] def bindParameters(sql: String,
-      params: Seq[(String, JValue)]): String = {
-    if (params.isEmpty) return sql
-    val out = new StringBuilder
-    var inString = false
-    var inComment = false
-    var inBlock = false
-    var next = 0
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inBlock) {
-        out.append(c)
-        if (c == '*' && i + 1 < sql.length && sql.charAt(i + 1) == '/') {
-          out.append('/'); i += 1; inBlock = false
-        }
-      } else if (inComment) {
-        out.append(c); if (c == '\n') inComment = false
-      } else if (inString) {
-        out.append(c); if (c == '\'') inString = false
-      } else c match {
-        case '\'' => inString = true; out.append(c)
-        case '-' if i + 1 < sql.length && sql.charAt(i + 1) == '-' =>
-          inComment = true; out.append(c)
-        case '/' if i + 1 < sql.length && sql.charAt(i + 1) == '*' =>
-          inBlock = true; out.append("/*"); i += 1
-        case '?' =>
-          // the reference's unbound-parameter surface (SqlPlanningException,
-          // 0-indexed position: CalciteParameterQueryTest
-          // .testPartiallyMissingParameter expects position[1])
-          if (next >= params.length || params(next) == null)
-            throw new IllegalArgumentException(s"Parameter at position[$next] is not bound")
-          out.append(literal(params(next))); next += 1
-        case other => out.append(other)
-      }
-      i += 1
-    }
-    out.toString
-  }
-
-  private def literal(p: (String, JValue)): String = {
-    val (tpe, v) = p
-    def str = v match {
-      case JString(s) => s
-      case JInt(n) => n.toString
-      case JLong(n) => n.toString
-      case JDouble(d) => d.toString
-      case JDecimal(d) => d.toString
-      case JBool(b) => b.toString
-      case other => throw new IllegalArgumentException(s"parameter value: $other")
-    }
-    v match {
-      case JNull => "NULL"
-      case _ => tpe match {
-        case "VARCHAR" | "CHAR" => "'" + str.replace("'", "''") + "'"
-        case "INTEGER" | "BIGINT" | "SMALLINT" | "TINYINT" =>
-          BigDecimal(str).toBigInt.toString
-        case "FLOAT" | "REAL" | "DOUBLE" | "DECIMAL" | "NUMERIC" =>
-          BigDecimal(str).toString
-        case "BOOLEAN" => str.toBoolean.toString
-        case "TIMESTAMP" =>
-          // Druid accepts epoch-millis TIMESTAMP parameters
-          // (CalciteParameterQueryTest.java:374 binds DateTimes millis)
-          val s = v match {
-            case JInt(_) | JLong(_) =>
-              LocalDateTime.ofInstant(Instant.ofEpochMilli(str.toLong), ZoneOffset.UTC)
-                .format(DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS"))
-            case _ => str
-          }
-          "TIMESTAMP '" + s.replace("'", "''") + "'"
-        case "DATE" => "DATE '" + str.replace("'", "''") + "'"
-        case other => throw new IllegalArgumentException(s"parameter type: $other")
-      }
-    }
   }
 }

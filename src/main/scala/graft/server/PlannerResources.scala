@@ -62,34 +62,6 @@ object PlannerResources {
     s != null && s.contains(name.toLowerCase)
   }
 
-  /** Positional `?` parameters carry no resources — analysis replaces them
-    * with an inert literal so the statement parses unbound (the reference
-    * analyzes resources before parameters bind: testDynamicParameters). */
-  private def neutralizeParameters(sql: String): String = {
-    val out = new StringBuilder
-    var i = 0; var inStr = false; var inLine = false; var inBlock = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { out.append(c); if (c == '\'') inStr = false; i += 1 }
-      else if (inLine) { out.append(c); if (c == '\n') inLine = false; i += 1 }
-      else if (inBlock) {
-        if (c == '*' && i + 1 < sql.length && sql.charAt(i + 1) == '/') {
-          out.append("*/"); inBlock = false; i += 2
-        } else { out.append(c); i += 1 }
-      }
-      else c match {
-        case '\'' => inStr = true; out.append(c); i += 1
-        case '-' if i + 1 < sql.length && sql.charAt(i + 1) == '-' =>
-          inLine = true; out.append("--"); i += 2
-        case '/' if i + 1 < sql.length && sql.charAt(i + 1) == '*' =>
-          inBlock = true; out.append("/*"); i += 2
-        case '?' => out.append('1'); i += 1
-        case _ => out.append(c); i += 1
-      }
-    }
-    out.toString
-  }
-
   /** Analyze the resources `sql` requires. Mirrors the reference's
     * authorization inputs: `context` keys become QUERY_CONTEXT writes under
     * `authorizeQueryContextParams`; `sys.*` becomes a SYSTEM_TABLE read
@@ -98,18 +70,29 @@ object PlannerResources {
   def analyze(spark: SparkSession, sql: String,
       context: Map[String, Any] = Map.empty,
       authorizeSysTables: Boolean = false,
-      authorizeQueryContextParams: Boolean = false): Set[ResourceAction] = {
-    val ExplainRe = "(?is)\\s*EXPLAIN\\s+PLAN\\s+FOR\\s+(.*)".r
-    val stmt = sql match { case ExplainRe(inner) => inner; case s => s }
+      authorizeQueryContextParams: Boolean = false): Set[ResourceAction] =
+    resources(spark, SqlLifecycle.classify(sql), context, authorizeSysTables,
+      authorizeQueryContextParams)
 
-    val (selectSql, writeTarget) = graft.sources.SqlInsertDml.parse(stmt) match {
-      case Some(ins) => (ins.selectSql, Some(ins.target))
-      case None => (stmt, None)
+  /** [[analyze]] over an already-classified statement. */
+  private[server] def resources(spark: SparkSession, statement: SqlLifecycle.Statement,
+      context: Map[String, Any] = Map.empty,
+      authorizeSysTables: Boolean = false,
+      authorizeQueryContextParams: Boolean = false): Set[ResourceAction] = {
+    def target(s: SqlLifecycle.Statement): (String, Option[String]) = s match {
+      case e: SqlLifecycle.Explain => target(e.inner)
+      case SqlLifecycle.Insert(ins) => (ins.selectSql, Some(ins.target))
+      case SqlLifecycle.Query(q) => (q, None)
     }
+    val (selectSql, writeTarget) = target(statement)
 
     var external = false
+    // positional `?` parameters carry no resources — analysis replaces
+    // them with an inert literal so the statement parses unbound (the
+    // reference analyzes resources before parameters bind:
+    // testDynamicParameters)
     val neutralized = graft.sources.SqlInsertDml.ExternRe.replaceAllIn(
-      neutralizeParameters(selectSql), _ => {
+      SqlLifecycle.replaceParameters(selectSql)(_ => "1"), _ => {
         external = true
         "__extern__"
       })

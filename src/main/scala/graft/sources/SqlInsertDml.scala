@@ -294,13 +294,17 @@ object SqlInsertDml {
     }
   }
 
-  /** Parse + execute an INSERT statement: run the SELECT, publish through
+  /** Parse + execute an INSERT statement; see the [[InsertStatement]]
+    * overload. */
+  def run(spark: SparkSession, sql: String, outBase: String): DataFrame =
+    run(spark, parse(sql).getOrElse(
+      throw new IllegalArgumentException(s"not an INSERT statement: $sql")), outBase)
+
+  /** Execute a parsed INSERT statement: run the SELECT, publish through
     * BatchIngest under `outBase/<table>`, and register the table. Returns
     * the published DataFrame. */
-  def run(spark: SparkSession, sql: String,
+  def run(spark: SparkSession, stmt: InsertStatement,
       outBase: String = defaultOutBase): DataFrame = {
-    val stmt = parse(sql).getOrElse(
-      throw new IllegalArgumentException(s"not an INSERT statement: $sql"))
     // SQL views are not insertable datasources (CalciteInsertDmlTest
     // .testInsertIntoView; the view schema itself is caught at parse)
     if (graft.server.PlannerResources.isView(spark, stmt.target))
@@ -311,7 +315,8 @@ object SqlInsertDml {
 
     // the reference rejects ORDER BY on the outer SELECT (CLUSTERED BY owns
     // segment ordering); LIMIT/OFFSET wrappers above the Sort stay legal
-    var parsed = spark.sessionState.sqlParser.parsePlan(selectSql)
+    val selectPlan = spark.sessionState.sqlParser.parsePlan(selectSql)
+    var parsed = selectPlan
     var unwrapping = true
     while (unwrapping) parsed match {
       case l: org.apache.spark.sql.catalyst.plans.logical.GlobalLimit => parsed = l.child
@@ -328,12 +333,11 @@ object SqlInsertDml {
     // append doesn't scan the directory it is writing into
     // collectWithSubqueries: a target read hidden in an expression subquery
     // (WHERE x IN (SELECT ... FROM target)) must also trigger checkpointing
-    val readsTarget = spark.sessionState.sqlParser.parsePlan(selectSql)
-      .collectWithSubqueries {
-        case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
-          r.multipartIdentifier.last.toLowerCase
-      }.contains(stmt.target.toLowerCase)
-    val selectedRaw = spark.sql(selectSql)
+    val readsTarget = selectPlan.collectWithSubqueries {
+      case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
+        r.multipartIdentifier.last.toLowerCase
+    }.contains(stmt.target.toLowerCase)
+    val selectedRaw = org.apache.spark.sql.graftbridge.CatalystBridge.ofRows(spark, selectPlan)
     // r17: with CLUSTERED BY, the range exchange's boundary sampling
     // executes the full SELECT once and the shuffle map stage executes it
     // AGAIN — a lazy checkpoint bounds the INSERT to ONE execution of the

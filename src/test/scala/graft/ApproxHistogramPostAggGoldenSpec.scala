@@ -17,7 +17,7 @@ class ApproxHistogramPostAggGoldenSpec extends SparkSpecBase {
   import spark.implicits._
 
   private lazy val ingested: DataFrame = {
-    val tsv = "/root/reference/extensions-core/histogram/src/test/resources/sample.data.tsv"
+    val tsv = ReferenceFixtures.path("extensions-core/histogram/src/test/resources/sample.data.tsv")
     val raw = spark.read.option("sep", "\t")
       .schema("ts STRING, market STRING, quality STRING, placement STRING, placementish STRING, index DOUBLE")
       .csv(tsv)

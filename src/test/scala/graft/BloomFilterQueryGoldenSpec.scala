@@ -24,7 +24,7 @@ import graft.plans.DruidBloomBytes
 class BloomFilterQueryGoldenSpec extends SparkSpecBase {
 
   private lazy val table: DataFrame = {
-    val tsv = "/root/reference/extensions-core/histogram/src/test/resources/sample.data.tsv"
+    val tsv = ReferenceFixtures.path("extensions-core/histogram/src/test/resources/sample.data.tsv")
     spark.read.option("sep", "\t")
       .schema("ts STRING, market STRING, quality STRING, placement STRING, placementish STRING, index DOUBLE")
       .csv(tsv)

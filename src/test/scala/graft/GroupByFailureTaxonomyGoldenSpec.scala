@@ -79,7 +79,10 @@ class GroupByFailureTaxonomyGoldenSpec extends SparkSpecBase {
   test("the facade renders the trip as the reference's envelope: 400, " +
       "error 'Resource limit exceeded', errorClass " +
       "org.apache.druid.query.ResourceLimitExceededException") {
-    val facade = graft.server.HttpFacade.start(spark, _ => testIndex)
+    // load the fixture before the request, so a missing file fails here
+    // with its own message instead of inside the error envelope
+    val table = testIndex
+    val facade = graft.server.HttpFacade.start(spark, _ => table)
     try {
       val client = HttpClient.newHttpClient()
       val req = HttpRequest.newBuilder(

@@ -47,7 +47,8 @@ class ITBroadcastJoinGoldenSpec extends SparkSpecBase {
   private lazy val ingested: DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft_bjoin").toString
     val spec = IngestSpec(
-      inputPath = "/root/reference/integration-tests/src/test/resources/data/union_query/wikipedia_index_data.json",
+      inputPath = ReferenceFixtures.path(
+        "integration-tests/src/test/resources/data/union_query/wikipedia_index_data.json"),
       inputFormat = "json",
       timeParseExpr = BatchIngest.timestampSpec("timestamp", "iso"),
       segmentGranularity = "P1Y",

@@ -28,8 +28,8 @@ import graft.sources.BatchIngest.IngestSpec
   */
 class ITNestedQueryPushdownGoldenSpec extends SparkSpecBase {
 
-  private val wikitickerGz =
-    "/root/reference/examples/quickstart/tutorial/wikiticker-2015-09-12-sampled.json.gz"
+  private def wikitickerGz: String =
+    ReferenceFixtures.path("examples/quickstart/tutorial/wikiticker-2015-09-12-sampled.json.gz")
 
   private lazy val wikiticker: DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft_wikiticker").toString

@@ -33,7 +33,8 @@ class ITUnionQueriesGoldenSpec extends SparkSpecBase {
   private lazy val table: DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft_union_it").toString
     val spec = IngestSpec(
-      inputPath = "/root/reference/integration-tests/src/test/resources/data/union_query/wikipedia_index_data.json",
+      inputPath = ReferenceFixtures.path(
+        "integration-tests/src/test/resources/data/union_query/wikipedia_index_data.json"),
       inputFormat = "json",
       timeParseExpr = BatchIngest.timestampSpec("timestamp", "iso"),
       segmentGranularity = "P1D",

@@ -121,6 +121,12 @@ class PlannerResourceAnalyzeGoldenSpec extends SparkSpecBase {
     assert(analyze(
       "SELECT SUBSTRING(dim2, CAST(? as BIGINT), CAST(? as BIGINT)) FROM druid.foo LIMIT ?") ==
       Set(read("foo", "DATASOURCE")))
+    // a ? inside a block comment or a string literal is not a parameter:
+    // the quote in the comment must not open a literal that would swallow
+    // the real ? after it
+    assert(analyze(
+      "SELECT dim1 FROM druid.foo /* it's ? */ WHERE dim2 = '?' LIMIT ?") ==
+      Set(read("foo", "DATASOURCE")))
   }
 
   test("testSysTables (:255) — resources only under authorizeSysTables") {

@@ -243,4 +243,22 @@ class SimilaritySpec extends SparkSpecBase {
       e, "vec_id", "v", "nrm", "bucket", minCosine = 0.2, saltCap = 1000000)
     assert(canon(unsplit) == ps)
   }
+
+  test("connectedComponents: null ids label alike on the driver path and " +
+      "the distributed loop") {
+    // a null endpoint joins no component: its edge is dropped, the other
+    // endpoint labels itself, and the null node is one (null, null) row
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (None, Some(7L)), (None, None),
+      (Some(3L), Some(1L))).toDF("id_a", "id_b")
+    def labels(): Seq[String] =
+      Similarity.connectedComponents(pairs).collect().map(_.toString).sorted.toSeq
+    val local = labels()
+    spark.conf.set("spark.graft.cc.localThreshold", "0")
+    val dist =
+      try labels()
+      finally spark.conf.unset("spark.graft.cc.localThreshold")
+    assert(local == dist)
+    assert(local == Seq("[1,1]", "[2,1]", "[3,1]", "[7,7]", "[null,null]"))
+  }
 }

@@ -19,14 +19,14 @@ import graft.operators.NativeQuery
   */
 class SketchSimpleDataGoldenSpec extends SparkSpecBase {
 
-  private val res =
-    "/root/reference/extensions-core/datasketches/src/test/resources"
+  private def res(file: String): String =
+    ReferenceFixtures.path(s"extensions-core/datasketches/src/test/resources/$file")
 
   private lazy val rollup: DataFrame = {
     val raw = spark.read
       .option("sep", "\t")
       .schema("ts STRING, product STRING, pty_country STRING")
-      .csv(s"$res/simple_test_data.tsv")
+      .csv(res("simple_test_data.tsv"))
       .select(to_timestamp(col("ts"), "yyyyMMddHH").cast("timestamp_ntz").as("__time"),
         col("product"), col("pty_country"))
     // ingest rollup per the aggregators json: per-(hour, product) theta
@@ -53,7 +53,7 @@ class SketchSimpleDataGoldenSpec extends SparkSpecBase {
     // (as an all-empty sketch column) on the rolled-up datasource, exactly
     // like the reference's ingested segments
     val json = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$res/$file")), java.nio.charset.StandardCharsets.UTF_8)
+      java.nio.file.Paths.get(res(file))), java.nio.charset.StandardCharsets.UTF_8)
     NativeQuery.run(spark, json, name => { assert(name == "test_datasource"); rollup })
   }
 

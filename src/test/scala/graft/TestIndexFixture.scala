@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   */
 object TestIndexFixture {
 
-  val TsvPath =
-    "/root/reference/processing/src/test/resources/druid.sample.numeric.tsv"
+  def TsvPath: String =
+    ReferenceFixtures.path("processing/src/test/resources/druid.sample.numeric.tsv")
 
   val Uniques9 = 9.019833517963864
   val Uniques2 = 2.000977198748901
