@@ -61,6 +61,10 @@ object TimeFunctions {
       PeriodParts(months, days, ms)
     case _ => throw new IllegalArgumentException(s"bad ISO period: $p")
   }
+  /** Exactly one week (P1W): the period whose origin-less buckets start
+    * on Monday, the ISO week start, instead of the epoch's 7-day grid. */
+  def isOneWeek(period: String): Boolean =
+    period.trim.toUpperCase(java.util.Locale.ENGLISH).matches("^P0*1W$")
   private def isCompound(parts: PeriodParts): Boolean =
     parts.months > 0 && (parts.days > 0 || parts.millis > 0)
 
@@ -100,8 +104,7 @@ object TimeFunctions {
     // week MULTIPLES (P2W) and origin-anchored weeks keep the 7-day grid
     // from the (epoch-default) origin like the reference's weeks().add path,
     // which the fixed-width arithmetic below already reproduces.
-    if (origin == null && period.trim.toUpperCase(java.util.Locale.ENGLISH)
-        .matches("^P0*1W$"))
+    if (origin == null && isOneWeek(period))
       return zonedRoundTrip(ts, null, tz)((t, _) =>
         date_trunc("week", t.cast("timestamp")))
     val fastOrigin = fastMonthOrigin(origin, tz)

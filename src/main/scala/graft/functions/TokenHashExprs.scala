@@ -80,6 +80,9 @@ object TokenHashExprs {
     if (n == 0) return null
     val mins = new Array[Long](sigLen)
     java.util.Arrays.fill(mins, Long.MaxValue)
+    // minhashCoef(j): a = 1000003*(j+1) % 2147483647, b = 7919*(j+1) % P
+    val a = Array.tabulate(sigLen)(j => (1000003L * (j + 1)) % 2147483647L)
+    val bb = Array.tabulate(sigLen)(j => (7919L * (j + 1)) % SimilarityFunctions.MinHashP)
     var seen = false
     var i = 0
     while (i < n) {
@@ -88,10 +91,7 @@ object TokenHashExprs {
         val h = Md5Hashing.first8(shingles.getUTF8String(i)) >>> 32
         var j = 0
         while (j < sigLen) {
-          // minhashCoef(j): a = 1000003*(j+1) % 2147483647, b = 7919*(j+1) % P
-          val a = (1000003L * (j + 1)) % 2147483647L
-          val bb = (7919L * (j + 1)) % SimilarityFunctions.MinHashP
-          val v = (a * h + bb) % SimilarityFunctions.MinHashP
+          val v = (a(j) * h + bb(j)) % SimilarityFunctions.MinHashP
           if (v < mins(j)) mins(j) = v
           j += 1
         }

@@ -46,70 +46,23 @@ import org.json4s._
   *
   * Like the reference (:96-104), only period granularities are supported,
   * and this port additionally requires the default UTC zone (the driver
-  * steps the spine with java.time, zone-naive).
+  * steps the spine on the UTC calendar, DruidTime.plus).
   */
 object MovingAverageQuery {
 
-  private def str(j: JValue): String = j match {
-    case JString(s) => s
-    case x => throw new IllegalArgumentException(s"expected string, got $x")
-  }
-  private def strOpt(j: JValue): Option[String] =
-    j match { case JString(s) => Some(s); case _ => None }
-  private def intOpt(j: JValue): Option[Int] = j match {
-    case JInt(n) => Some(n.toInt); case JLong(n) => Some(n.toInt)
-    case JDouble(d) => Some(d.toInt); case _ => None
-  }
-  private def arr(j: JValue): List[JValue] =
-    j match { case JArray(xs) => xs; case JNothing | JNull => Nil; case x => List(x) }
+  import NativeQuery.{arr, intOpt, str, strOpt}
 
-  // docs/querying/granularities.md period names (the subset that is a pure
-  // period; movingAverage itself requires PeriodGranularity)
-  private val NamedPeriods = Map(
-    "second" -> "PT1S", "minute" -> "PT1M", "fifteen_minute" -> "PT15M",
-    "thirty_minute" -> "PT30M", "hour" -> "PT1H", "day" -> "P1D",
-    "week" -> "P1W", "month" -> "P1M", "quarter" -> "P3M", "year" -> "P1Y")
-
-  private def periodOf(j: JValue): String = j match {
-    case JString(name) =>
-      NamedPeriods.getOrElse(name.toLowerCase(java.util.Locale.ENGLISH), name)
-    case o if strOpt(o \ "type").contains("period") =>
-      strOpt(o \ "timeZone").filterNot(z => z == "UTC" || z == "Etc/UTC").foreach { z =>
+  /** The period of a movingAverage granularity: period granularities only
+    * (MovingAverageQueryRunner.java:96-104), in the default UTC zone. */
+  private def periodOf(j: JValue): String = DruidTime.granularity(j) match {
+    case PeriodGranularity(p, _, tz) =>
+      Option(tz).filterNot(z => z == "UTC" || z == "Etc/UTC").foreach { z =>
         throw new UnsupportedOperationException(
           s"movingAverage supports the default UTC zone only (got timeZone [$z])")
       }
-      str(o \ "period")
-    case x => throw new IllegalArgumentException(
-      s"Only PeriodGranularity is supported for movingAverage queries (got $x)")
-  }
-
-  /** ISO-8601 period arithmetic on the driver (date part + optional time
-    * part, applied `times` times; negative steps back). */
-  private def addPeriod(t: java.time.LocalDateTime, period: String,
-      times: Int): java.time.LocalDateTime = {
-    val up = period.toUpperCase(java.util.Locale.ENGLISH)
-    val tIdx = up.indexOf('T')
-    val (datePart, timePart) =
-      if (tIdx < 0) (up, null)
-      else (up.substring(0, tIdx), "P" + up.substring(tIdx))
-    var out = t
-    if (datePart != "P" && datePart.length > 1)
-      out = out.plus(java.time.Period.parse(datePart).multipliedBy(times))
-    if (timePart != null)
-      out = out.plus(java.time.Duration.parse(timePart).multipliedBy(times.toLong))
-    out
-  }
-
-  private def parseInstant(s: String): java.time.LocalDateTime = {
-    val t = s.trim
-    try java.time.LocalDateTime.parse(t)
-    catch { case _: Exception =>
-      try java.time.OffsetDateTime.parse(t)
-        .withOffsetSameInstant(java.time.ZoneOffset.UTC).toLocalDateTime
-      catch { case _: Exception =>
-        java.time.LocalDate.parse(t).atStartOfDay()
-      }
-    }
+      p
+    case _ => throw new IllegalArgumentException(
+      s"Only PeriodGranularity is supported for movingAverage queries (got $j)")
   }
 
   private final case class Averager(tpe: String, name: String,
@@ -153,13 +106,10 @@ object MovingAverageQuery {
     // consume-once row iterator leaves those lookback buckets empty; this
     // port joins rows into every spine bucket by timestamp, so overlapped
     // lookback buckets see the real data.
-    val intervals = arr(q \ "intervals").map(str)
+    val intervals = DruidTime.intervals(q \ "intervals")
     require(intervals.nonEmpty, "movingAverage requires intervals")
-    val bounds = intervals.map { ivl =>
-      val Array(startStr, endStr) = ivl.split('/')
-      (parseInstant(startStr), parseInstant(endStr))
-    }
-    val extended = bounds.map { case (s, e) => (addPeriod(s, period, 1 - maxBuckets), e) }
+    val extended = intervals.map(i =>
+      i.copy(startMs = DruidTime.plus(i.startMs, period, 1 - maxBuckets)))
 
     // inner groupBy over the extended intervals: averager/limit/having
     // machinery stripped, everything else (dims/filter/aggs/postAggs/
@@ -170,7 +120,7 @@ object MovingAverageQuery {
     }
     val inner = JObject(innerFields ++ List(
       "queryType" -> JString("groupBy"),
-      "intervals" -> JArray(extended.map { case (s, e) => JString(s"$s/$e") })))
+      "intervals" -> JArray(extended.map(i => JString(i.iso)).toList)))
     val innerDf0 = runInner(inner)
     val dimNames = arr(q \ "dimensions").map {
       case JString(d) => d
@@ -189,15 +139,9 @@ object MovingAverageQuery {
     // output-sized, indices running ACROSS intervals
     val tsType = innerDf.schema(timeCol).dataType
     val flooredStarts = spark.range(1)
-      .select(extended.map { case (s, _) =>
-        PeriodGranularity(period)
-          .bucket(lit(java.sql.Timestamp.valueOf(s)).cast("timestamp_ntz"))
-      }: _*)
-      .head().toSeq.map {
-        case t: java.sql.Timestamp => t.toLocalDateTime
-        case t: java.time.LocalDateTime => t
-        case other => java.time.LocalDateTime.parse(other.toString.replace(' ', 'T'))
-      }
+      .select(extended.map(i => PeriodGranularity(period).bucket(lit(i.start))): _*)
+      .head().toSeq.map(_.asInstanceOf[java.time.LocalDateTime]
+        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli)
     // guard the driver-side spine: interval/period buckets. A mis-sized
     // query (years of PT1S buckets) must fail loudly, not OOM the driver —
     // the same class of guard as maxSubqueryRows (the window input is one
@@ -206,10 +150,10 @@ object MovingAverageQuery {
     // facade maps it to a 400-class bad-query error like the other
     // validation guards.
     val MaxSpineBuckets = 1000000
-    val spineTimes: Seq[java.time.LocalDateTime] =
-      flooredStarts.zip(extended).iterator.flatMap { case (floored, (_, end)) =>
-        Iterator.iterate(floored)(t => addPeriod(t, period, 1))
-          .takeWhile(_.isBefore(end))
+    val spineTimes: Seq[Long] =
+      flooredStarts.zip(extended).iterator.flatMap { case (floored, i) =>
+        Iterator.iterate(floored)(t => DruidTime.plus(t, period, 1))
+          .takeWhile(_ < i.endMs)
       }.take(MaxSpineBuckets + 1).toSeq
     if (spineTimes.size > MaxSpineBuckets)
       throw new IllegalArgumentException(
@@ -217,7 +161,7 @@ object MovingAverageQuery {
           s"(${intervals.size} interval(s) at period $period); coarsen the granularity")
     import spark.implicits._
     val spine = spineTimes.zipWithIndex
-      .map { case (t, i) => (java.sql.Timestamp.valueOf(t), i.toLong) }
+      .map { case (t, i) => (DruidTime.wallClock(t), i.toLong) }
       .toDF("__spine_ts", "__bucket_idx")
       .select(col("__spine_ts").cast(tsType).as("__k_ts"), col("__bucket_idx"))
 
@@ -288,10 +232,7 @@ object MovingAverageQuery {
     // trim the lookback rows back out: keep rows whose timestamp falls in
     // ANY reporting interval (MovingAverageQueryRunner.java:211-218 —
     // reportingIntervals.stream().anyMatch(contains))
-    val trimmed = withAveragers.where(bounds.map { case (s, e) =>
-      col(timeCol) >= lit(java.sql.Timestamp.valueOf(s)).cast(tsType) &&
-        col(timeCol) < lit(java.sql.Timestamp.valueOf(e)).cast(tsType)
-    }.reduce(_ || _))
+    val trimmed = withAveragers.where(intervals.map(_.containsTime(col(timeCol))).reduce(_ || _))
 
     // postAveragers: postAggregation syntax over aggs + averagers
     // (PostAveragerAggregatorCalculator.java) — the arithmetic subset

@@ -127,7 +127,7 @@ object NativeQuery {
       case "timeseries" =>
         TimeseriesQuery(
           timeColumn = timeCol,
-          granularity = granularity(q \ "granularity"),
+          granularity = DruidTime.granularity(q \ "granularity"),
           filter = filterOpt(q \ "filter", prepared.schema).orNull,
           // aggregator-less timeseries emits empty value maps (bucket rows
           // only), unlike the other query types' implicit count
@@ -143,7 +143,8 @@ object NativeQuery {
           // reference default: zero-fill unless skipEmptyBuckets set
           // (TimeseriesQueryEngine.java:131,210)
           skipEmptyBuckets = (q \ "context" \ "skipEmptyBuckets") == JBool(true),
-          fillIntervals = parseIntervals(q \ "intervals"),
+          fillIntervals = DruidTime.intervals(q \ "intervals")
+            .map(i => (i.start.toString, i.end.toString)),
           timestampResultField = strOpt(q \ "context" \ "timestampResultField")
         ).run(prepared).transform(finalizeAggs)
       case "topN" =>
@@ -228,7 +229,7 @@ object NativeQuery {
           // finalize sketches before the metric sort — ordering raw sketch
           // bytes would not match the reference's estimate comparators
           finalizeFn = finalizeAggs,
-          granularity = granularity(q \ "granularity"),
+          granularity = DruidTime.granularity(q \ "granularity"),
           timeColumn = timeCol
         ).run(prepared)
       case "groupBy" =>
@@ -241,7 +242,7 @@ object NativeQuery {
         // readable by aggregators (first/last keys, filtered aggs) and is
         // renamed back to the time column on the result.
         val granBucketName = "__gran_bucket"
-        val granDims: Seq[DimSpec] = granularity(q \ "granularity") match {
+        val granDims: Seq[DimSpec] = DruidTime.granularity(q \ "granularity") match {
           case AllGranularity => Nil
           case NoneGranularity =>
             Seq(ExprDim(col(timeCol).cast("timestamp_ntz"), granBucketName))
@@ -603,9 +604,8 @@ object NativeQuery {
             // (GroupByQueryRunnerTest.testGroupByNestedWithInnerQueryNumericsWithLongTime)
             val innerTimeCol = strOpt(o \ "query" \ "timeColumn").getOrElse("__time")
             if (s.columns.contains(innerTimeCol)) s
-            else parseIntervals(o \ "query" \ "intervals").headOption match {
-              case Some((start, _)) =>
-                s.withColumn(innerTimeCol, lit(start).cast("timestamp_ntz"))
+            else DruidTime.intervals(o \ "query" \ "intervals").headOption match {
+              case Some(i) => s.withColumn(innerTimeCol, lit(i.start))
               case None => s
             }
           }
@@ -765,85 +765,11 @@ object NativeQuery {
     case x => x.toString
   }
 
-  // Druid interval endpoints are ISO instants with an optional zone offset
-  // (Joda accepts Z, ±hh:mm, ±hhmm, ±hh). The session runs UTC, so offset
-  // endpoints convert to UTC wall time before the timestamp_ntz cast (which
-  // rejects zone designators); unparseable endpoints fail loudly instead of
-  // becoming null bounds that silently filter every row under ANSI-off.
-  private val OffsetEndpointFormats: Seq[java.time.format.DateTimeFormatter] = {
-    import java.time.format.{DateTimeFormatter, DateTimeFormatterBuilder}
-    def withOffset(pattern: String) = new DateTimeFormatterBuilder()
-      .append(DateTimeFormatter.ISO_LOCAL_DATE_TIME)
-      .appendOffset(pattern, "Z").toFormatter
-    Seq(DateTimeFormatter.ISO_OFFSET_DATE_TIME, withOffset("+HHmm"), withOffset("+HH"))
-  }
-
-  private def normEndpoint(s: String): String = {
-    val t = s.trim
-    val parsed = OffsetEndpointFormats.view.flatMap { f =>
-      try Some(java.time.OffsetDateTime.parse(t, f))
-      catch { case _: java.time.format.DateTimeParseException => None }
-    }.headOption
-    parsed match {
-      case Some(o) =>
-        o.withOffsetSameInstant(java.time.ZoneOffset.UTC).toLocalDateTime
-          .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS"))
-      case None =>
-        // no offset designator: bare dates / local datetimes are UTC already
-        if (t.matches("""\d{4}-\d{2}-\d{2}([T ]\d{2}:\d{2}(:\d{2}(\.\d+)?)?)?"""))
-          t.replace("T", " ")
-        // Joda (the reference's Intervals.of) also accepts reduced-precision
-        // ISO endpoints: bare years ("1970/2050" in
-        // ApproximateHistogramAggregationTest's query) and year-months
-        else if (t.matches("""\d{4}""")) s"$t-01-01"
-        else if (t.matches("""\d{4}-\d{2}""")) s"$t-01"
-        else throw new IllegalArgumentException(s"Unparseable interval endpoint: $s")
-    }
-  }
-
-  /** Shift a normalized endpoint by an ISO period (date and/or time part),
-    * for Joda-style `start/P1D` and `P1D/end` interval spellings
-    * (Intervals.of("2020-04-02T00:00:00.000Z/P1D")). */
-  private def shiftEndpoint(endpoint: String, period: String, sign: Int): String = {
-    val t = endpoint.trim.replace("T", " ")
-    val padded =
-      if (t.length == 10) t + " 00:00:00"
-      else if (t.length == 16) t + ":00"
-      else t
-    val ldt = java.time.LocalDateTime.parse(padded.replace(' ', 'T'))
-    val ti = period.indexOf('T')
-    val (datePart, timePart) =
-      if (ti < 0) (period, null)
-      else (period.substring(0, ti), "PT" + period.substring(ti + 1))
-    val d1 = if (datePart == "P") ldt
-             else ldt.plus(java.time.Period.parse(datePart).multipliedBy(sign))
-    val d2 = if (timePart == null) d1
-             else d1.plus(java.time.Duration.parse(timePart).multipliedBy(sign))
-    d2.format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS"))
-  }
-
   // ---- intervals / virtual columns ----
-  private def parseIntervals(j: JValue): Seq[(String, String)] = j match {
-    case JArray(is) => is.map { i =>
-      val Array(a, b) = (i match { case JString(s) => s; case x => str(x) }).split("/")
-      if (b.startsWith("P")) { val an = normEndpoint(a); (an, shiftEndpoint(an, b, 1)) }
-      else if (a.startsWith("P")) { val bn = normEndpoint(b); (shiftEndpoint(bn, a, -1), bn) }
-      else (normEndpoint(a), normEndpoint(b))
-    }
-    // QuerySegmentSpec object forms: {"type": "intervals"|"LegacySegmentSpec",
-    // "intervals": [...]} (MultipleIntervalSegmentSpec / LegacySegmentSpec —
-    // ScanQuerySpecTest.java:44-49 posts the object form)
-    case o: JObject => parseIntervals(o \ "intervals")
-    case _ => Nil
-  }
-
   private def applyIntervals(df: DataFrame, j: JValue, timeCol: String): DataFrame = {
-    val is = parseIntervals(j)
+    val is = DruidTime.intervals(j)
     if (is.isEmpty) df
-    else df.filter(is.map { case (a, b) =>
-      col(timeCol) >= lit(a).cast("timestamp_ntz") &&
-        col(timeCol) < lit(b).cast("timestamp_ntz")
-    }.reduce(_ || _))
+    else df.filter(is.map(_.containsTime(col(timeCol))).reduce(_ || _))
   }
 
   // virtualColumns accept the Druid math-expr dialect verbatim (identifier
@@ -1001,61 +927,6 @@ object NativeQuery {
         case t => t
       }
     }
-  }
-
-  // ---- granularity ----
-  private val NamedGranularities = Map(
-    "second" -> "PT1S", "minute" -> "PT1M", "fifteen_minute" -> "PT15M",
-    "thirty_minute" -> "PT30M", "hour" -> "PT1H", "day" -> "P1D",
-    "week" -> "P1W", "month" -> "P1M", "quarter" -> "P3M", "year" -> "P1Y")
-
-  /** An origin/timestamp JSON value as UTC epoch millis: a number, or an
-    * ISO instant (offset endpoints convert like interval endpoints). */
-  private def epochMillis(j: JValue): Long = j match {
-    case JInt(n) => n.toLong
-    case JLong(n) => n
-    case JString(s) =>
-      val norm = normEndpoint(s)
-      val padded =
-        if (norm.length == 10) norm + " 00:00:00"
-        else if (norm.length == 16) norm + ":00"
-        else norm
-      java.time.LocalDateTime
-        .parse(padded.replace(' ', 'T'))
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-    case x => throw new IllegalArgumentException(s"timestamp: $x")
-  }
-
-  private def granularity(j: JValue): Granularity = j match {
-    // named granularities resolve case-insensitively ("ALL"/"DAY" — the
-    // reference's Granularity.fromString upper-cases before valueOf; its
-    // own test resources post "granularity": "ALL")
-    case JString(name0) if NamedGranularities.contains(
-        name0.toLowerCase(java.util.Locale.ENGLISH)) ||
-        name0.equalsIgnoreCase("all") || name0.equalsIgnoreCase("none") =>
-      name0.toLowerCase(java.util.Locale.ENGLISH) match {
-        case "all" => AllGranularity
-        case "none" => NoneGranularity
-        case name => PeriodGranularity(NamedGranularities(name))
-      }
-    case JString(name) => PeriodGranularity(name)
-    case o if strOpt(o \ "type").contains("period") =>
-      PeriodGranularity(str(o \ "period"),
-        strOpt(o \ "origin").map(_.replace("T", " ")).orNull,
-        strOpt(o \ "timeZone").orNull)
-    // {"type": "duration", "duration": millis[, "origin": ...]}
-    // (DurationGranularity.java:41-47)
-    case o if strOpt(o \ "type").contains("duration") =>
-      DurationGranularity(
-        (o \ "duration") match {
-          case JInt(n) => n.toLong; case JLong(n) => n
-          case x => throw new IllegalArgumentException(s"duration: $x")
-        },
-        (o \ "origin") match { case JNothing | JNull => 0L; case x => epochMillis(x) })
-    case o if strOpt(o \ "type").contains("all") => AllGranularity
-    case o if strOpt(o \ "type").contains("none") => NoneGranularity
-    case JNothing | JNull => AllGranularity
-    case x => throw new IllegalArgumentException(s"granularity: $x")
   }
 
   // ---- dimension specs (§2.7) ----
@@ -1287,7 +1158,7 @@ object NativeQuery {
       }
       val t = (j \ "granularity") match {
         case JNothing | JNull | JString("none") => t0
-        case g => granularity(g) match {
+        case g => DruidTime.granularity(g) match {
           case AllGranularity | NoneGranularity => t0
           case pg: PeriodGranularity => pg.bucket(t0).cast("timestamp")
           case dg: DurationGranularity => dg.bucket(t0).cast("timestamp")
@@ -1639,13 +1510,8 @@ object NativeQuery {
           (c0.try_cast("long"), true)
         case _ => (c0, false)
       }
-      arr(j \ "intervals").map { i =>
-        val Array(a, b) = (i match { case JString(s) => s; case x => str(x) }).split("/")
-        if (asMillis)
-          c >= lit(isoToMillis(a)) && c < lit(isoToMillis(b))
-        else
-          c >= lit(a.replace("T", " ")).cast("timestamp_ntz") &&
-            c < lit(b.replace("T", " ")).cast("timestamp_ntz")
+      DruidTime.intervals(j \ "intervals").map { i =>
+        if (asMillis) i.containsMillis(c) else i.containsTime(c)
       }.reduce(_ || _)
     case "columnComparison" =>
       // ColumnComparisonFilter.overlap: each dimension's VALUE SET (every
@@ -2714,21 +2580,12 @@ object NativeQuery {
     case t => throw new IllegalArgumentException(s"having type: $t")
   }
 
-  /** ISO instant-ish interval endpoint → UTC epoch millis (driver-side). */
-  private def isoToMillis(s: String): Long = {
-    val t = s.replace(" ", "T")
-    val ldt =
-      if (t.contains("T")) java.time.LocalDateTime.parse(t.stripSuffix("Z"))
-      else java.time.LocalDate.parse(t).atStartOfDay()
-    ldt.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-  }
-
   // ---- json helpers ----
-  private def str(j: JValue): String = j match {
+  private[operators] def str(j: JValue): String = j match {
     case JString(s) => s
     case x => throw new IllegalArgumentException(s"expected string, got $x")
   }
-  private def strOpt(j: JValue): Option[String] = j match {
+  private[operators] def strOpt(j: JValue): Option[String] = j match {
     case JString(s) => Some(s); case _ => None
   }
   private def int(j: JValue): Int = j match {
@@ -2736,7 +2593,7 @@ object NativeQuery {
     case JDouble(d) => d.toInt
     case x => throw new IllegalArgumentException(s"expected int, got $x")
   }
-  private def intOpt(j: JValue): Option[Int] = j match {
+  private[operators] def intOpt(j: JValue): Option[Int] = j match {
     case JNothing | JNull => None; case x => Some(int(x))
   }
   private def dbl(j: JValue): Double = j match {
@@ -2749,7 +2606,7 @@ object NativeQuery {
   private def boolOpt(j: JValue): Option[Boolean] = j match {
     case JBool(b) => Some(b); case _ => None
   }
-  private def arr(j: JValue): List[JValue] = j match {
+  private[operators] def arr(j: JValue): List[JValue] = j match {
     case JArray(a) => a; case JNothing | JNull => Nil
     case x => List(x)
   }

@@ -8,7 +8,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
-import graft.operators.NativeQuery
+import graft.operators.{DruidTime, NativeQuery}
 import graft.sources.LookupRegistry
 import scala.util.{Success, Try}
 
@@ -805,14 +805,12 @@ object HttpFacade {
     def renderTs(v: JValue): JValue = if (dtAsLong) epochMillis(v) else isoMillis(v)
     // granularity-all buckets stamp with the first interval start, the
     // reference's bucket time for a single all-granularity bucket
-    val intervalStart: JValue = ((q \ "intervals") match {
-      case JArray(JString(iv) :: _) => JString(iv.split('/')(0))
-      case o: JObject => (o \ "intervals") match {
-        case JArray(JString(iv) :: _) => JString(iv.split('/')(0))
-        case _ => JNull
-      }
-      case _ => JNull
-    }) match { case s: JString => renderTs(s); case other => other }
+    val intervalStart: JValue = DruidTime.intervals(q \ "intervals").headOption match {
+      case Some(i) if dtAsLong => JLong(i.startMs)
+      case Some(i) => JString(IsoMillisOffset.withZone(ZoneOffset.UTC)
+        .format(Instant.ofEpochMilli(i.startMs)))
+      case None => JNull
+    }
     def rowTs(fields: List[JField]): JValue =
       fields.collectFirst { case (`timeCol`, v) => renderTs(v) }.getOrElse(JNull)
     def event(fields: List[JField]): JObject = JObject(fields.filterNot(_._1 == timeCol))

@@ -3,7 +3,7 @@ package graft.server
 import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
-import graft.operators.{AllGranularity, DurationGranularity, Granularity, NoneGranularity, PeriodGranularity}
+import graft.operators.DruidTime
 import graft.plans.RollupRewrite
 import graft.plans.RollupRewrite.{Catalog, RollupDef}
 
@@ -23,9 +23,9 @@ import graft.plans.RollupRewrite.{Catalog, RollupDef}
   *                         {"basePath", "rollupPath", "dimensions": [..],
   *                          "metricMap": {"base": [{"op", "column"}, ..]},
   *                          "countColumn", "timeColumn"?, "granularity"?}
-  *                         granularity: "P1D" | {"type": "period",
-  *                         "period", "origin"?, "timeZone"?} |
-  *                         {"type": "duration", "duration", "origin"?}
+  *                         granularity: any native query granularity
+  *                         (DruidTime.granularity: "P1D", "hour",
+  *                         {"type": "period", ...}, {"type": "duration", ...})
   *   DELETE /?basePath=… → drop every def for that base → {"removed": n}
   */
 object RollupResource {
@@ -107,7 +107,11 @@ object RollupResource {
       case JString(s) => Some(s)
       case _ => None
     }
-    val granularity = parseGranularity(spec \ "granularity")
+    // absent: the rollup declares no time granularity
+    val granularity = spec \ "granularity" match {
+      case JNothing | JNull => None
+      case g => Some(DruidTime.granularity(g))
+    }
     RollupDef(
       basePath = basePath,
       rollup = spark.read.parquet(rollupPath),
@@ -116,31 +120,6 @@ object RollupResource {
       countColumn = countColumn,
       timeColumn = timeColumn,
       granularity = granularity)
-  }
-
-  private def parseGranularity(j: JValue): Option[Granularity] = j match {
-    case JNothing | JNull => None
-    case JString("all") => Some(AllGranularity)
-    case JString("none") => Some(NoneGranularity)
-    case JString(p) => Some(PeriodGranularity(p))
-    case o: JObject => (o \ "type") match {
-      case JString("duration") =>
-        val dur = o \ "duration" match {
-          case JInt(n) => n.toLong
-          case JLong(n) => n
-          case _ => throw new IllegalArgumentException("duration granularity needs 'duration' millis")
-        }
-        val org = o \ "origin" match { case JInt(n) => n.toLong; case JLong(n) => n; case _ => 0L }
-        Some(DurationGranularity(dur, org))
-      case _ =>
-        val p = o \ "period" match {
-          case JString(s) => s
-          case _ => throw new IllegalArgumentException("period granularity needs 'period'")
-        }
-        def optStr(f: String): String = o \ f match { case JString(s) => s; case _ => null }
-        Some(PeriodGranularity(p, optStr("origin"), optStr("timeZone")))
-    }
-    case _ => throw new IllegalArgumentException("unrecognized granularity")
   }
 
   private def renderDef(d: RollupDef): JValue = JObject(
@@ -153,17 +132,7 @@ object RollupResource {
     }),
     "countColumn" -> JString(d.countColumn),
     "timeColumn" -> d.timeColumn.map(JString(_)).getOrElse(JNull),
-    "granularity" -> (d.granularity match {
-      case None => JNull
-      case Some(AllGranularity) => JString("all")
-      case Some(NoneGranularity) => JString("none")
-      case Some(PeriodGranularity(p, org, tz)) => JObject(
-        "type" -> JString("period"), "period" -> JString(p),
-        "origin" -> (if (org == null) JNull else JString(org)),
-        "timeZone" -> (if (tz == null) JNull else JString(tz)))
-      case Some(DurationGranularity(ms, org)) => JObject(
-        "type" -> JString("duration"), "duration" -> JLong(ms), "origin" -> JLong(org))
-    }))
+    "granularity" -> d.granularity.map(DruidTime.render).getOrElse(JNull))
 
   private def queryParam(query: String, name: String): Option[String] =
     query.split("&").filter(_.nonEmpty).collectFirst {

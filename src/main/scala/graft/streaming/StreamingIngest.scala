@@ -68,10 +68,10 @@ object StreamingIngest {
         // rollup-at-ingest: pre-aggregated rows keyed by (time bucket, dims),
         // exactly IncrementalIndex rollup=true semantics (IncrementalIndex
         // .java:1163 facts keyed by (truncated time, dims))
-        val period = r.granularity.period
+        val (width, startTime) = rollupWindow(r.granularity)
         val aggCols = r.aggregations.map(_.aliased)
         watermarked
-          .groupBy(window(col(spec.timeColumn), periodToInterval(period)).as("__window") +:
+          .groupBy(window(col(spec.timeColumn), width, width, startTime).as("__window") +:
             r.dimensions.map(col): _*)
           .agg(aggCols.head, aggCols.tail: _*)
           .withColumn(spec.timeColumn, col("__window.start"))
@@ -95,10 +95,26 @@ object StreamingIngest {
     stream.withWatermark(timeColumn, delay)
       .dropDuplicatesWithinWatermark(keyCols)
 
+  /** The event-time window (width, startTime) of a rollup granularity, on
+    * the grid of the batch bucket `PeriodGranularity.bucket`: fixed-width
+    * UTC periods tumble from the epoch, and exactly P1W starts 4 days later
+    * (the epoch is a Thursday) so its weeks start on Monday. window() needs
+    * a fixed length, so calendar periods (months, quarters, years, and
+    * compound periods carrying months), origins and zones are rejected
+    * rather than approximated. */
+  private[graft] def rollupWindow(g: PeriodGranularity): (String, String) = {
+    if (g.origin != null || g.timeZone != null ||
+        graft.functions.TimeFunctions.periodParts(g.period).months > 0)
+      throw new IllegalArgumentException(s"streaming rollup granularity $g: " +
+        "only fixed-width UTC periods without an origin bucket like batch ingestion")
+    (periodToInterval(g.period),
+      if (graft.functions.TimeFunctions.isOneWeek(g.period)) "4 days" else "0 seconds")
+  }
+
   private[graft] def periodToInterval(period: String): String = {
-    val p = graft.functions.TimeFunctions.parsePeriod(period)
-    if (p.months > 0) s"${p.months * 30} days" // window() needs fixed length
-    else s"${p.millis / 1000} seconds"
+    val p = graft.functions.TimeFunctions.periodParts(period)
+    require(p.months == 0, s"not a fixed-width period: $period")
+    s"${(p.days * 86400000L + p.millis) / 1000} seconds"
   }
 
   /** Exactly-once sink: parquet/delta-style files + checkpoint. The

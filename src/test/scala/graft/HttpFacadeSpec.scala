@@ -1280,4 +1280,45 @@ class HttpFacadeSpec extends SparkSpecBase {
     }
   }
 
+  test("rollup registration reads granularities like a native query: " +
+      "\"hour\" lists as period PT1H and a base-table TIME_FLOOR aggregate " +
+      "still answers; an unknown period is a 400") {
+    val facade = HttpFacade.start(spark, name => Sources.table(spark, sf(), name))
+    val basePath = s"${sf()}/orders.parquet"
+    val rollupPath =
+      s"${System.getProperty("java.io.tmpdir")}/graft_rollup_hour_${System.nanoTime()}"
+    def register(granularity: String): (Int, JValue) =
+      post(facade.port, "/druid/coordinator/v1/rollups", s"""{
+          "basePath": "$basePath", "rollupPath": "$rollupPath",
+          "dimensions": ["o_orderstatus"], "metricMap": {},
+          "countColumn": "cnt", "timeColumn": "o_orderdate",
+          "granularity": $granularity}""")
+    try {
+      import org.apache.spark.sql.functions._
+      Sources.table(spark, sf(), "orders").createOrReplaceTempView("orders")
+      val daily = """{"query": "SELECT TIME_FLOOR(o_orderdate, 'P1D') AS d, COUNT(*) AS cnt FROM orders GROUP BY 1 ORDER BY 1"}"""
+      val (s0, before) = post(facade.port, "/druid/v2/sql", daily)
+      assert(s0 == 200, s"got $before")
+      spark.read.parquet(basePath)
+        .groupBy(date_trunc("hour", col("o_orderdate")).cast("timestamp_ntz")
+          .as("o_orderdate"), col("o_orderstatus"))
+        .agg(count(lit(1)).as("cnt"))
+        .write.mode("overwrite").parquet(rollupPath)
+
+      val (rs, rj) = register("\"hour\"")
+      assert(rs == 200, s"got $rj")
+      val (_, gj) = request(facade.port, "GET", "/druid/coordinator/v1/rollups")
+      val listed = gj.asInstanceOf[JArray].arr.find(d => (d \ "basePath") == JString(basePath))
+      assert(listed.map(_ \ "granularity" \ "period").contains(JString("PT1H")), s"got $gj")
+
+      val (s1, after) = post(facade.port, "/druid/v2/sql", daily)
+      assert(s1 == 200, s"TIME_FLOOR aggregate over the base failed: $after")
+      assert(after == before)
+
+      assert(register("\"P1X\"")._1 == 400)
+    } finally {
+      graft.plans.RollupRewrite.globalCatalog.unregister(basePath)
+      facade.stop()
+    }
+  }
 }

@@ -186,4 +186,37 @@ class StreamingIngestSpec extends SparkSpecBase {
       assert(users.count(_ == "alice") == 2)
     } finally q.stop()
   }
+
+  test("streaming rollup buckets on the batch grid: P1W weeks start on " +
+      "Monday like BatchIngest.prepare; calendar periods are rejected") {
+    import graft.sources.BatchIngest
+    implicit val sqlCtx = spark.sqlContext
+    val aggs = Seq(Agg("cnt", count(lit(1))))
+    val weekly = Seq(Ev(t("2024-01-07 12:00:00"), "alice", 1.0), // Sunday
+      Ev(t("2024-01-08 12:00:00"), "alice", 2.0))                // Monday
+    def rendered(df: org.apache.spark.sql.DataFrame): Set[(String, String, Long)] =
+      df.select(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"), col("user"), col("cnt"))
+        .as[(String, String, Long)].collect().toSet
+    val batch = rendered(BatchIngest.prepare(
+      weekly.map(e => (e.ts, e.user, e.value)).toDF("ts", "user", "value"), BatchIngest.IngestSpec(
+      inputPath = "", timeColumn = "ts",
+      rollup = Some(BatchIngest.RollupSpec(PeriodGranularity("P1W"), Seq("user"), aggs)))))
+    val mem = MemoryStream[Ev]
+    val spec = StreamIngestSpec(timeColumn = "ts", lateMessageRejectionPeriod = "1 minutes",
+      rollup = Some(RollupSpec(PeriodGranularity("P1W"), Seq("user"), aggs)))
+    val q = StreamingIngest.transform(mem.toDF(), spec)
+      .writeStream.format("memory").queryName("weekly_out").outputMode("append").start()
+    try {
+      mem.addData(weekly: _*)
+      q.processAllAvailable()
+      mem.addData(Ev(t("2024-03-01 00:00:00"), "bob", 1.0)) // closes both weeks
+      q.processAllAvailable()
+      assert(rendered(spark.table("weekly_out")) == batch)
+      assert(batch.size == 2)
+    } finally q.stop()
+
+    val monthly = spec.copy(rollup = Some(RollupSpec(PeriodGranularity("P1M"), Seq("user"), aggs)))
+    val e = intercept[IllegalArgumentException](StreamingIngest.transform(mem.toDF(), monthly))
+    assert(e.getMessage.contains("P1M"))
+  }
 }
