@@ -115,7 +115,7 @@ case class DynamicZonedTime(
     parts.months == 0 && parts.days == 0 && parts.millis > 0
 
   private def subDayWidth: Long = {
-    val w = parts.days * 86400000L + parts.millis
+    val w = parts.fixedMillis
     if (parts.months == 0 && parts.days == 0 && parts.millis > 0 &&
         86400000L % parts.millis == 0) parts.millis
     else if (parts.months == 0 && w > 0 && w < 86400000L && 86400000L % w == 0) w

@@ -20,42 +20,32 @@ import org.apache.spark.sql.functions._
   */
 object TimeFunctions {
 
-  /** Parsed ISO-8601 period. Fixed-width periods (<= weeks) are handled in
-    * millisecond arithmetic; month/quarter/year periods in month arithmetic.
-    */
-  final case class IsoPeriod(months: Int, millis: Long) {
-    require(months == 0 || millis == 0,
-      "mixed month+sub-month periods are not supported (matches Druid PeriodGranularity single-field use)")
-  }
-
-  private val PeriodRe =
-    """^P(?:(\d+)Y)?(?:(\d+)M)?(?:(\d+)W)?(?:(\d+)D)?(?:T(?:(\d+)H)?(?:(\d+)M)?(?:(\d+)S)?)?$""".r
-
-  def parsePeriod(p: String): IsoPeriod = p.trim.toUpperCase match {
-    case PeriodRe(y, mo, w, d, h, mi, s) =>
-      def l(x: String): Long = if (x == null) 0L else x.toLong
-      val months = (l(y) * 12 + l(mo)).toInt
-      val ms = l(w) * 7 * 86400000L + l(d) * 86400000L +
-        l(h) * 3600000L + l(mi) * 60000L + l(s) * 1000L
-      if (months > 0 && ms > 0)
-        throw new IllegalArgumentException(s"mixed-unit period unsupported: $p")
-      if (months == 0 && ms == 0)
-        throw new IllegalArgumentException(s"empty period: $p")
-      IsoPeriod(months, ms)
-    case _ => throw new IllegalArgumentException(s"bad ISO period: $p")
-  }
-
-  /** COMPOUND split — (months, days, sub-day millis) with weeks folded into
-    * days — for the month+day mixes (P1M2D) the single-field IsoPeriod
-    * rejects. Joda PeriodGranularity handles these with calendar arithmetic
+  /** An ISO-8601 period split the way Joda's period arithmetic applies it:
+    * calendar months (years fold in), days (weeks fold in), then fixed
+    * sub-day millis. One field or several (P1M2D): Joda's PeriodGranularity
+    * steps compound periods with calendar arithmetic
     * (QueryGranularityTest.testCompoundPeriodTruncate). */
-  final case class PeriodParts(months: Int, days: Int, millis: Long)
+  final case class PeriodParts(months: Int, days: Int, millis: Long) {
+    /** Months together with days or sub-day time (P1M2D, P1MT1H). */
+    def isCompound: Boolean = months > 0 && (days > 0 || millis > 0)
+    /** The fixed-width part in millis: the whole period's width only when
+      * `months == 0`. */
+    def fixedMillis: Long = days * 86400000L + millis
+  }
+
+  // Joda's ISOPeriodFormat.standard(): seconds may carry a fraction
+  private val PeriodRe = ("""^P(?:(\d+)Y)?(?:(\d+)M)?(?:(\d+)W)?(?:(\d+)D)?""" +
+    """(?:T(?:(\d+)H)?(?:(\d+)M)?(?:(\d+)(?:[.,](\d+))?S)?)?$""").r
+
+  /** The one reader of an ISO period; fractions below a millisecond
+    * truncate. An empty or malformed period fails. */
   def periodParts(p: String): PeriodParts = p.trim.toUpperCase match {
-    case PeriodRe(y, mo, w, d, h, mi, s) =>
+    case PeriodRe(y, mo, w, d, h, mi, s, frac) =>
       def l(x: String): Long = if (x == null) 0L else x.toLong
       val months = (l(y) * 12 + l(mo)).toInt
       val days = (l(w) * 7 + l(d)).toInt
-      val ms = l(h) * 3600000L + l(mi) * 60000L + l(s) * 1000L
+      val ms = l(h) * 3600000L + l(mi) * 60000L + l(s) * 1000L +
+        (if (frac == null) 0L else (frac + "00").take(3).toLong)
       if (months == 0 && days == 0 && ms == 0)
         throw new IllegalArgumentException(s"empty period: $p")
       PeriodParts(months, days, ms)
@@ -65,8 +55,6 @@ object TimeFunctions {
     * on Monday, the ISO week start, instead of the epoch's 7-day grid. */
   def isOneWeek(period: String): Boolean =
     period.trim.toUpperCase(java.util.Locale.ENGLISH).matches("^P0*1W$")
-  private def isCompound(parts: PeriodParts): Boolean =
-    parts.months > 0 && (parts.days > 0 || parts.millis > 0)
 
   /** Druid `timestamp_floor(ts, period[, origin])`.
     *
@@ -86,8 +74,8 @@ object TimeFunctions {
     // +k·millis in the zone, exactly Joda's multiplied-period addition
     // (PeriodGranularity.truncate; QueryGranularityTest
     // .testCompoundPeriodTruncate) — via a per-row java.time search
-    val partsEarly = periodParts(period)
-    if (isCompound(partsEarly)) {
+    val p = periodParts(period)
+    if (p.isCompound) {
       val bridge = org.apache.spark.sql.graftbridge.CatalystBridge
       val originExpr =
         if (origin == null)
@@ -96,7 +84,7 @@ object TimeFunctions {
         else bridge.expression(millisOf(origin))
       return timestamp_millis(bridge.column(CompoundPeriodFloor(
         bridge.expression(millisOf(ts)), originExpr,
-        partsEarly.months, partsEarly.days, partsEarly.millis,
+        p.months, p.days, p.millis,
         if (tz == null) "UTC" else tz)))
     }
     // P1W with NO origin floors to the ISO week start — MONDAY
@@ -108,23 +96,22 @@ object TimeFunctions {
       return zonedRoundTrip(ts, null, tz)((t, _) =>
         date_trunc("week", t.cast("timestamp")))
     val fastOrigin = fastMonthOrigin(origin, tz)
-    val parsed = parsePeriod(period)
     // Sub-day fixed periods under an explicit zone floor on LOCAL fields
     // with the instant's own offset preserved (joda hourOfDay().roundFloor
     // semantics) — the wall-clock round trip below cannot distinguish the
     // two 01:xx hours at a DST fall-back, where the reference produces two
     // distinct hourly buckets (QueryGranularityTest.testPeriodDaylightSaving)
-    if (tz != null && origin == null && parsed.months == 0 &&
-        parsed.millis < 86400000L && 86400000L % parsed.millis == 0) {
+    val width = p.fixedMillis
+    if (tz != null && origin == null && p.months == 0 &&
+        width < 86400000L && 86400000L % width == 0) {
       val bridge = org.apache.spark.sql.graftbridge.CatalystBridge
       return timestamp_millis(bridge.column(ZonedSubDayFloor(
-        bridge.expression(millisOf(ts)), parsed.millis, tz)))
+        bridge.expression(millisOf(ts)), width, tz)))
     }
     zonedRoundTrip(ts, origin, tz) { (t, o) =>
-      val p = parsed
       if (p.months == 0) {
         val om = millisOf(o)
-        timestamp_millis(floorDiv(millisOf(t) - om, p.millis) * p.millis + om)
+        timestamp_millis(floorDiv(millisOf(t) - om, width) * width + om)
       } else fastOrigin match {
         // day-1/midnight origin (incl. the epoch default — the overwhelmingly
         // common case): the grid is month-aligned, so date_trunc covers the
@@ -241,20 +228,20 @@ object TimeFunctions {
     // compound period: ceil = floor unless t is off-boundary, then the
     // NEXT iterated boundary (TimestampCeilExprMacro over the same
     // granularity increment)
-    val partsEarly = periodParts(period)
-    if (isCompound(partsEarly)) {
+    val p = periodParts(period)
+    if (p.isCompound) {
       val flo = timeFloor(ts, period, origin, tz).cast("timestamp")
       return when(flo === ts.cast("timestamp"), flo)
         .otherwise(timeShift(flo, period, 1, tz))
     }
     val fastOrigin = fastMonthOrigin(origin, tz)
     zonedRoundTrip(ts, origin, tz) { (t, o) =>
-      val p = parsePeriod(period)
       if (p.months == 0) {
+        val width = p.fixedMillis
         val om = millisOf(o)
         val rel = millisOf(t) - om
-        val flo = floorDiv(rel, p.millis) * p.millis
-        timestamp_millis(when(rel === flo, rel).otherwise(flo + p.millis) + om)
+        val flo = floorDiv(rel, width) * width
+        timestamp_millis(when(rel === flo, rel).otherwise(flo + width) + om)
       } else {
         val n = p.months
         fastOrigin match {
@@ -284,7 +271,7 @@ object TimeFunctions {
   def timeShiftBy(ts: Column, period: String, step0: Column, tz: String = null): Column = {
     val step = step0.cast("int")
     val parts = periodParts(period)
-    if (isCompound(parts))
+    if (parts.isCompound)
       // TimestampShiftExprMacro: chronology.add(period, t, step) multiplies
       // the period's fields once — calendar month+day+millis interval
       return zonedRoundTrip(ts, defaultOrigin, tz) { (t, _) =>
@@ -292,10 +279,9 @@ object TimeFunctions {
           lit(parts.days) * step, lit(0), lit(0),
           lit(java.math.BigDecimal.valueOf(parts.millis / 1000.0)) * step)
       }
-    val p = parsePeriod(period)
-    if (p.months == 0) timestamp_millis(millisOf(ts) + lit(p.millis) * step)
+    if (parts.months == 0) timestamp_millis(millisOf(ts) + lit(parts.fixedMillis) * step)
     else zonedRoundTrip(ts, defaultOrigin, tz) { (t, _) =>
-      t + make_interval(lit(0), lit(p.months) * step, lit(0), lit(0), lit(0), lit(0), lit(0))
+      t + make_interval(lit(0), lit(parts.months) * step, lit(0), lit(0), lit(0), lit(0), lit(0))
     }
   }
 
@@ -514,7 +500,7 @@ case class CompoundPeriodSpine(
   */
 case class ZonedSubDayFloor(
     child: org.apache.spark.sql.catalyst.expressions.Expression,
-    periodMillis: Long, zoneId: String)
+    widthMillis: Long, zoneId: String)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
   with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   import java.time.{Instant, LocalDateTime, LocalTime, ZoneId, ZonedDateTime}
@@ -527,7 +513,7 @@ case class ZonedSubDayFloor(
   override protected def nullSafeEval(v: Any): Any = {
     val zdt = Instant.ofEpochMilli(v.asInstanceOf[Long]).atZone(zone)
     val local = zdt.toLocalDateTime
-    val periodNanos = periodMillis * 1000000L
+    val periodNanos = widthMillis * 1000000L
     val flooredNanos = (local.toLocalTime.toNanoOfDay / periodNanos) * periodNanos
     val flooredLocal = LocalDateTime.of(local.toLocalDate, LocalTime.ofNanoOfDay(flooredNanos))
     ZonedDateTime.ofLocal(flooredLocal, zone, zdt.getOffset).toInstant.toEpochMilli

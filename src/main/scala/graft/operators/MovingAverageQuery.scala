@@ -52,15 +52,16 @@ object MovingAverageQuery {
 
   import NativeQuery.{arr, intOpt, str, strOpt}
 
-  /** The period of a movingAverage granularity: period granularities only
-    * (MovingAverageQueryRunner.java:96-104), in the default UTC zone. */
-  private def periodOf(j: JValue): String = DruidTime.granularity(j) match {
-    case PeriodGranularity(p, _, tz) =>
+  /** A movingAverage granularity: period granularities only
+    * (MovingAverageQueryRunner.java:96-104), origin kept, in the default UTC
+    * zone. */
+  private def granularityOf(j: JValue): PeriodGranularity = DruidTime.granularity(j) match {
+    case g @ PeriodGranularity(_, _, tz) =>
       Option(tz).filterNot(z => z == "UTC" || z == "Etc/UTC").foreach { z =>
         throw new UnsupportedOperationException(
           s"movingAverage supports the default UTC zone only (got timeZone [$z])")
       }
-      p
+      g
     case _ => throw new IllegalArgumentException(
       s"Only PeriodGranularity is supported for movingAverage queries (got $j)")
   }
@@ -73,7 +74,8 @@ object MovingAverageQuery {
   def run(spark: SparkSession, q: JValue,
       runInner: JValue => DataFrame): DataFrame = {
     val timeCol = strOpt(q \ "timeColumn").getOrElse("__time")
-    val period = periodOf(q \ "granularity")
+    val granularity = granularityOf(q \ "granularity")
+    val period = granularity.period
 
     val averagers = arr(q \ "averagers").map { a =>
       val tpe = str(a \ "type")
@@ -133,13 +135,14 @@ object MovingAverageQuery {
     val innerDf =
       if (dimNames.isEmpty) innerDf0 else innerDf0.localCheckpoint(true)
 
-    // the bucket spine: floor each extended start to the period boundary
-    // with the ENGINE's own bucketing (one driver-side evaluation for all
-    // intervals), then step on the driver — Σ interval/period entries,
-    // output-sized, indices running ACROSS intervals
+    // the bucket spine: floor each extended start to the granularity's
+    // bucket, origin included — the inner groupBy's own bucketing (one
+    // driver-side evaluation for all intervals) — then step on the driver:
+    // Σ interval/period entries, output-sized, indices running ACROSS
+    // intervals
     val tsType = innerDf.schema(timeCol).dataType
     val flooredStarts = spark.range(1)
-      .select(extended.map(i => PeriodGranularity(period).bucket(lit(i.start))): _*)
+      .select(extended.map(i => granularity.bucket(lit(i.start))): _*)
       .head().toSeq.map(_.asInstanceOf[java.time.LocalDateTime]
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli)
     // guard the driver-side spine: interval/period buckets. A mis-sized

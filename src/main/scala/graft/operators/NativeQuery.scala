@@ -143,8 +143,7 @@ object NativeQuery {
           // reference default: zero-fill unless skipEmptyBuckets set
           // (TimeseriesQueryEngine.java:131,210)
           skipEmptyBuckets = (q \ "context" \ "skipEmptyBuckets") == JBool(true),
-          fillIntervals = DruidTime.intervals(q \ "intervals")
-            .map(i => (i.start.toString, i.end.toString)),
+          fillIntervals = DruidTime.intervals(q \ "intervals"),
           timestampResultField = strOpt(q \ "context" \ "timestampResultField")
         ).run(prepared).transform(finalizeAggs)
       case "topN" =>

@@ -214,7 +214,7 @@ final case class TimeseriesQuery(
     grandTotal: Boolean = false,
     limit: Option[Int] = None,
     skipEmptyBuckets: Boolean = false,
-    fillIntervals: Seq[(String, String)] = Nil,
+    fillIntervals: Seq[DruidTime.Interval] = Nil,
     // CTX_TIMESTAMP_RESULT_FIELD (TimeseriesQuery.java:54): materialize the
     // bucket timestamp as an extra LONG-millis result column, visible to
     // post-aggregators (testTimeseriesWithPostAggregatorReferencingTimestampResultField)
@@ -239,34 +239,26 @@ final case class TimeseriesQuery(
     val spine0 =
       if (fillIntervals.nonEmpty) {
         val rangeStep = fixedStepMs.filter { stepMs =>
-          fillIntervals.exists { case (a, b) =>
-            (for (am <- parseUtcMs(a); bm <- parseUtcMs(b))
-              yield (bm - am) / stepMs > TimeseriesQuery.SpineFoldThreshold)
-              .getOrElse(false)
-          }
+          fillIntervals.exists(i =>
+            (i.endMs - i.startMs) / stepMs > TimeseriesQuery.SpineFoldThreshold)
         }
+        // buckets covering [start, end): floor(end - 1ms) is the last bucket
+        def lastBucket(i: DruidTime.Interval): Column =
+          bucketFn(timestamp_millis(lit(i.endMs - 1)).cast("timestamp"))
         rangeStep match {
           case Some(stepMs) =>
-            fillIntervals.map { case (a, b) =>
-              val aMs = parseUtcMs(a).get
-              val bMs = parseUtcMs(b).get
-              // floor(a) + k*step enumerates the fixed-width buckets; +2
-              // covers the floor slack, the filter trims past floor(b-1ms)
-              val n = (bMs - 1 - aMs) / stepMs + 2
-              val lastBucket = bucketFn(timestamp_millis(lit(bMs - 1)).cast("timestamp"))
+            fillIntervals.map { i =>
+              // floor(start) + k*step enumerates the fixed-width buckets;
+              // +2 covers the floor slack, the filter trims past the last
+              val n = (i.endMs - 1 - i.startMs) / stepMs + 2
               grouped.sparkSession.range(n)
-                .select(bucketFn(timestamp_millis(lit(aMs) + col("id") * stepMs)
+                .select(bucketFn(timestamp_millis(lit(i.startMs) + col("id") * stepMs)
                   .cast("timestamp")).as(timeColumn))
-                .where(col(timeColumn) <= lastBucket)
+                .where(col(timeColumn) <= lastBucket(i))
             }.reduce(_ union _).distinct()
           case None =>
-            val seqs = fillIntervals.map { case (a, b) =>
-              val lo = bucketFn(lit(a).cast("timestamp"))
-              // buckets covering [a, b): floor(b - 1ms) is the last bucket
-              val hi = bucketFn(timestamp_millis(unix_millis(lit(b).cast("timestamp")) - 1)
-                .cast("timestamp"))
-              bucketSeq(lo, hi)
-            }
+            val seqs = fillIntervals.map(i =>
+              bucketSeq(bucketFn(timestamp_millis(lit(i.startMs))), lastBucket(i)))
             grouped.sparkSession.range(1)
               .select(explode(flatten(array(seqs: _*))).as(timeColumn)).distinct()
         }
@@ -303,21 +295,6 @@ final case class TimeseriesQuery(
     spine.join(grouped, Seq(timeColumn), "left")
       .select(col(timeColumn) +: fills: _*)
   }
-
-  /** An interval endpoint string as UTC epoch millis, when driver-parseable
-    * (NativeQuery normalizes endpoints to `yyyy-MM-dd[ HH:mm[:ss[.SSS]]]`
-    * UTC; DSL callers may pass anything `cast("timestamp")` accepts, in
-    * which case the guard simply stays off). */
-  private def parseUtcMs(s: String): Option[Long] =
-    try {
-      val t = s.trim.replace("T", " ")
-      val padded =
-        if (t.length == 10) t + " 00:00:00"
-        else if (t.length == 16) t + ":00"
-        else t
-      Some(java.time.LocalDateTime.parse(padded.replace(' ', 'T'))
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli)
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   def run(ds: DataFrame): DataFrame = {
     GraftSession.configure(ds.sparkSession)
@@ -449,13 +426,12 @@ final case class TimeseriesQuery(
         // ALL-granularity bucket timestamp = the first query interval's start
         val withTs = timestampResultField.fold(base)(fname =>
           base.withColumn(fname,
-            fillIntervals.headOption.flatMap(iv => parseUtcMs(iv._1))
-              .map(ms => lit(ms)).getOrElse(lit(null)).cast("long")))
+            fillIntervals.headOption.fold(lit(null))(i => lit(i.startMs)).cast("long")))
         val out = QueryCommon.applyPostAggs(withTs, postAggregations)
         limit.fold(out)(out.limit)
       case g: PeriodGranularity =>
         val p = TimeFunctions.periodParts(g.period)
-        if (p.months > 0 && (p.days > 0 || p.millis > 0)) {
+        if (p.isCompound) {
           // COMPOUND periods (P1M2D): the spine must step ITERATIVELY from
           // each boundary — exactly CompoundPeriodFloor's walk — because
           // sequence() computes boundary k as lo + k·step (multiplied
@@ -481,8 +457,7 @@ final case class TimeseriesQuery(
           // wall-clock stepping would visit only once.
           val step =
             if (p.months == 0)
-              make_dt_interval(lit(0), lit(0), lit(0),
-                lit((p.days * 86400000L + p.millis) / 1000.0))
+              make_dt_interval(lit(0), lit(0), lit(0), lit(p.fixedMillis / 1000.0))
             else
               make_ym_interval(lit(0), lit(p.months))
           val zoneStep =
@@ -501,9 +476,7 @@ final case class TimeseriesQuery(
                 x => to_utc_timestamp(x, z).cast("timestamp_ntz"))
           }
           val fixedStepMs =
-            if (p.months == 0 && zoneStep.isEmpty)
-              Some(p.days * 86400000L + p.millis)
-            else None
+            if (p.months == 0 && zoneStep.isEmpty) Some(p.fixedMillis) else None
           bucketedRun(g.bucket, Some((seqFn, fixedStepMs)))
         }
       case g: DurationGranularity =>
@@ -876,18 +849,18 @@ object Timewarp {
 
   /** The reference's periodic offset (TimewarpOperator.computeOffset,
     * TimewarpOperator.java:151-169): map instant `t` into the LAST whole
-    * `periodMillis` period ending inside the data interval, phase-aligned to
+    * `periodMs` period ending inside the data interval, phase-aligned to
     * `originMillis` (e.g. a Monday for week periods), with a DST correction
     * so wall-clock alignment survives an offset change between t and its
     * warped image. Returns the millis to ADD to t. */
-  def computeOffset(t: Long, dataIntervalEndMillis: Long, periodMillis: Long,
+  def computeOffset(t: Long, dataIntervalEndMillis: Long, periodMs: Long,
       originMillis: Long, tz: java.time.ZoneId): Long = {
-    var start = dataIntervalEndMillis - periodMillis
-    var startOffset = start % periodMillis - originMillis % periodMillis
-    if (startOffset < 0) startOffset += periodMillis
+    var start = dataIntervalEndMillis - periodMs
+    var startOffset = start % periodMs - originMillis % periodMs
+    if (startOffset < 0) startOffset += periodMs
     start -= startOffset
-    var tOffset = t % periodMillis - originMillis % periodMillis
-    if (tOffset < 0) tOffset += periodMillis
+    var tOffset = t % periodMs - originMillis % periodMs
+    if (tOffset < 0) tOffset += periodMs
     tOffset += start
     val rules = tz.getRules
     def zoneOff(x: Long): Long =
@@ -902,10 +875,10 @@ object Timewarp {
     * into the past and result timestamps back; shifting the DATA forward is
     * the same composition on one relation). */
   def overlay(ds: DataFrame, timeColumn: String, dataIntervalEndMillis: Long,
-      periodMillis: Long, originMillis: Long, nowMillis: Long,
+      periodMs: Long, originMillis: Long, nowMillis: Long,
       tz: java.time.ZoneId = java.time.ZoneOffset.UTC)(
       query: DataFrame => DataFrame): DataFrame = {
-    val offset = computeOffset(nowMillis, dataIntervalEndMillis, periodMillis,
+    val offset = computeOffset(nowMillis, dataIntervalEndMillis, periodMs,
       originMillis, tz)
     val shifted = ds.withColumn(timeColumn,
       timestamp_millis(unix_millis(col(timeColumn).cast("timestamp")) - offset)

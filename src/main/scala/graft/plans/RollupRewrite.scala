@@ -137,7 +137,7 @@ object RollupRewrite {
       case Some(DurationGranularity(w, _)) => w
       case Some(PeriodGranularity(p, _, _)) =>
         val parts = TimeFunctions.periodParts(p)
-        parts.months * 2629800000L + parts.days * 86400000L + parts.millis
+        parts.months * 2629800000L + parts.fixedMillis
       case None => Long.MaxValue
       case _ => 0L
     }
@@ -189,16 +189,13 @@ object RollupRewrite {
       case DurationGranularity(w, o) => Math.floorMod(ms - o, w) == 0L
       case PeriodGranularity(p, null, null) =>
         val parts = TimeFunctions.periodParts(p)
-        if (parts.months > 0 && (parts.days > 0 || parts.millis > 0)) false
+        if (parts.isCompound) false
         else if (parts.months > 0) {
           val ldt = java.time.LocalDateTime.ofInstant(
             java.time.Instant.ofEpochMilli(ms), java.time.ZoneOffset.UTC)
           ldt.getDayOfMonth == 1 && ldt.toLocalTime == java.time.LocalTime.MIDNIGHT &&
             Math.floorMod((ldt.getYear - 1970) * 12 + ldt.getMonthValue - 1, parts.months) == 0
-        } else {
-          val w = parts.days * 86400000L + parts.millis
-          Math.floorMod(ms, w) == 0L
-        }
+        } else Math.floorMod(ms, parts.fixedMillis) == 0L
       case _ => false
     }
 
@@ -293,9 +290,9 @@ object RollupRewrite {
       g match {
         case PeriodGranularity(p, null, null) =>
           val parts = TimeFunctions.periodParts(p)
-          if (parts.months > 0 && (parts.days > 0 || parts.millis > 0)) false
+          if (parts.isCompound) false
           else if (parts.months > 0) TruncMonths.get(u).exists(m1 => m1 % parts.months == 0)
-          else fixedOk(parts.days * 86400000L + parts.millis)
+          else fixedOk(parts.fixedMillis)
         case DurationGranularity(w0, 0L) => fixedOk(w0)
         case _ => false
       }
@@ -319,9 +316,6 @@ object RollupRewrite {
       "PT1S", "PT1M", "PT5M", "PT15M", "PT30M", "PT1H", "PT6H", "PT12H",
       "P1D", "P1W", "P1M", "P3M", "P1Y")
 
-    private def fixedWidthMs(p: TimeFunctions.PeriodParts): Long =
-      p.days * 86400000L + p.millis
-
     /** Is flooring by `period` (timeFloor semantics: fixed widths — P1W
       * included — anchor at the epoch default origin; month periods at
       * month starts) answerable over buckets stored at granularity `g`?
@@ -330,14 +324,13 @@ object RollupRewrite {
       val p = TimeFunctions.periodParts(period)
       def overFixed(w0: Long): Boolean =
         if (p.months > 0) 86400000L % w0 == 0 // month starts are midnights
-        else { val w1 = fixedWidthMs(p); w1 > 0 && w1 % w0 == 0 }
+        else p.fixedMillis % w0 == 0
       g match {
         case PeriodGranularity(p0, null, null) =>
           val s = TimeFunctions.periodParts(p0)
-          if (s.months > 0 && (s.days > 0 || s.millis > 0)) false
-          else if (s.months > 0)
-            p.months > 0 && fixedWidthMs(p) == 0 && p.months % s.months == 0
-          else overFixed(fixedWidthMs(s))
+          if (s.isCompound) false
+          else if (s.months > 0) p.months > 0 && !p.isCompound && p.months % s.months == 0
+          else overFixed(s.fixedMillis)
         case DurationGranularity(w0, 0L) => overFixed(w0)
         case _ => false
       }

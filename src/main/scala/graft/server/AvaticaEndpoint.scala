@@ -338,37 +338,16 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
         val fields = df.schema.fields
         st.metas = fields.toSeq.map(HttpFacade.colMeta)
         st.rows = HttpFacade.capRows(df, maxResultRows).toIndexedSeq.map { r =>
-          JArray(fields.indices.toList.map(i => cell(r.get(i), fields(i).dataType)))
+          JArray(fields.indices.toList.map(i =>
+            HttpFacade.cell(r.get(i), fields(i).dataType, AvaticaTimes)))
         }
       }
     }
   }
 
-  /** Avatica wire reps: TIMESTAMP → epoch millis, DATE → epoch days,
-    * everything else its JSON value (ColumnMetaData.Rep serialization). */
-  private def cell(v: Any, dt: DataType): JValue = v match {
-    case null => JNull
-    case ts: java.sql.Timestamp => JLong(ts.getTime)
-    case ts: java.time.LocalDateTime =>
-      JLong(ts.toInstant(java.time.ZoneOffset.UTC).toEpochMilli)
-    case d: java.sql.Date => JLong(d.toLocalDate.toEpochDay)
-    case d: java.time.LocalDate => JLong(d.toEpochDay)
-    case s: String => JString(s)
-    case b: Boolean => JBool(b)
-    case n: Byte => JInt(n.toInt)
-    case n: Short => JInt(n.toInt)
-    case n: Int => JInt(n)
-    case n: Long => JLong(n)
-    case n: Float => JDouble(n.toDouble)
-    case n: Double => JDouble(n)
-    case n: java.math.BigDecimal => JDecimal(BigDecimal(n))
-    case bytes: Array[Byte] =>
-      JString(java.util.Base64.getEncoder.encodeToString(bytes))
-    case seq: scala.collection.Seq[_] =>
-      val et = dt match { case ArrayType(e, _) => e; case _ => NullType }
-      JArray(seq.toList.map(cell(_, et)))
-    case other => JString(other.toString)
-  }
+  /** Avatica's time reps (DruidStatement.rep): TIMESTAMP → epoch millis,
+    * DATE → epoch days; every other cell reads as on `/druid/v2/sql`. */
+  private val AvaticaTimes = HttpFacade.TimeForm(JLong(_), JLong(_), d => JLong(d.toLong))
 
   // ---- response shapes ----
 

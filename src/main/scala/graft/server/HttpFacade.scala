@@ -2,10 +2,11 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.time.{Instant, LocalDateTime, OffsetDateTime, ZoneOffset}
+import java.time.{Instant, LocalDate, LocalDateTime, ZoneId, ZoneOffset}
 import java.time.format.DateTimeFormatter
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.operators.{DruidTime, NativeQuery}
@@ -760,37 +761,56 @@ object HttpFacade {
     rows
   }
 
-  /** Result rows as parsed JSON objects, under the row cap. */
-  private def materialize(df: DataFrame, maxRows: Int): Seq[JObject] =
-    capRows(df.toJSON, maxRows).toSeq.map(o => JsonMethods.parse(o).asInstanceOf[JObject])
+  /** How a transport writes time cells: the epoch millis of a TIMESTAMP,
+    * the UTC wall time of a TIMESTAMP_NTZ as epoch millis, and the epoch day
+    * of a DATE. */
+  private[server] final case class TimeForm(timestamp: Long => JValue,
+      local: Long => JValue, date: Int => JValue)
 
-  /** A timestamp cell's instant: an ISO instant or offset date-time as
-    * written, a local date-time or date (midnight) read in `zone`. */
-  private def instantOf(s: String, zone: java.time.ZoneId): Option[Instant] =
-    Try(Instant.parse(s)).orElse(Try(OffsetDateTime.parse(s).toInstant))
-      .orElse(Try(LocalDateTime.parse(s).atZone(zone).toInstant))
-      .orElse(Try(java.time.LocalDate.parse(s).atStartOfDay(zone).toInstant)).toOption
-
-  /** Druid renders bucket timestamps as ISO-8601 with milliseconds in UTC
-    * (e.g. "2012-01-01T00:00:00.000Z"); normalize Spark's rendering. */
-  private[server] def isoMillis(v: JValue): JValue = isoMillisZoned(v, ZoneOffset.UTC)
-
-  /** isoMillis in a query-specified zone: the offset renders instead of Z
-    * (the reference uses ISODateTimeFormat with the sqlTimeZone; DATE cells
-    * are that zone's midnight). */
   private val IsoMillisOffset = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
-  private[server] def isoMillisZoned(v: JValue, zone: java.time.ZoneId): JValue = v match {
-    case JString(s) => instantOf(s, zone).fold(v)(i => JString(IsoMillisOffset.withZone(zone).format(i)))
-    case other => other
-  }
+  private val IsoMillisLocal = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS")
 
-  /** serializeDateTimeAsLong (docs/querying/query-context.md:55 — "DateTime
-    * is serialized as long in the result returned by Broker"): render a
-    * timestamp cell as epoch millis instead of ISO-8601. Parsing mirrors
-    * [[isoMillis]]; unparseable cells pass through unchanged. */
-  private[server] def epochMillis(v: JValue): JValue = v match {
-    case JString(s) => instantOf(s, ZoneOffset.UTC).fold(v)(i => JLong(i.toEpochMilli))
-    case other => other
+  /** Druid's DateTime rendering: ISO-8601 millis with the zone's offset
+    * ("2012-01-01T00:00:00.000Z" in UTC). */
+  private def iso(ms: Long, zone: ZoneId): JValue =
+    JString(IsoMillisOffset.withZone(zone).format(Instant.ofEpochMilli(ms)))
+
+  private val LocalIso: Long => JValue =
+    ms => JString(IsoMillisLocal.format(DruidTime.wallClock(ms)))
+
+  /** Native event cells keep Spark's JSON time rendering: UTC ISO millis,
+    * zone-less ISO millis, `yyyy-MM-dd` dates. */
+  private val EventTimes = TimeForm(iso(_, ZoneOffset.UTC), LocalIso,
+    d => JString(LocalDate.ofEpochDay(d.toLong).toString))
+
+  /** The one result-cell converter: a collected `Row` value of type `dt` as
+    * JSON, its times in the transport's `form`. Everything else reads as
+    * Spark's JSON writer writes it: floats in their shortest decimal,
+    * decimals as doubles (scale 0 as integers), NaN and the infinities as
+    * strings, binary as base64, a struct's null fields left out. */
+  private[server] def cell(v: Any, dt: DataType, form: TimeForm): JValue = (v, dt) match {
+    case (null, _) => JNull
+    case (t: java.sql.Timestamp, _) => form.timestamp(t.getTime)
+    case (t: Instant, _) => form.timestamp(t.toEpochMilli)
+    case (t: LocalDateTime, _) => form.local(t.toInstant(ZoneOffset.UTC).toEpochMilli)
+    case (d: java.sql.Date, _) => form.date(d.toLocalDate.toEpochDay.toInt)
+    case (d: LocalDate, _) => form.date(d.toEpochDay.toInt)
+    case (f: Float, _) =>
+      if (f.isNaN || f.isInfinite) JString(f.toString) else JDouble(f.toString.toDouble)
+    case (d: Double, _) => if (d.isNaN || d.isInfinite) JString(d.toString) else JDouble(d)
+    case (d: java.math.BigDecimal, _) =>
+      if (d.scale == 0) JInt(BigInt(d.toBigInteger)) else JDouble(d.doubleValue)
+    case (n: Number, _) => JLong(n.longValue)
+    case (s: String, _) => JString(s)
+    case (b: Boolean, _) => JBool(b)
+    case (bytes: Array[Byte], _) => JString(java.util.Base64.getEncoder.encodeToString(bytes))
+    case (r: Row, st: StructType) => JObject(st.fields.indices.filterNot(r.isNullAt).toList
+      .map(i => st(i).name -> cell(r.get(i), st(i).dataType, form)))
+    case (seq: scala.collection.Seq[_], ArrayType(et, _)) =>
+      JArray(seq.map(cell(_, et, form)).toList)
+    case (m: scala.collection.Map[_, _], MapType(_, vt, _)) =>
+      JObject(m.toList.map { case (k, x) => String.valueOf(k) -> cell(x, vt, form) })
+    case (other, _) => JString(String.valueOf(other))
   }
 
   /** Wrap native rows in the reference's per-query-type result envelope. */
@@ -802,63 +822,73 @@ object HttpFacade {
     val dtAsLong = (q \ "context" \ "serializeDateTimeAsLong") match {
       case JBool(b) => b; case JString("true") => true; case _ => false
     }
-    def renderTs(v: JValue): JValue = if (dtAsLong) epochMillis(v) else isoMillis(v)
+    val renderTs: Long => JValue = if (dtAsLong) JLong(_) else iso(_, ZoneOffset.UTC)
+    val timeForm = TimeForm(renderTs, renderTs, d => renderTs(d * 86400000L))
+    // a row timestamp: typed times in the query's form, a string column
+    // read as a Druid instant (unparseable strings pass through)
+    def timeCell(v: Any, dt: DataType): JValue = v match {
+      case s: String => Try(renderTs(DruidTime.millis(JString(s)))).getOrElse(JString(s))
+      case _ => cell(v, dt, timeForm)
+    }
+    def eventCell(v: Any, dt: DataType): JValue = cell(v, dt, EventTimes)
     // granularity-all buckets stamp with the first interval start, the
     // reference's bucket time for a single all-granularity bucket
-    val intervalStart: JValue = DruidTime.intervals(q \ "intervals").headOption match {
-      case Some(i) if dtAsLong => JLong(i.startMs)
-      case Some(i) => JString(IsoMillisOffset.withZone(ZoneOffset.UTC)
-        .format(Instant.ofEpochMilli(i.startMs)))
-      case None => JNull
-    }
-    def rowTs(fields: List[JField]): JValue =
-      fields.collectFirst { case (`timeCol`, v) => renderTs(v) }.getOrElse(JNull)
-    def event(fields: List[JField]): JObject = JObject(fields.filterNot(_._1 == timeCol))
+    val intervalStart: JValue =
+      DruidTime.intervals(q \ "intervals").headOption.fold(JNull: JValue)(i => renderTs(i.startMs))
+    val fields = df.schema.fields
+    // object rows leave null cells out: the façade's documented native
+    // rendering
+    def obj(r: Row, f: (Any, DataType) => JValue): JObject =
+      JObject(fields.indices.filterNot(r.isNullAt).toList
+        .map(i => fields(i).name -> f(r.get(i), fields(i).dataType)))
+    val timeIdx = fields.indexWhere(_.name == timeCol)
+    def rowTs(r: Row): JValue =
+      if (timeIdx < 0 || r.isNullAt(timeIdx)) JNull
+      else timeCell(r.get(timeIdx), fields(timeIdx).dataType)
+    def event(r: Row): JObject = JObject(obj(r, eventCell).obj.filterNot(_._1 == timeCol))
 
-    val rows = materialize(df, maxRows)
+    val rows = capRows(df, maxRows).toList
     val queryType = (q \ "queryType") match { case JString(t) => t; case _ => "" }
     val out: JValue = queryType match {
       case "timeseries" =>
         // TimeseriesQueryQueryToolChest: {timestamp, result}; the grandTotal
         // row "will have no timestamp" (docs/querying/timeseriesquery.md)
-        JArray(rows.toList.map { o =>
-          JObject("timestamp" -> rowTs(o.obj), "result" -> event(o.obj))
-        })
+        JArray(rows.map(r => JObject("timestamp" -> rowTs(r), "result" -> event(r))))
       case "topN" =>
         // TopNQueryQueryToolChest: one bucket per granularity period; this
         // engine computes exact all-granularity topN → a single bucket
         JArray(List(JObject(
-          "timestamp" -> (rows.headOption.map(o => rowTs(o.obj)).getOrElse(JNull) match {
+          "timestamp" -> (rows.headOption.map(rowTs).getOrElse(JNull) match {
             case JNull => intervalStart; case ts => ts
           }),
-          "result" -> JArray(rows.toList.map(o => event(o.obj))))))
+          "result" -> JArray(rows.map(event)))))
       case "groupBy" | "movingAverage" =>
         // GroupByQueryQueryToolChest: {version: "v1", timestamp, event} —
         // movingAverage rows are groupBy-shaped Rows in the reference too
         // (MovingAverageQueryToolChest decorates the groupBy runner)
-        JArray(rows.toList.map { o =>
-          val ts = rowTs(o.obj) match { case JNull => intervalStart; case t => t }
-          JObject("version" -> JString("v1"), "timestamp" -> ts, "event" -> event(o.obj))
+        JArray(rows.map { r =>
+          val ts = rowTs(r) match { case JNull => intervalStart; case t => t }
+          JObject("version" -> JString("v1"), "timestamp" -> ts, "event" -> event(r))
         })
       case "search" =>
         // docs/querying/searchquery.md: one bucket of {dimension, value,
         // count} hits (all-granularity here, like topN)
         JArray(List(JObject(
           "timestamp" -> intervalStart,
-          "result" -> JArray(rows.toList))))
+          "result" -> JArray(rows.map(obj(_, eventCell))))))
       case "timeBoundary" =>
         // timeboundaryquery.md: [{timestamp: minTime, result: {min/max}}] —
         // boundary values render Druid-style ISO millis like the timestamp
-        JArray(rows.toList.map { o =>
-          val result = JObject(o.obj.map { case (k, v) => k -> renderTs(v) })
-          val fields = result.obj.toMap
-          val ts = fields.get("minTime").orElse(fields.get("maxTime")).getOrElse(JNull)
+        JArray(rows.map { r =>
+          val result = obj(r, timeCell)
+          val cells = result.obj.toMap
+          val ts = cells.get("minTime").orElse(cells.get("maxTime")).getOrElse(JNull)
           JObject("timestamp" -> ts, "result" -> result)
         })
       case "dataSourceMetadata" =>
         // datasourcemetadataquery.md: timestamp = maxIngestedEventTime
-        JArray(rows.toList.map { o =>
-          val result = JObject(o.obj.map { case (k, v) => k -> renderTs(v) })
+        JArray(rows.map { r =>
+          val result = obj(r, timeCell)
           val ts = result.obj.toMap.get("maxIngestedEventTime").getOrElse(JNull)
           JObject("timestamp" -> ts, "result" -> result)
         })
@@ -871,11 +901,9 @@ object HttpFacade {
         val columns = df.columns.toList
         val events: List[JValue] = (q \ "resultFormat") match {
           case JString("compactedList") =>
-            rows.toList.map { o =>
-              val m = o.obj.toMap
-              JArray(columns.map(c => m.getOrElse(c, JNull)))
-            }
-          case _ => rows.toList
+            rows.map(r => JArray(fields.indices.toList.map(i =>
+              eventCell(r.get(i), fields(i).dataType))))
+          case _ => rows.map(obj(_, eventCell))
         }
         JArray(List(JObject(
           "segmentId" -> JNull,
@@ -909,7 +937,7 @@ object HttpFacade {
           }
           (t, isMv)
         }
-        val maps = rows.toList.map(_.obj.toMap)
+        val maps = rows.map(obj(_, eventCell).obj.toMap)
         val colEntries: List[JField] = maps.map { m =>
           val name = m.get("column").collect { case JString(s) => s }.getOrElse("")
           val (tpe, mv) = druidType(
@@ -935,7 +963,7 @@ object HttpFacade {
           "timestampSpec" -> first.getOrElse("timestampSpec", JNull),
           "queryGranularity" -> first.getOrElse("queryGranularity", JNull),
           "rollup" -> first.getOrElse("rollup", JNull))))
-      case _ => JArray(rows.toList) // flat rows (documented simplification)
+      case _ => JArray(rows.map(obj(_, eventCell))) // flat rows (documented simplification)
     }
     JsonMethods.compact(JsonMethods.render(out))
   }
@@ -998,30 +1026,20 @@ object HttpFacade {
 
   private def render(df: DataFrame, format: String, header: Boolean,
       typesHeader: Boolean, sqlTypesHeader: Boolean, maxRows: Int,
-      zone: java.time.ZoneId = ZoneOffset.UTC): String = {
-    import org.apache.spark.sql.types.{DateType, TimestampType}
-    val metas = df.schema.fields.toSeq.map(colMeta)
-    // timestamp AND date cells render Druid-style ISO millis
-    // ("2000-01-01T00:00:00.000Z" — SqlResourceTest.testTimestampsInResponse
-    // expects CAST(__time AS DATE) as full midnight ISO too), not Spark's
-    // variable-precision JSON rendering; a sqlTimeZone context renders the
-    // zone's offset instead of Z ("1999-12-31T16:00:00.000-08:00")
-    val tsCols = df.schema.fields.collect {
-      case f if f.dataType == TimestampType || f.dataType == DateType => f.name
-    }.toSet
-    // toJSON drops null cells; the reference's object rows carry every
-    // column explicitly (ObjectWriter.writeRowField is called per column),
-    // so rebuild each row over the full schema, nulls included
-    val rows = materialize(df, maxRows).map { o =>
-      JObject(metas.toList.map { m =>
-        m.name -> (o \ m.name match {
-          case JNothing => JNull
-          case v if tsCols(m.name) => isoMillisZoned(v, zone)
-          case v => v
-        })
-      })
-    }
-    renderObjects(rows, metas, format, header, typesHeader, sqlTypesHeader)
+      zone: ZoneId = ZoneOffset.UTC): String = {
+    val fields = df.schema.fields.toList
+    // TIMESTAMP and DATE cells are Druid's ISO millis in the sqlTimeZone
+    // ("1999-12-31T16:00:00.000-08:00"); a DATE is that zone's midnight
+    // (SqlResourceTest.testTimestampsInResponse expects CAST(__time AS DATE)
+    // as a full midnight ISO too)
+    val form = TimeForm(iso(_, zone), LocalIso,
+      d => iso(LocalDate.ofEpochDay(d.toLong).atStartOfDay(zone).toInstant.toEpochMilli, zone))
+    // object rows carry every column, nulls included (the reference's
+    // ObjectWriter.writeRowField is called per column)
+    val rows = capRows(df, maxRows).toSeq.map(r => JObject(fields.zipWithIndex.map {
+      case (f, i) => f.name -> cell(r.get(i), f.dataType, form)
+    }))
+    renderObjects(rows, fields.map(colMeta), format, header, typesHeader, sqlTypesHeader)
   }
 
   /** Render result rows in one of ResultFormat.java's five formats, with
@@ -1050,11 +1068,7 @@ object HttpFacade {
         Seq(JArray(metas.toList.map(_.druidType.fold(JNull: JValue)(JString(_))))) else Nil) ++
       (if (sqlTypesHeader)
         Seq(JArray(metas.toList.map(m => JString(m.sqlType): JValue))) else Nil)
-    def rowArray(o: JObject): JValue =
-      JArray(cols.toList.map(c => o \ c match {
-        case JNothing => JNull // toJSON omits null cells
-        case v => v
-      }))
+    def rowArray(o: JObject): JValue = JArray(cols.toList.map(o \ _))
     def jsonLine(v: JValue): String = JsonMethods.compact(JsonMethods.render(v))
     format match {
       case "object" =>
@@ -1098,7 +1112,7 @@ object HttpFacade {
 
   private def csvRow(o: JObject, cols: Seq[String]): String = {
     val vals = cols.map(c => o \ c match {
-      case JNothing | JNull => "" // "CSV cannot differentiate null and empty string"
+      case JNull => "" // "CSV cannot differentiate null and empty string"
       case JString(s) => s
       case v => JsonMethods.compact(JsonMethods.render(v))
     })

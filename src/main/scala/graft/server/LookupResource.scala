@@ -87,15 +87,14 @@ object LookupResource {
   def isSingle(lookups: LookupRegistry, name: String): Boolean =
     singles.contains((lookups, name))
 
-  /** ISO-8601 period → millis (the reference's Joda Period pollPeriod;
-    * time-only and day-granularity forms both accepted). */
-  private def periodMillis(s: String): Long =
-    try java.time.Duration.parse(s).toMillis
-    catch {
-      case _: Exception =>
-        java.time.Period.parse(s).getDays * 86400000L +
-          java.time.Period.parse(s).getMonths * 2592000000L +
-          java.time.Period.parse(s).getYears * 31536000000L
+  /** The `pollPeriod` in millis, 0 when absent. The reference reads a Joda
+    * Period and takes `toStandardDuration`, which refuses months and years
+    * (their length varies); so does this. */
+  private def pollMillis(factory: JValue): Either[String, Long] =
+    str(factory \ "pollPeriod").fold[Either[String, Long]](Right(0L)) { p =>
+      scala.util.Try(graft.functions.TimeFunctions.periodParts(p)).toOption
+        .filter(_.months == 0).map(_.fixedMillis)
+        .toRight(s"pollPeriod [$p] is not a fixed-length ISO period")
     }
 
   private def str(v: JValue): Option[String] =
@@ -135,9 +134,11 @@ object LookupResource {
   private def registerSingle(spark: SparkSession, lookups: LookupRegistry,
       name: String, kind: String, container: JValue, factory: JValue,
       version: String): (Int, String) = {
-    parseFetcher(spark, factory \ "dataFetcher") match {
+    val parsed = pollMillis(factory)
+      .flatMap(p => parseFetcher(spark, factory \ "dataFetcher").map((p, _)))
+    parsed match {
       case Left(msg) => (400, error(msg))
-      case Right(fetcher) =>
+      case Right((period, fetcher)) =>
         // replacing an existing single lookup cancels its poll task and
         // closes the old instance
         singles.remove((lookups, name)).foreach(cancelEntry)
@@ -153,7 +154,6 @@ object LookupResource {
               Some(new graft.sources.SingleLookup.LoadingLookup(
                 fetcher, parsePolicy(factory \ "loadingCacheSpec"))), None)
           case "pollingLookup" =>
-            val period = str(factory \ "pollPeriod").map(periodMillis).getOrElse(0L)
             val polling = new graft.sources.SingleLookup.PollingLookup(
               spark, name, fetcher, period, lookups)
             // fixed-delay refresh (pollPeriod == 0 → load-once, no task —

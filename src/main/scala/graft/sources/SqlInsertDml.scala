@@ -158,7 +158,7 @@ object SqlInsertDml {
           case TimeFloor(timeCol, period) =>
             require(timeCol == "__time",
               "First argument to TIME_FLOOR in PARTITIONED BY clause can only be __time")
-            graft.functions.TimeFunctions.parsePeriod(period) // validates
+            graft.functions.TimeFunctions.periodParts(period) // validates
             period
           case other => throw new IllegalArgumentException(
             s"Encountered '$other' after PARTITIONED BY. Expected HOUR, DAY, MONTH, " +

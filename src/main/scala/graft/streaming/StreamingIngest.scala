@@ -99,22 +99,22 @@ object StreamingIngest {
     * the grid of the batch bucket `PeriodGranularity.bucket`: fixed-width
     * UTC periods tumble from the epoch, and exactly P1W starts 4 days later
     * (the epoch is a Thursday) so its weeks start on Monday. window() needs
-    * a fixed length, so calendar periods (months, quarters, years, and
-    * compound periods carrying months), origins and zones are rejected
-    * rather than approximated. */
+    * a fixed length in whole seconds, so calendar periods (months,
+    * quarters, years, and compound periods carrying months), sub-second
+    * remainders, origins and zones are rejected rather than approximated. */
   private[graft] def rollupWindow(g: PeriodGranularity): (String, String) = {
-    if (g.origin != null || g.timeZone != null ||
-        graft.functions.TimeFunctions.periodParts(g.period).months > 0)
+    if (g.origin != null || g.timeZone != null)
       throw new IllegalArgumentException(s"streaming rollup granularity $g: " +
-        "only fixed-width UTC periods without an origin bucket like batch ingestion")
+        "only UTC periods without an origin bucket like batch ingestion")
     (periodToInterval(g.period),
       if (graft.functions.TimeFunctions.isOneWeek(g.period)) "4 days" else "0 seconds")
   }
 
   private[graft] def periodToInterval(period: String): String = {
     val p = graft.functions.TimeFunctions.periodParts(period)
-    require(p.months == 0, s"not a fixed-width period: $period")
-    s"${(p.days * 86400000L + p.millis) / 1000} seconds"
+    require(p.months == 0 && p.fixedMillis % 1000 == 0,
+      s"streaming rollup needs a fixed width in whole seconds: $period")
+    s"${p.fixedMillis / 1000} seconds"
   }
 
   /** Exactly-once sink: parquet/delta-style files + checkpoint. The

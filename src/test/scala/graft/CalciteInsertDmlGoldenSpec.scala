@@ -61,6 +61,15 @@ class CalciteInsertDmlGoldenSpec extends SparkSpecBase {
     }
   }
 
+  test("PARTITIONED BY TIME_FLOOR(__time, 'P1M1D') is accepted: Joda's Period reads " +
+      "compound periods") {
+    srcView()
+    val sql = """INSERT INTO dst_compound SELECT __time, dim1 FROM foo
+                |PARTITIONED BY TIME_FLOOR(__time, 'P1M1D')""".stripMargin
+    assert(SqlInsertDml.parse(sql).get.segmentGranularity == "P1M1D")
+    assert(SqlInsertDml.run(spark, sql, freshBase()).count() == 3)
+  }
+
   test("testInsertWithClusteredBy (:378) — ordinals, DESC, expressions") {
     srcView()
     val stmt = SqlInsertDml.parse(

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.json4s.JString
 import graft.operators._
 
 /** Zero-fill spine integrity for compound periods + the literal-fold guard.
@@ -46,7 +47,7 @@ class CompoundSpineSpec extends SparkSpecBase {
       timeColumn = "t",
       granularity = PeriodGranularity("P1M30D"),
       aggregations = Seq(Agg("cnt", count(lit(1)))),
-      fillIntervals = Seq(("2024-01-01 00:00:00", "2024-12-31 00:00:00"))
+      fillIntervals = DruidTime.intervals(JString("2024-01-01T00:00:00/2024-12-31T00:00:00"))
     ).run(df).collect()
     // every spine instant must be a fixpoint of the floor function
     val g = PeriodGranularity("P1M30D")
@@ -68,7 +69,7 @@ class CompoundSpineSpec extends SparkSpecBase {
       granularity = PeriodGranularity("PT1M"),
       aggregations = Seq(Agg("cnt", count(lit(1)))),
       // 90 days × 1440 = 129 600 buckets — far past SpineFoldThreshold
-      fillIntervals = Seq(("1994-01-01 00:00:00", "1994-04-01 00:00:00"))
+      fillIntervals = DruidTime.intervals(JString("1994-01-01T00:00:00/1994-04-01T00:00:00"))
     ).run(df)
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("Range"), s"expected a Range-based spine:\n${plan.take(2000)}")
@@ -87,7 +88,7 @@ class CompoundSpineSpec extends SparkSpecBase {
       timeColumn = "t",
       granularity = PeriodGranularity("P1D"),
       aggregations = Seq(Agg("cnt", count(lit(1)))),
-      fillIntervals = Seq(("1994-01-01 00:00:00", "1994-02-01 00:00:00"))
+      fillIntervals = DruidTime.intervals(JString("1994-01-01T00:00:00/1994-02-01T00:00:00"))
     ).run(df).collect()
     assert(rows.length == 31)
     assert(rows.map(_.getLong(1)).sum == 2L)

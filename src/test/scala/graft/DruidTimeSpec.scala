@@ -86,6 +86,22 @@ class DruidTimeSpec extends SparkSpecBase {
     }
   }
 
+  test("movingAverage buckets on a period granularity's origin, like groupBy") {
+    // daily events at 12:00; the granularity's days start at 12:00 too
+    val daily = (1 to 6).map(d => LocalDateTime.of(2020, 1, d, 12, 0)).toDF("__time")
+    val gran = """{"type": "period", "period": "P1D", "origin": "2020-01-01T12:00:00"}"""
+    def query(queryType: String, extra: String): Map[LocalDateTime, Long] =
+      NativeQuery.run(spark, s"""{"queryType": "$queryType", "dataSource": "ev",
+        "granularity": $gran, "intervals": ["2020-01-03T12:00:00/2020-01-06T12:00:00"],
+        "aggregations": [{"type": "count", "name": "cnt"}]$extra}""", _ => daily)
+        .collect().map(r => r.getAs[LocalDateTime]("__time") -> r.getAs[Long]("cnt")).toMap
+    val grouped = query("groupBy", "")
+    assert(grouped.keySet == (3 to 5).map(d => LocalDateTime.of(2020, 1, d, 12, 0)).toSet)
+    assert(query("movingAverage",
+      ""","averagers": [{"type": "longSum", "name": "s", "fieldName": "cnt", "buckets": 1}]""") ==
+      grouped)
+  }
+
   private val p1d = """{"type":"period","period":"P1D","origin":null,"timeZone":null}"""
 
   /** (JSON spelling or "" for absent, the granularity it means, how the

@@ -327,6 +327,22 @@ class SingleLookupConfigSpec extends SparkSpecBase {
     }
   }
 
+  test("a month pollPeriod is a 400: Joda's toStandardDuration refuses months") {
+    withDerby("graft_single_monthly", Seq("k" -> "v")) { url =>
+      val registry = new graft.sources.LookupRegistry
+      try {
+        val (st, body) = LookupResource.config(spark, registry, "POST",
+          "config/__default/monthly",
+          s"""{"lookupExtractorFactory": {"type": "pollingLookup", "pollPeriod": "P1M",
+              "dataFetcher": ${jdbcFetcherJson(url)}}}""")
+        assert(st == 400, body)
+        assert(body.contains("P1M"))
+        assert(!LookupResource.isSingle(registry, "monthly"))
+      } finally
+        LookupResource.config(spark, registry, "DELETE", "config/__default/monthly", "")
+    }
+  }
+
   test("bad single-lookup containers are 400s (missing/unsupported fetcher)") {
     val registry = new graft.sources.LookupRegistry
     assert(LookupResource.config(spark, registry, "POST", "config/__default/x",

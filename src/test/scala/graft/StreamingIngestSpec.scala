@@ -162,6 +162,14 @@ class StreamingIngestSpec extends SparkSpecBase {
     assert(StreamingIngest.periodToInterval("P1D") == "86400 seconds")
   }
 
+  test("a streaming rollup window is whole seconds: PT1H stays 3600 seconds, a " +
+      "sub-second remainder is rejected instead of truncated") {
+    assert(StreamingIngest.periodToInterval("PT1H") == "3600 seconds")
+    intercept[IllegalArgumentException](StreamingIngest.periodToInterval("PT1.5S"))
+    intercept[IllegalArgumentException](
+      StreamingIngest.rollupWindow(PeriodGranularity("PT0.2S")))
+  }
+
   test("streaming dedup drops key repeats within the watermark, state bounded") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]

@@ -87,9 +87,12 @@ class TimeFunctionsSpec extends SparkSpecBase {
     assert(micro(-1000000L) == -1L)  // exact boundary agrees both ways
   }
 
-  test("parsePeriod rejects garbage and mixed units") {
-    assertThrows[IllegalArgumentException](TimeFunctions.parsePeriod("banana"))
-    assertThrows[IllegalArgumentException](TimeFunctions.parsePeriod("P1M1D"))
-    assertThrows[IllegalArgumentException](TimeFunctions.parsePeriod("P"))
+  test("periodParts rejects garbage, reads compound and fractional periods") {
+    assertThrows[IllegalArgumentException](TimeFunctions.periodParts("banana"))
+    assertThrows[IllegalArgumentException](TimeFunctions.periodParts("P"))
+    assert(TimeFunctions.periodParts("P1M1D") == TimeFunctions.PeriodParts(1, 1, 0))
+    assert(TimeFunctions.periodParts("P1M1D").isCompound)
+    assert(TimeFunctions.periodParts("PT0.2S") == TimeFunctions.PeriodParts(0, 0, 200))
+    assert(TimeFunctions.periodParts("P1WT1H").fixedMillis == 7 * 86400000L + 3600000L)
   }
 }
