@@ -1,11 +1,26 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.CatalystBridge
 
-/** Engine session defaults as a LIBRARY concern, not a launcher concern.
+/** Engine session setup as a LIBRARY concern, not a launcher concern.
   *
-  * The engine's plan-shape guarantees depend on three runtime-settable SQL
-  * confs that Spark defaults differently:
+  * [[GraftSession.configure]] is the only code that sets session-level
+  * engine state. It runs once per session and installs:
+  *
+  *  - the conf defaults below, each only where the embedder left the key
+  *    unset — a key already present in the session's settings map
+  *    (builder option, sparkContext conf, or a prior `spark.conf.set`) is
+  *    left alone;
+  *  - the engine's SQL functions (`GraftSqlFunctions.register`);
+  *  - the HOF unroll optimizer rule (`HofUnroll.enable`), so a plan never
+  *    depends on which query ran first on the session;
+  *  - the analysis check that rejects a malformed time literal in a
+  *    comparison (`PlannerChecks.illegalTimeLiterals`), as Druid SQL does.
+  *    It reaches every analyzer built after the first `configure` — a
+  *    session's own is built on its first query.
+  *
+  * The conf defaults:
   *
   *  - `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` — the
   *    first/last/any pair folds (FirstLastFoldAgg/AnyFoldAgg) and every
@@ -20,23 +35,28 @@ import org.apache.spark.sql.SparkSession
   *    metadata count path.
   *  - `spark.sql.session.timeZone = UTC` — the reference's timeline is UTC
   *    epoch millis; granularity bucketing and timestamp rendering assume it.
-  *
-  * `configure` applies them wherever the engine takes ownership of a
-  * session (the HTTP facade, the Avatica endpoint, the native JSON entry
-  * point), idempotently and WITHOUT clobbering settings the embedder set
-  * explicitly — a key already present in the session's settings map
-  * (builder option, sparkContext conf, or a prior `spark.conf.set`) is
-  * left alone; only keys riding their registered Spark default are raised.
+  *  - `spark.sql.ansi.enabled = false` — the engine has one expression
+  *    dialect, Druid's: native engines do Java arithmetic (longs wrap, a
+  *    bad cast is null, nothing throws) and Druid SQL plans through
+  *    Calcite's lenient coercion to the same rules
+  *    (CalciteParameterQueryTest.java:623 binds VARCHAR 'wat' against a
+  *    float and expects 0 rows, not an error).
+  *  - `spark.sql.legacy.sizeOfNull = false` — with ANSI off Spark's legacy
+  *    `size(null) = -1` would apply; Druid's ARRAY_LENGTH/MV_LENGTH of null
+  *    is null.
   */
 object GraftSession {
-  /** (key, engine default) — all three are runtime-settable SQL confs. */
+  /** (key, engine default) — all runtime-settable SQL confs. */
   val defaults: Seq[(String, String)] = Seq(
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1000000",
     "spark.sql.parquet.aggregatePushdown" -> "true",
-    "spark.sql.session.timeZone" -> "UTC")
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.legacy.sizeOfNull" -> "false")
 
   /** Marker conf: present once this session has been configured, so the
-    * per-query entry points cost one map lookup after the first call. */
+    * entry points that take a caller's session cost one conf lookup after
+    * the first call. */
   private val configuredKey = "spark.graft.sessionDefaultsApplied"
 
   /** CPUs for a local session: `SPARK_GRAFT_CPUS`, else every core. */
@@ -62,9 +82,12 @@ object GraftSession {
     if (!spark.conf.getOption(configuredKey).contains("true")) synchronized {
       if (!spark.conf.getOption(configuredKey).contains("true")) {
         defaults.foreach { case (k, v) =>
-          if (!org.apache.spark.sql.graftbridge.CatalystBridge.confIsSet(spark, k))
+          if (!CatalystBridge.confIsSet(spark, k))
             spark.conf.set(k, v)
         }
+        graft.functions.GraftSqlFunctions.register(spark)
+        graft.plans.HofUnroll.enable(spark)
+        CatalystBridge.installCheckRule(spark, graft.plans.PlannerChecks.illegalTimeLiterals)
         spark.conf.set(configuredKey, "true")
       }
     }

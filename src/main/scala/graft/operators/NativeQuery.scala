@@ -60,14 +60,9 @@ object NativeQuery {
     * body once; subqueries recurse on their parsed form). */
   def run(spark: SparkSession, q0: JValue, resolve: Resolver,
       lookups: LookupRegistry): DataFrame = {
-    // engine session defaults (hash-agg fallback threshold, parquet agg
-    // pushdown, UTC) hold wherever a query enters — not just the launchers
+    // the engine's session setup (conf defaults, SQL functions, optimizer
+    // rules) holds wherever a query enters — not just the launchers
     graft.GraftSession.configure(spark)
-    graft.functions.GraftSqlFunctions.register(spark)
-    // math-expr apply-fn chains over literal arrays unroll to codegen-able
-    // scalars (plans.HofUnroll) — the interpreted-lambda tax is the native
-    // dialect's dominant per-row cost
-    graft.plans.HofUnroll.enable(spark)
     // the `finalize` context key (QueryContexts.isFinalize): false skips
     // AggregatorFactory.finalizeComputation so sketch aggregators emit their
     // RAW state (the merged collector / sketch bytes). The broker runs every
@@ -1637,15 +1632,6 @@ object NativeQuery {
     }
   }
 
-  /** The aggregator types whose finalizeComputation is non-identity: under
-    * a `finalize=false` context they must emit raw state instead. */
-  private val FinalizableAggTypes = Set("hyperUnique", "thetaSketch",
-    "arrayOfDoublesSketch", "quantilesDoublesSketch",
-    "quantilesDoublesSketchMerge", "HLLSketchBuild", "HLLSketchMerge",
-    // bloom finalizes bytes → base64; unfinalized (subquery) it stays
-    // BINARY so an outer bloom aggregate can MERGE it
-    "bloom")
-
   /** finalize=false context → default shouldFinalize to false on every
     * finalizable aggregator (explicit per-agg flags win). Recurses into
     * filtered wrappers. */
@@ -1659,7 +1645,7 @@ object NativeQuery {
             })
           case kv => kv
         })
-      case o: JObject if strOpt(o \ "type").exists(FinalizableAggTypes) &&
+      case o: JObject if strOpt(o \ "type").exists(Finalizers.contains) &&
           (o \ "shouldFinalize") == JNothing =>
         JObject(o.obj :+ ("shouldFinalize" -> JBool(false)))
       case x => x
@@ -1682,65 +1668,61 @@ object NativeQuery {
     }
   }
 
-  /** name → finalizer for every aggregator whose finalizeComputation is
-    * non-identity AND whose engine column holds raw state (sketch bytes).
-    * hyperUnique/cardinality finalize at eval time, so they are absent —
-    * a plain column reference already reads their finalized value. */
-  private def aggFinalizerPairs(j: JValue): Seq[(String, Column => Column)] = {
+  /** The aggregator types whose finalizeComputation is non-identity, with
+    * their output-time step (given the aggregator's spec). Under a
+    * `finalize=false` context every type here emits raw state instead
+    * ([[injectNoFinalize]]). hyperUnique finalizes at eval time — its
+    * aggregation reads shouldFinalize itself — so it has no output step,
+    * and cardinality (whose collector state is not exposed) is absent. */
+  private val Finalizers: Map[String, Option[JValue => Column => Column]] = {
     import graft.plans.SketchFunctions
+    def each(types: String*)(f: JValue => Column => Column) = types.map(_ -> Some(f))
+    Map[String, Option[JValue => Column => Column]]("hyperUnique" -> None) ++
+    // approxHistogram renders to the centroid summary unless a post-agg
+    // reads the raw state column (shouldFinalize contract)
+    each("approxHistogram", "approxHistogramFold")(_ => c => {
+      val bridge = org.apache.spark.sql.graftbridge.CatalystBridge
+      bridge.column(graft.plans.ApproxHistPostAgg(bridge.expression(c), "summary"))
+    }) ++
+    // incl. the OLD API names (OldApiSketchModule sketchBuild/Merge)
+    each("thetaSketch", "sketchBuild", "sketchMerge")(_ => SketchFunctions.thetaEstimate) ++
+    // bloom renders base64 of the BloomKFilter bytes
+    // (BloomFilterSerializersModule); unfinalized (a subquery) it stays
+    // BINARY so an outer bloom aggregate can MERGE it
+    each("bloom")(_ => base64) ++
+    // shouldFinalize=false keeps the serialized bytes — the shape a
+    // re-aggregating outer query (or a rollup sink) consumes
+    each("arrayOfDoublesSketch")(_ => SketchFunctions.tupleEstimate) ++
+    each("quantilesDoublesSketch", "quantilesDoublesSketchMerge")(_ => SketchFunctions.kllN) ++
+    // shouldFinalize=false keeps DataSketches HLL bytes for an outer
+    // HLLSketchMerge — same contract as the theta/tuple/kll families
+    each("HLLSketchBuild", "HLLSketchMerge") { a =>
+      val doRound = boolOpt(a \ "round").getOrElse(false)
+      c =>
+        // round=false must yield the fractional DataSketches estimate
+        // (HllSketchAggregatorFactory.finalizeComputation); round=true
+        // the rounded long. Computed from the graft expression, NOT
+        // the "hll_sketch_estimate" name: Spark 4's functions API
+        // resolves by name through the session registry, where the
+        // Druid-parity HLL_SKETCH_ESTIMATE override (fractional
+        // DOUBLE) would hijack this engine-internal call
+        if (doRound) round(SketchFunctions.hyperUniqueEstimate(c)).cast("long")
+        else SketchFunctions.hyperUniqueEstimate(c)
+    }
+  }
+
+  /** name → finalizer for every aggregator with an output-time step in
+    * [[Finalizers]] and shouldFinalize unset or true. */
+  private def aggFinalizerPairs(j: JValue): Seq[(String, Column => Column)] =
     arr(j).flatMap { a0 =>
       // a filtered wrapper finalizes like its inner aggregator
       val a = if (strOpt(a0 \ "type").contains("filtered")) a0 \ "aggregator" else a0
-      (strOpt(a0 \ "name") orElse strOpt(a \ "name")).toSeq.flatMap { name =>
-        strOpt(a \ "type") match {
-          // approxHistogram renders to the centroid summary unless a
-          // post-agg reads the raw state column (shouldFinalize contract)
-          case Some("approxHistogram" | "approxHistogramFold")
-              if boolOpt(a \ "shouldFinalize").getOrElse(true) =>
-            Seq(name -> ((c: Column) => {
-              val bridge = org.apache.spark.sql.graftbridge.CatalystBridge
-              bridge.column(graft.plans.ApproxHistPostAgg(bridge.expression(c), "summary"))
-            }))
-          // incl. the OLD API names (OldApiSketchModule sketchBuild/Merge)
-          case Some("thetaSketch" | "sketchBuild" | "sketchMerge")
-              if boolOpt(a \ "shouldFinalize").getOrElse(true) =>
-            Seq(name -> ((c: Column) => SketchFunctions.thetaEstimate(c)))
-          // bloom renders base64 of the BloomKFilter bytes
-          // (BloomFilterSerializersModule); unfinalized (a subquery) it
-          // stays BINARY so an outer bloom aggregate can MERGE it
-          case Some("bloom")
-              if boolOpt(a \ "shouldFinalize").getOrElse(true) =>
-            Seq(name -> ((c: Column) => base64(c)))
-          // shouldFinalize=false keeps the serialized bytes — the shape a
-          // re-aggregating outer query (or a rollup sink) consumes
-          case Some("arrayOfDoublesSketch")
-              if boolOpt(a \ "shouldFinalize").getOrElse(true) =>
-            Seq(name -> ((c: Column) => SketchFunctions.tupleEstimate(c)))
-          case Some("quantilesDoublesSketch" | "quantilesDoublesSketchMerge")
-              if boolOpt(a \ "shouldFinalize").getOrElse(true) =>
-            Seq(name -> ((c: Column) => SketchFunctions.kllN(c)))
-          // shouldFinalize=false keeps DataSketches HLL bytes for an outer
-          // HLLSketchMerge — same contract as the theta/tuple/kll families
-          case Some("HLLSketchBuild" | "HLLSketchMerge")
-              if boolOpt(a \ "shouldFinalize").getOrElse(true) =>
-            val doRound = boolOpt(a \ "round").getOrElse(false)
-            Seq(name -> ((c: Column) => {
-              // round=false must yield the fractional DataSketches estimate
-              // (HllSketchAggregatorFactory.finalizeComputation); round=true
-              // the rounded long. Computed from the graft expression, NOT
-              // the "hll_sketch_estimate" name: Spark 4's functions API
-              // resolves by name through the session registry, where the
-              // Druid-parity HLL_SKETCH_ESTIMATE override (fractional
-              // DOUBLE) would hijack this engine-internal call
-              if (doRound)
-                round(SketchFunctions.hyperUniqueEstimate(c)).cast("long")
-              else SketchFunctions.hyperUniqueEstimate(c)
-            }))
-          case _ => Nil
-        }
-      }
+      for {
+        name <- (strOpt(a0 \ "name") orElse strOpt(a \ "name")).toSeq
+        if boolOpt(a \ "shouldFinalize").getOrElse(true)
+        f <- strOpt(a \ "type").flatMap(Finalizers.get).flatten.toSeq
+      } yield name -> f(a)
     }
-  }
 
   // ---- aggregations (§2.6) ----
 

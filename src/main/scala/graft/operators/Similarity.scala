@@ -343,8 +343,9 @@ object Similarity {
     }
     // Clone the session and pin the ITERATION's shuffle width there: the
     // caller's session conf is never touched, so a query planned on it
-    // mid-loop (shared facade session) keeps its corpus-scale width.
-    val spark = spark0.newSession()
+    // mid-loop (shared facade session) keeps its corpus-scale width. The
+    // clone starts from Spark's defaults, so it gets the engine's setup.
+    val spark = graft.GraftSession.configure(spark0.newSession())
     // lift the checkpointed pairs into the cloned session (RDD blocks are
     // context-scoped, so this re-binds the plan without re-reading data)
     val pc2 = spark.createDataFrame(pc.rdd, pc.schema)

@@ -1,12 +1,28 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, ExprId, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.types.{StringType, TimestampNTZType, TimestampType}
 
 /** Plan-level validations mirroring the reference's PlannerConfig gates
   * (sql/.../planner/PlannerConfig.java). */
 object PlannerChecks {
+
+  /** A string literal that a comparison coerces to a time type must parse
+    * (reference: Calcite rejects it at validation, "Illegal TIMESTAMP
+    * constant" — CalciteQueryTest
+    * .testCountStarWithTimeFilterUsingStringLiteralsInvalid); Spark's
+    * lenient coercion would cast it to null and silently match nothing. An
+    * explicit CAST keeps its null. `GraftSession.configure` installs this
+    * as an analysis check. */
+  val illegalTimeLiterals: LogicalPlan => Unit = _.foreachWithSubqueries(
+    _.expressions.foreach(_.foreach {
+      case c @ Cast(Literal(v, _: StringType), TimestampType | TimestampNTZType, _, _)
+          if v != null && c.getTagValue(Cast.USER_SPECIFIED_CAST).isEmpty && c.eval() == null =>
+        throw new IllegalArgumentException(s"Illegal TIMESTAMP constant: '$v'")
+      case _ =>
+    }))
 
   /** `requireTimeCondition` (reference: PlannerConfig.isRequireTimeCondition;
     * DruidQuery throws CannotBuildQueryException "requireTimeCondition is

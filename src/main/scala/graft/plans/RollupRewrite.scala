@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
@@ -601,14 +601,7 @@ object RollupRewrite {
     }
   }
 
-  /** Use with SparkSession.builder().withExtensions(...) for new sessions. */
-  class Extensions extends (SparkSessionExtensions => Unit) {
-    def apply(e: SparkSessionExtensions): Unit =
-      e.injectOptimizerRule(_ => new RewriteRule(globalCatalog))
-  }
-
-  /** Shared catalog for extension-injected rules (extension instances are
-    * constructed by Spark, so the catalog must be reachable statically). */
+  /** The catalog behind the HTTP façade's rollup admin resource. */
   lazy val globalCatalog = new Catalog
 
   /** Attach to an already-running session via experimental optimizations.

@@ -257,7 +257,6 @@ object CoreQueries {
     // SumZeroSqlAggregator): EARLIEST/LATEST with the unique supplier key as
     // the ordering column (deterministic), SUM0 non-null on any slice ---
     "sql_agg_names" -> ((s, dir) => {
-      graft.functions.GraftSqlFunctions.register(s)
       Sources.table(s, dir, "supplier").createOrReplaceTempView("graft_supplier2")
       s.sql("""
         SELECT s_nationkey,
@@ -282,7 +281,6 @@ object CoreQueries {
     // --- Druid SQL surface end-to-end: registered function names compiled
     // through spark.sql (sql/.../planner/DruidOperatorTable.java analog) ---
     "sql_surface" -> ((s, dir) => {
-      graft.functions.GraftSqlFunctions.register(s)
       Sources.table(s, dir, "lineitem").createOrReplaceTempView("graft_lineitem")
       s.sql("""
         SELECT CAST(TIME_FLOOR(l_shipdate, 'P3M') AS TIMESTAMP_NTZ) AS qtr,

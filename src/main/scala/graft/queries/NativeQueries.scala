@@ -228,7 +228,6 @@ object NativeQueries {
     // same registry, through spark.sql
     "sql_lookup" -> ((s, dir) => {
       registerNationLookup(s, dir)
-      graft.functions.GraftSqlFunctions.register(s)
       Sources.table(s, dir, "supplier").createOrReplaceTempView("graft_supplier")
       s.sql("""
         SELECT LOOKUP(CAST(s_nationkey AS STRING), 'nation_name') AS nation,

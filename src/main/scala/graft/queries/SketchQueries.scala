@@ -97,7 +97,6 @@ object SketchQueries {
     // its coupon phase), DS_GET_QUANTILE(DS_QUANTILES_SKETCH) per group
     // pins the strictly-greater rule over per-segment balances
     "sql_sketch_acd" -> ((s, dir) => {
-      graft.functions.GraftSqlFunctions.register(s)
       Sources.table(s, dir, "customer").createOrReplaceTempView("graft_customer_acd")
       s.sql("""
         SELECT c_mktsegment,

@@ -318,22 +318,20 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
     st.sql = Some(sqlText)
     st.updateCount = -1L
     st.statementType = "SELECT"
-    SqlLifecycle.classify(sqlText) match {
+    SqlLifecycle.scoped(spark, sqlText, noContext)(SqlLifecycle.classify(sqlText) match {
       // JDBC executeUpdate surface: INSERT DML reports the published row
       // count as the update count; the signature carries the DML statement
-      // type (Meta.StatementType.INSERT). It runs outside the planning
-      // scope, under the session's own ANSI setting
+      // type (Meta.StatementType.INSERT)
       case ins: SqlLifecycle.Insert =>
         st.metas = Nil
         st.rows = Vector.empty
         st.statementType = "INSERT"
         st.updateCount = SqlLifecycle.insert(spark, ins)
-      case e: SqlLifecycle.Explain => SqlLifecycle.scoped(spark, sqlText, noContext) {
+      case e: SqlLifecycle.Explain =>
         st.metas = SqlLifecycle.ExplainColumns
         st.rows = SqlLifecycle.explainRows(spark, e).toIndexedSeq.map(o =>
           JArray(List(o \ "PLAN", o \ "RESOURCES")))
-      }
-      case _: SqlLifecycle.Query => SqlLifecycle.scoped(spark, sqlText, noContext) {
+      case _: SqlLifecycle.Query =>
         val df = SqlLifecycle.plan(spark, sqlText, noContext)
         val fields = df.schema.fields
         st.metas = fields.toSeq.map(HttpFacade.colMeta)
@@ -341,8 +339,7 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
           JArray(fields.indices.toList.map(i =>
             HttpFacade.cell(r.get(i), fields(i).dataType, AvaticaTimes)))
         }
-      }
-    }
+    })
   }
 
   /** Avatica's time reps (DruidStatement.rep): TIMESTAMP → epoch millis,

@@ -483,10 +483,13 @@ object HttpFacade {
         requestLog, defaults) { req =>
       val q = req.query.get
       // result cache first (broker result-level cache): a hit returns the
-      // rendered payload without planning or executing
+      // rendered payload without planning or executing; a miss plans and
+      // executes in the shared zone scope
       resultCache.get(req.cacheKey, req.flag("useCache", true), req.flag("populateCache", true)) {
-        envelope(q, planCache.get(req.cacheKey)(NativeQuery.run(spark, q, resolve, lookups)),
-          maxResultRows)
+        SqlLifecycle.SessionScope.run(spark, None) {
+          envelope(q, planCache.get(req.cacheKey)(NativeQuery.run(spark, q, resolve, lookups)),
+            maxResultRows)
+        }
       }
     })
 

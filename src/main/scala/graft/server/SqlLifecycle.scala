@@ -74,53 +74,26 @@ object SqlLifecycle {
     val groupByEnableMultiValueUnnesting: Boolean = flag("groupByEnableMultiValueUnnesting", true)
   }
 
-  /** Run `body` in the statement's planning scope: the engine's SQL
-    * functions registered, metadata snapshots refreshed when the text reads
-    * INFORMATION_SCHEMA or sys, and ANSI cast errors off. Druid SQL never
-    * throws on a malformed cast — a mismatched-type comparison plans to
-    * null / no-match (sql/.../planner/Calcites.java lenient coercion;
-    * CalciteParameterQueryTest.java:623 binds VARCHAR 'wat' against a float
-    * and expects 0 rows, not an error). Execution must run inside the scope
-    * too, so runtime casts don't throw either. A context sqlTimeZone also
-    * sets the session zone, exclusively ([[SessionScope]]). */
+  /** Run `body` in the statement's planning scope: metadata snapshots
+    * refreshed when the text reads INFORMATION_SCHEMA or sys, and the
+    * context's sqlTimeZone ([[SessionScope]]). Execution must run inside
+    * the scope too, so runtime casts and renders see the same zone. The
+    * engine's dialect (lenient casts, wrapping arithmetic) and functions
+    * are the session's own (`GraftSession.configure`). */
   def scoped[A](spark: SparkSession, sql: String, ctx: PlannerContext)(body: => A): A = {
-    graft.functions.GraftSqlFunctions.register(spark)
     SystemSchema.refreshIfMetadataQuery(spark, sql)
     SessionScope.run(spark, ctx.sqlTimeZone)(body)
   }
 
-  /** Guards the session-level conf toggles applied around each statement
-    * (ANSI off, the optional sqlTimeZone). The server runs requests on a
-    * thread pool, so naive save/set/restore races: a query could save
-    * ANOTHER query's toggled value and "restore" the session to it
-    * permanently. ANSI-off is reference-counted (first query in saves the
-    * true session value, last one out restores it); a query that changes
-    * the session time zone runs exclusively, since two zones cannot share
-    * one session. */
-  private object SessionScope {
+  /** The one session-conf write a request makes: its own sqlTimeZone. The
+    * server runs requests on a thread pool and two zones cannot share one
+    * session, so every query the façade and Avatica run — native, SQL,
+    * INSERT — runs in this scope: shared when it sets no zone, exclusive
+    * when it does. No request plans or executes under another request's
+    * zone. */
+  private[server] object SessionScope {
     private val rw = new java.util.concurrent.locks.ReentrantReadWriteLock
-    private var depth = 0
-    private var savedAnsi: Option[String] = None
 
-    private def enterAnsiOff(spark: SparkSession): Unit = synchronized {
-      if (depth == 0) {
-        savedAnsi = spark.conf.getOption("spark.sql.ansi.enabled")
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-      }
-      depth += 1
-    }
-    private def exitAnsiOff(spark: SparkSession): Unit = synchronized {
-      depth -= 1
-      if (depth == 0) restore(spark, "spark.sql.ansi.enabled", savedAnsi)
-    }
-    private def restore(spark: SparkSession, key: String, saved: Option[String]): Unit =
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-
-    /** Run with ANSI off — shared with concurrent callers — and, given a
-      * zone, with the session time zone set — exclusive. */
     def run[A](spark: SparkSession, zone: Option[ZoneId])(body: => A): A = {
       val lock = if (zone.isDefined) rw.writeLock else rw.readLock
       lock.lock()
@@ -129,10 +102,11 @@ object SqlLifecycle {
         spark.conf.set("spark.sql.session.timeZone", z.getId)
         prev
       }
-      enterAnsiOff(spark)
       try body finally {
-        exitAnsiOff(spark)
-        prevZone.foreach(restore(spark, "spark.sql.session.timeZone", _))
+        prevZone.foreach {
+          case Some(v) => spark.conf.set("spark.sql.session.timeZone", v)
+          case None => spark.conf.unset("spark.sql.session.timeZone")
+        }
         lock.unlock()
       }
     }

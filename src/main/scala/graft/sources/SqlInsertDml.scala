@@ -310,7 +310,6 @@ object SqlInsertDml {
     if (graft.server.PlannerResources.isView(spark, stmt.target))
       throw new IllegalArgumentException(
         s"Cannot INSERT into [view.${stmt.target}] because it is not a Druid datasource.")
-    graft.functions.GraftSqlFunctions.register(spark)
     val selectSql = rewriteExtern(spark, stmt.selectSql)
 
     // the reference rejects ORDER BY on the outer SELECT (CLUSTERED BY owns

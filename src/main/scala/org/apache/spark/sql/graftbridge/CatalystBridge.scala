@@ -28,6 +28,16 @@ object CatalystBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.contains(key)
 
+  /** Add an analysis check to the session's extensions unless it is there.
+    * It runs in every analyzer built afterwards: the session's own, built
+    * on its first query, and those of its `newSession()` children, which
+    * share its extensions. */
+  def installCheckRule(spark: org.apache.spark.sql.SparkSession,
+      rule: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan => Unit): Unit = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    if (!s.extensions.buildCheckRules(s).contains(rule)) s.extensions.injectCheckRule(_ => rule)
+  }
+
   /** Session FunctionRegistry (private[sql] on the classic session). */
   def functionRegistry(spark: org.apache.spark.sql.SparkSession)
       : org.apache.spark.sql.catalyst.analysis.FunctionRegistry =

@@ -92,10 +92,10 @@ class CalciteAggOrderingGoldenSpec extends SparkSpecBase {
       """SELECT ANY_VALUE(cnt), ANY_VALUE(m1), ANY_VALUE(m2), ANY_VALUE(dim1),
         |ANY_VALUE(cnt + 1), ANY_VALUE(m1 + 1), ANY_VALUE(dim1 || CAST(cnt AS STRING))
         |FROM (SELECT * FROM foo ORDER BY __time)""".stripMargin)
-    // Spark widens m1 + 1 to DOUBLE (Druid keeps FLOAT); value parity holds
+    // m1 + 1 stays FLOAT, as in Druid
     assert((r.getLong(0), r.getFloat(1), r.getDouble(2), r.getString(3),
-      r.getLong(4), r.getDouble(5), r.getString(6)) ==
-      ((1L, 1.0f, 1.0, "", 2L, 2.0, "1")))
+      r.getLong(4), r.getFloat(5), r.getString(6)) ==
+      ((1L, 1.0f, 1.0, "", 2L, 2.0f, "1")))
   }
 
   test("testAnyAggregatorsOnHeapNumericNulls") {

@@ -18,9 +18,7 @@ import org.apache.spark.sql.{Row, SparkSession}
 class CalciteExpressionsGoldenSpec extends SparkSpecBase {
 
   private lazy val druidSql: SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.ansi.enabled", "false")
-    graft.functions.GraftSqlFunctions.register(s)
+    val s = GraftSession.configure(spark.newSession())
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("__time", TimestampType, false), StructField("dim1", StringType, false),

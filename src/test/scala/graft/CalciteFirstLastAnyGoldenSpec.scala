@@ -52,10 +52,10 @@ class CalciteFirstLastAnyGoldenSpec extends SparkSpecBase {
         |EARLIEST_BY(dim1 || CAST(cnt AS STRING), MILLIS_TO_TIMESTAMP(l1))
         |FROM numfoo""".stripMargin)
     assert((r.getLong(0), r.getFloat(1), r.getString(2)) == ((1L, 1.0f, "")))
-    assert((r.getLong(3), r.getDouble(4), r.getString(5)) == ((2L, 2.0, "1")))
+    assert((r.getLong(3), r.getFloat(4), r.getString(5)) == ((2L, 2.0f, "1")))
     // EARLIEST_BY orders on l1-as-millis: the minimum non-null l1 (0) is row 3
     assert((r.getLong(6), r.getFloat(7), r.getString(8)) == ((1L, 3.0f, "2")))
-    assert((r.getLong(9), r.getDouble(10), r.getString(11)) == ((2L, 4.0, "21")))
+    assert((r.getLong(9), r.getFloat(10), r.getString(11)) == ((2L, 4.0f, "21")))
   }
 
   test("testLatestAggregators (:651)") {
@@ -70,11 +70,11 @@ class CalciteFirstLastAnyGoldenSpec extends SparkSpecBase {
         |LATEST_BY(dim1 || CAST(cnt AS STRING), MILLIS_TO_TIMESTAMP(l1))
         |FROM numfoo""".stripMargin)
     assert((r.getLong(0), r.getFloat(1), r.getString(2)) == ((1L, 6.0f, "abc")))
-    assert((r.getLong(3), r.getDouble(4), r.getString(5)) == ((2L, 7.0, "abc1")))
+    assert((r.getLong(3), r.getFloat(4), r.getString(5)) == ((2L, 7.0f, "abc1")))
     // LATEST_BY orders on l1-as-millis: the maximum non-null l1 (325323) is
     // row 2 — rows with a null ordering timestamp are skipped
     assert((r.getLong(6), r.getFloat(7), r.getString(8)) == ((1L, 2.0f, "10.1")))
-    assert((r.getLong(9), r.getDouble(10), r.getString(11)) == ((2L, 3.0, "10.11")))
+    assert((r.getLong(9), r.getFloat(10), r.getString(11)) == ((2L, 3.0f, "10.11")))
   }
 
   test("testEarliestAggregatorsNumericNulls / testLatestAggregatorsNumericNull — LATEST " +

@@ -217,8 +217,8 @@ class CalciteQueryRemainderGoldenSpec extends SparkSpecBase {
   test("testCountStarWithTimeFilterUsingStringLiteralsInvalid_isUnplannable (CalciteQueryTest.java:5575)") {
     registered
     // the reference rejects the malformed literal at plan time ("Illegal
-    // TIMESTAMP constant"); under Spark's ANSI dialect the cast of
-    // 'z2000-...' raises — error parity, different phase
+    // TIMESTAMP constant"); so does the engine's analysis check
+    // (PlannerChecks.illegalTimeLiterals)
     intercept[Exception] {
       spark.sql(
         """SELECT COUNT(*) FROM foo

@@ -40,7 +40,7 @@ class CalciteTimeArithGoldenSpec extends SparkSpecBase {
   private lazy val laSession: SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-    graft.functions.GraftSqlFunctions.register(s)
+    GraftSession.configure(s)
     registerFoo(s)
     s
   }

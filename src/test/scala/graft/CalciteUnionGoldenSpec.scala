@@ -117,8 +117,7 @@ class CalciteUnionGoldenSpec extends SparkSpecBase {
     // Druid-lenient session: the ANSI union coercion picks BIGINT (and then
     // refuses dim1=''); the lenient one widens the long branch to STRING,
     // matching Druid's string-dimension coercion direction
-    val lenient = spark.newSession()
-    lenient.conf.set("spark.sql.ansi.enabled", "false")
+    val lenient = GraftSession.configure(spark.newSession())
     lenient.createDataFrame(foo.collectAsList(), foo.schema).createOrReplaceTempView("foo")
     lenient.createDataFrame(numfoo.collectAsList(), numfoo.schema).createOrReplaceTempView("numfoo")
     val out = lenient.sql(

@@ -73,8 +73,8 @@ class CalciteUnplannableSupersetGoldenSpec extends SparkSpecBase {
         |__time = TIMESTAMP '2000-01-01 00:00:00'
         |OR __time = TIMESTAMP '2000-01-01 00:00:00' + INTERVAL '1' DAY""".stripMargin)
       .getLong(0) == 2L)
-    // error parity with "_isUnplannable": the malformed literal rejects in
-    // this ANSI session (the reference: "Illegal TIMESTAMP constant")
+    // error parity with "_isUnplannable": the malformed literal rejects at
+    // analysis (the reference: "Illegal TIMESTAMP constant")
     intercept[Exception](sql(
       """SELECT COUNT(*) FROM foo
         |WHERE __time >= 'z2000-01-01 00:00:00' AND __time < '2001-01-01 00:00:00'""".stripMargin))

@@ -11,14 +11,9 @@ import org.apache.spark.sql.Row
   * registered Druid SQL names. */
 class ExpressionsGoldenSpec extends SparkSpecBase {
 
-  // own session: ansi=false must not leak into the shared suite session
-  // (it flips size(NULL) semantics JVM-wide otherwise)
-  private lazy val druidSql: org.apache.spark.sql.SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.ansi.enabled", "false")
-    graft.functions.GraftSqlFunctions.register(s)
-    s
-  }
+  // own session, so the suite's temp views stay out of the shared one
+  private lazy val druidSql: org.apache.spark.sql.SparkSession =
+    GraftSession.configure(spark.newSession())
 
   private lazy val registered: Unit = {
     val s = druidSql

@@ -4,6 +4,8 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+import graft.operators.NativeQuery
 import graft.server.HttpFacade
 import graft.sources.Sources
 
@@ -25,15 +27,26 @@ class GraftSessionSpec extends SparkSpecBase {
     s
   }
 
-  private def post(port: Int, path: String, body: String): (Int, JValue) = {
-    val client = HttpClient.newHttpClient()
-    val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+  private def request(port: Int, path: String, body: String): HttpRequest =
+    HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
       .POST(HttpRequest.BodyPublishers.ofString(body))
       .header("Content-Type", "application/json")
       .build()
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
+
+  private def post(port: Int, path: String, body: String): (Int, JValue) = {
+    val resp = HttpClient.newHttpClient()
+      .send(request(port, path, body), HttpResponse.BodyHandlers.ofString())
     (resp.statusCode(), JsonMethods.parse(resp.body()))
   }
+
+  /** A one-row native scan of `m + 1` over an inline `m`. */
+  private def plusOneScan(m: Long): String =
+    s"""{"queryType": "scan",
+      "dataSource": {"type": "inline", "columnNames": ["m"], "columnTypes": ["LONG"],
+        "rows": [[$m]]},
+      "virtualColumns": [{"type": "expression", "name": "v", "expression": "m + 1",
+        "outputType": "LONG"}],
+      "columns": ["v"]}"""
 
   test("local(cpus) is the one local session shape: local[cpus], as many shuffle " +
       "partitions, UI off, nanos read as long, engine defaults applied") {
@@ -99,4 +112,77 @@ class GraftSessionSpec extends SparkSpecBase {
       assert(!plan.contains("SortAggregate"), s"EARLIEST fell back to sort:\n$plan")
     } finally facade.stop()
   }
+
+  test("one dialect on a fresh configured session: native long arithmetic wraps") {
+    val fresh = GraftSession.configure(spark.newSession())
+    val rows = NativeQuery.run(fresh, plusOneScan(Long.MaxValue),
+      (_: String) => fail("no table datasource")).collect()
+    assert(rows.map(r => r.getLong(r.fieldIndex("v"))).toSeq == Seq(Long.MinValue))
+  }
+
+  test("a fresh configured session unrolls a SQL HOF over a literal array before " +
+      "any native query has run") {
+    val fresh = GraftSession.configure(spark.newSession())
+    val df = fresh.sql(
+      "SELECT aggregate(array(id, id * 2, 3L), 0L, (acc, x) -> acc + x) AS t FROM range(3)")
+    val hofs = df.queryExecution.optimizedPlan.collect {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[HigherOrderFunction])) => p
+    }
+    assert(hofs.isEmpty, s"HOF not unrolled:\n${df.queryExecution.optimizedPlan}")
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(3L, 6L, 9L))
+  }
+
+  test("ARRAY_LENGTH / MV_LENGTH of a null array are null on /druid/v2/sql") {
+    val fresh = GraftSession.configure(spark.newSession())
+    val facade = HttpFacade.start(fresh, name => Sources.table(fresh, sf(), name))
+    try {
+      val (status, out) = post(facade.port, "/druid/v2/sql",
+        """{"query": "SELECT ARRAY_LENGTH(a) AS n, MV_LENGTH(a) AS m FROM VALUES (array('x')), (CAST(NULL AS ARRAY<STRING>)) AS t(a)",
+          "resultFormat": "array"}""")
+      assert(status == 200, JsonMethods.compact(JsonMethods.render(out)))
+      assert(JsonMethods.compact(JsonMethods.render(out)) == "[[1,1],[null,null]]")
+    } finally facade.stop()
+  }
+
+  test("a native façade request waits for an exclusive sqlTimeZone scope instead of " +
+      "running inside it") {
+    import GraftSessionSpec.{entered, release}
+    val fresh = GraftSession.configure(spark.newSession())
+    // executed by the SQL request, inside its exclusive zone scope (the
+    // latches are static: a task runs a deserialized copy of the closure)
+    fresh.udf.register("hold_zone_scope", org.apache.spark.sql.functions.udf { () =>
+      entered.countDown()
+      release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      1
+    }.asNondeterministic())
+    val facade = HttpFacade.start(fresh, name => Sources.table(fresh, sf(), name))
+    val client = HttpClient.newHttpClient()
+    try {
+      val sql = client.sendAsync(request(facade.port, "/druid/v2/sql",
+        """{"query": "SELECT hold_zone_scope() AS h",
+          "context": {"sqlTimeZone": "America/Los_Angeles"}}"""),
+        HttpResponse.BodyHandlers.ofString())
+      assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        s"SQL request never ran: ${Option(sql.getNow(null)).map(_.body())}")
+      val native = client.sendAsync(request(facade.port, "/druid/v2", plusOneScan(1L)),
+        HttpResponse.BodyHandlers.ofString())
+      Thread.sleep(1500)
+      assert(!native.isDone, s"native request ran inside another request's zone scope: " +
+        s"${Option(native.getNow(null)).map(_.body())}")
+      release.countDown()
+      val nativeResp = native.get(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(nativeResp.statusCode() == 200, nativeResp.body())
+      assert(sql.get(60, java.util.concurrent.TimeUnit.SECONDS).statusCode() == 200)
+      // the zone scope restored the session's own zone
+      assert(fresh.conf.get("spark.sql.session.timeZone") == "UTC")
+    } finally {
+      release.countDown()
+      facade.stop()
+    }
+  }
+}
+
+object GraftSessionSpec {
+  val entered = new java.util.concurrent.CountDownLatch(1)
+  val release = new java.util.concurrent.CountDownLatch(1)
 }

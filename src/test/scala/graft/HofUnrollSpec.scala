@@ -31,8 +31,11 @@ class HofUnrollSpec extends SparkSpecBase {
       .select(($"id" * 3 - 3).as("a"), pmod($"id", lit(3)).as("b"))
       .withColumn("n", when($"a" > 0, $"a")) // a nullable column
     def q() = base.selectExpr(s"$sqlExpr AS r")
+    // the session's own rules (GraftSession.configure installs this one)
+    // are restored afterwards
+    val installed = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_.isInstanceOf[HofUnroll.UnrollRule])
+      installed.filterNot(_.isInstanceOf[HofUnroll.UnrollRule])
     val interpreted = q().collect().map(r => String.valueOf(r.get(0))).toSeq
     HofUnroll.enable(spark)
     try {
@@ -43,10 +46,7 @@ class HofUnrollSpec extends SparkSpecBase {
         assert(hofCount(unrolled) > 0, s"$sqlExpr unexpectedly unrolled")
       val got = unrolled.collect().map(r => String.valueOf(r.get(0))).toSeq
       assert(got == interpreted, s"$sqlExpr: unrolled $got vs interpreted $interpreted")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_.isInstanceOf[HofUnroll.UnrollRule])
-    }
+    } finally spark.experimental.extraOptimizations = installed
   }
 
   test("fold over map over filter of a literal array (the apply-fn chain)") {
@@ -100,15 +100,10 @@ class HofUnrollSpec extends SparkSpecBase {
     val base = spark.range(8).select(($"id" + 1).as("a"), ($"id" % 4).as("b"))
       .select(array($"a", $"b", lit(3L)).as("arr"), rand().as("r"), $"a")
     HofUnroll.enable(spark)
-    try {
-      val q = base.selectExpr(
-        "aggregate(arr, 0L, (acc, x) -> acc + x) AS s", "r AS r1", "r AS r2")
-      val rows = q.collect()
-      assert(rows.forall(r => r.getDouble(1) == r.getDouble(2)),
-        "nondeterministic lower alias was duplicated by the unroll merge")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_.isInstanceOf[HofUnroll.UnrollRule])
-    }
+    val q = base.selectExpr(
+      "aggregate(arr, 0L, (acc, x) -> acc + x) AS s", "r AS r1", "r AS r2")
+    val rows = q.collect()
+    assert(rows.forall(r => r.getDouble(1) == r.getDouble(2)),
+      "nondeterministic lower alias was duplicated by the unroll merge")
   }
 }

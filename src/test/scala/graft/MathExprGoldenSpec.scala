@@ -21,12 +21,8 @@ import org.apache.spark.sql.Row
   */
 class MathExprGoldenSpec extends SparkSpecBase {
 
-  private lazy val druidSql: org.apache.spark.sql.SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.ansi.enabled", "false")
-    graft.functions.GraftSqlFunctions.register(s)
-    s
-  }
+  private lazy val druidSql: org.apache.spark.sql.SparkSession =
+    GraftSession.configure(spark.newSession())
 
   private lazy val registered: Unit = {
     val s = druidSql

@@ -1047,4 +1047,23 @@ class NativeQuerySpec extends SparkSpecBase {
       assert(s != null && s.toUpperCase.contains("SUMMARY"), s"$c -> $s")
     }
   }
+
+  test("a query datasource keeps raw sketch state for every finalizable spelling: " +
+      "sketchBuild/sketchMerge through a subquery merges like thetaSketch") {
+    def distinct(build: String, merge: String): Double = run(
+      s"""{
+        "queryType": "groupBy", "granularity": "all",
+        "dataSource": {"type": "query", "query": {
+          "queryType": "groupBy", "granularity": "all",
+          "dataSource": {"type": "inline", "columnNames": ["g", "v"],
+            "rows": [["x", "p"], ["x", "q"], ["y", "r"]]},
+          "dimensions": ["g"],
+          "aggregations": [{"type": "$build", "name": "sk", "fieldName": "v"}]
+        }},
+        "dimensions": [],
+        "aggregations": [{"type": "$merge", "name": "nd", "fieldName": "sk"}]
+      }""").head().getAs[Double]("nd")
+    assert(distinct("thetaSketch", "thetaSketch") == 3.0)
+    assert(distinct("sketchBuild", "sketchMerge") == 3.0)
+  }
 }

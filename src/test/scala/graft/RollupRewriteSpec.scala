@@ -24,7 +24,7 @@ class RollupRewriteSpec extends SparkSpecBase {
       dimensions = Set("l_returnflag", "l_linestatus"),
       metricMap = Map("l_quantity" -> Seq("sum" -> "sum_qty")),
       countColumn = "cnt"))
-    spark.experimental.extraOptimizations = Nil // clear any leaked rule
+    clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
     try {
       val q = spark.read.parquet(basePath)
@@ -40,7 +40,7 @@ class RollupRewriteSpec extends SparkSpecBase {
         .collect().map(_.toString).sorted
       assert(q.collect().map(_.toString).sorted.sameElements(expected))
     } finally {
-      spark.experimental.extraOptimizations = Nil
+      clearRollupRules()
     }
   }
 
@@ -53,12 +53,12 @@ class RollupRewriteSpec extends SparkSpecBase {
     val catalog = new Catalog
     catalog.register(RollupDef(basePath, spark.read.parquet(rollupDir),
       Set("l_returnflag"), Map.empty, "cnt"))
-    spark.experimental.extraOptimizations = Nil // clear any leaked rule
+    clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
     try {
       val row = spark.read.parquet(basePath).agg(count(lit(1)).as("n")).head()
       assert(!row.isNullAt(0) && row.getLong(0) == 0L)
-    } finally { spark.experimental.extraOptimizations = Nil }
+    } finally { clearRollupRules() }
   }
 
   test("an unrelated table sharing the path suffix is not redirected") {
@@ -75,14 +75,14 @@ class RollupRewriteSpec extends SparkSpecBase {
     val catalog = new Catalog
     catalog.register(RollupDef("t.parquet", spark.read.parquet(rollupDir),
       Set("k"), Map.empty, "cnt"))
-    spark.experimental.extraOptimizations = Nil // clear any leaked rule
+    clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
     try {
       // suffix-registered path must not hijack either table (exact match only)
       val n = spark.read.parquet(decoyDir + "/base/t.parquet")
         .agg(count(lit(1))).head().getLong(0)
       assert(n == 3L)
-    } finally { spark.experimental.extraOptimizations = Nil }
+    } finally { clearRollupRules() }
   }
 
   test("non-derivable aggregates are left untouched") {
@@ -91,7 +91,7 @@ class RollupRewriteSpec extends SparkSpecBase {
     catalog.register(RollupDef(basePath,
       spark.read.parquet(basePath).limit(1), // bogus rollup; must never be hit
       Set("l_returnflag"), Map.empty, "cnt"))
-    spark.experimental.extraOptimizations = Nil // clear any leaked rule
+    clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
     try {
       // avg is not derivable → no rewrite
@@ -103,7 +103,7 @@ class RollupRewriteSpec extends SparkSpecBase {
         .agg(sum($"l_quantity").as("s"))
       assert(q2.count() > 0)
     } finally {
-      spark.experimental.extraOptimizations = Nil
+      clearRollupRules()
     }
   }
 
@@ -119,7 +119,7 @@ class RollupRewriteSpec extends SparkSpecBase {
     catalog.register(RollupDef(basePath, spark.read.parquet(rollupDir),
       Set("l_returnflag", "l_linestatus"),
       Map("l_quantity" -> Seq("sum" -> "sum_qty")), "cnt"))
-    spark.experimental.extraOptimizations = Nil // clear any leaked rule
+    clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
     try {
       // WHERE on a dimension: redirected, with the predicate applied to the
@@ -158,7 +158,7 @@ class RollupRewriteSpec extends SparkSpecBase {
         .groupBy($"l_returnflag").agg(count(lit(1))).collect().map(_.toString).sorted
       assert(q3.collect().map(_.toString).sorted.sameElements(expect3))
     } finally {
-      spark.experimental.extraOptimizations = Nil
+      clearRollupRules()
     }
   }
 
@@ -174,7 +174,7 @@ class RollupRewriteSpec extends SparkSpecBase {
     catalog.register(RollupDef(basePath, spark.read.parquet(rollupDir),
       Set("o_orderpriority"), Map("o_totalprice" -> Seq("sum" -> "sum_price")), "cnt",
       timeColumn = Some("o_orderdate"), granularity = Some(g)))
-    spark.experimental.extraOptimizations = Nil // clear any leaked rule
+    clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
     try {
       // month coarsening (P1M is a multiple of the stored P1D): rewritten
@@ -187,13 +187,13 @@ class RollupRewriteSpec extends SparkSpecBase {
       // per day, then across days) so it compares within FP tolerance
       val got = q.collect()
         .map(r => (r.get(0).toString, r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-      spark.experimental.extraOptimizations = Nil
+      clearRollupRules()
       val exp = spark.read.parquet(basePath)
         .groupBy(date_trunc("month", $"o_orderdate").as("m"), $"o_orderpriority")
         .agg(count(lit(1)).as("n"), sum($"o_totalprice").as("s"))
         .collect()
         .map(r => (r.get(0).toString, r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-      spark.experimental.extraOptimizations = Nil // clear any leaked rule
+      clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
       assert(got.keySet == exp.keySet, s"group keys differ")
       got.foreach { case (k, (n, sm)) =>
@@ -209,7 +209,7 @@ class RollupRewriteSpec extends SparkSpecBase {
       val scannedBare = qBare.queryExecution.optimizedPlan.collectLeaves().mkString
       assert(!scannedBare.contains("sum_price"),
         s"bare raw-time group wrongly rewritten: $scannedBare")
-    } finally { spark.experimental.extraOptimizations = Nil }
+    } finally { clearRollupRules() }
   }
 
   test("a non-multiple granularity is NOT rewritten (quarter rollup, month query)") {
@@ -223,7 +223,7 @@ class RollupRewriteSpec extends SparkSpecBase {
     catalog.register(RollupDef(basePath, spark.read.parquet(rollupDir),
       Set.empty, Map.empty, "cnt",
       timeColumn = Some("o_orderdate"), granularity = Some(g)))
-    spark.experimental.extraOptimizations = Nil // clear any leaked rule
+    clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
     try {
       // month is FINER than the stored quarter: cannot re-bucket
@@ -238,7 +238,7 @@ class RollupRewriteSpec extends SparkSpecBase {
         .agg(count(lit(1)).as("n"))
       val scannedY = qy.queryExecution.optimizedPlan.collectLeaves().mkString
       assert(scannedY.contains("cnt"), s"year-over-quarter not rewritten: $scannedY")
-    } finally { spark.experimental.extraOptimizations = Nil }
+    } finally { clearRollupRules() }
   }
 
   test("time filters rewrite only when bucket-aligned (ADVICE: misaligned " +
@@ -253,7 +253,7 @@ class RollupRewriteSpec extends SparkSpecBase {
     catalog.register(RollupDef(basePath, spark.read.parquet(rollupDir),
       Set.empty, Map.empty, "cnt",
       timeColumn = Some("o_orderdate"), granularity = Some(g)))
-    spark.experimental.extraOptimizations = Nil // clear any leaked rule
+    clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
     try {
       // aligned [day-boundary, day-boundary): rewrites, counts match
@@ -263,12 +263,12 @@ class RollupRewriteSpec extends SparkSpecBase {
         .agg(count(lit(1)).as("n"))
       val scanned = q.queryExecution.optimizedPlan.collectLeaves().mkString
       assert(scanned.contains("cnt"), s"aligned time range not rewritten: $scanned")
-      spark.experimental.extraOptimizations = Nil
+      clearRollupRules()
       val exp = spark.read.parquet(basePath)
         .filter($"o_orderdate" >= lit("1995-01-01 00:00:00").cast("timestamp_ntz") &&
                 $"o_orderdate" < lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
         .count()
-      spark.experimental.extraOptimizations = Nil // clear any leaked rule
+      clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
       assert(q.head().getLong(0) == exp)
 
@@ -285,7 +285,7 @@ class RollupRewriteSpec extends SparkSpecBase {
         .agg(count(lit(1)).as("n"))
       val scannedS = qs.queryExecution.optimizedPlan.collectLeaves().mkString
       assert(!scannedS.contains("cnt"), s"strict bound wrongly rewritten: $scannedS")
-    } finally { spark.experimental.extraOptimizations = Nil }
+    } finally { clearRollupRules() }
   }
 
   test("EARLIEST/LATEST refold from stored pair columns; approx-distinct " +
@@ -309,7 +309,7 @@ class RollupRewriteSpec extends SparkSpecBase {
           "o_custkey" -> Seq("hll" -> "cust_hll")),
       "cnt",
       timeColumn = Some("o_orderdate"), granularity = Some(g)))
-    spark.experimental.extraOptimizations = Nil // clear any leaked rule
+    clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
     try {
       val q = spark.read.parquet(basePath)
@@ -318,13 +318,13 @@ class RollupRewriteSpec extends SparkSpecBase {
           struct($"o_orderdate", $"o_totalprice")).as("first_price"))
       val scanned = q.queryExecution.optimizedPlan.collectLeaves().mkString
       assert(scanned.contains("first_price_pair"), s"first not refolded: $scanned")
-      spark.experimental.extraOptimizations = Nil
+      clearRollupRules()
       val exp = spark.read.parquet(basePath)
         .groupBy($"o_orderpriority")
         .agg(FirstLastAgg.earliest($"o_totalprice",
           struct($"o_orderdate", $"o_totalprice")).as("first_price"))
         .collect().map(_.toString).sorted
-      spark.experimental.extraOptimizations = Nil // clear any leaked rule
+      clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
       assert(q.collect().map(_.toString).sorted.sameElements(exp))
 
@@ -334,11 +334,11 @@ class RollupRewriteSpec extends SparkSpecBase {
         .agg(approx_count_distinct($"o_custkey").as("nd"))
       val scannedD = qd.queryExecution.optimizedPlan.collectLeaves().mkString
       assert(scannedD.contains("cust_hll"), s"approx-distinct not sketch-merged: $scannedD")
-      spark.experimental.extraOptimizations = Nil
+      clearRollupRules()
       val exact = spark.read.parquet(basePath).groupBy($"o_orderpriority")
         .agg(count_distinct($"o_custkey").as("nd"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      spark.experimental.extraOptimizations = Nil // clear any leaked rule
+      clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
       qd.collect().foreach { r =>
         val est = r.getLong(1).toDouble
@@ -354,7 +354,7 @@ class RollupRewriteSpec extends SparkSpecBase {
       val scannedNo = qNo.queryExecution.optimizedPlan.collectLeaves().mkString
       assert(!scannedNo.contains("last_price_pair"),
         s"undeclared LATEST wrongly rewritten: $scannedNo")
-    } finally { spark.experimental.extraOptimizations = Nil }
+    } finally { clearRollupRules() }
   }
 
   test("TIME_FLOOR group expressions (the fixed-width floorDiv spelling, " +
@@ -372,7 +372,7 @@ class RollupRewriteSpec extends SparkSpecBase {
     catalog.register(RollupDef(basePath, spark.read.parquet(rollupDir),
       Set.empty, Map("o_totalprice" -> Seq("sum" -> "sum_price")), "cnt",
       timeColumn = Some("o_orderdate"), granularity = Some(g)))
-    spark.experimental.extraOptimizations = Nil // clear any leaked rule
+    clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
     try {
       // P1D is a fixed-width (NOT date_trunc) floor in this engine; over a
@@ -382,11 +382,11 @@ class RollupRewriteSpec extends SparkSpecBase {
         .agg(count(lit(1)).as("n"))
       val scanned = q.queryExecution.optimizedPlan.collectLeaves().mkString
       assert(scanned.contains("sum_price"), s"TIME_FLOOR P1D group not rewritten: $scanned")
-      spark.experimental.extraOptimizations = Nil
+      clearRollupRules()
       val exp = spark.read.parquet(basePath)
         .groupBy(TF.timeFloor($"o_orderdate", "P1D").as("d"))
         .agg(count(lit(1)).as("n")).collect().map(_.toString).sorted
-      spark.experimental.extraOptimizations = Nil // clear any leaked rule
+      clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
       assert(q.collect().map(_.toString).sorted.sameElements(exp))
 
@@ -409,7 +409,7 @@ class RollupRewriteSpec extends SparkSpecBase {
       assert(scannedTs.contains("sum_price"),
         s"DSL timeseries over the base did not redirect: $scannedTs")
       assert(ts.count() > 0)
-    } finally { spark.experimental.extraOptimizations = Nil }
+    } finally { clearRollupRules() }
   }
 
   test("theta/kll/tuple sketch aggregates refold stored COMPLEX sketch columns " +
@@ -432,7 +432,7 @@ class RollupRewriteSpec extends SparkSpecBase {
       Map("o_custkey" -> Seq("theta" -> "theta_cust", "tuple:1.0" -> "tuple_cust"),
           "o_totalprice" -> Seq("kll" -> "kll_price")),
       "cnt", timeColumn = Some("o_orderdate"), granularity = Some(g)))
-    spark.experimental.extraOptimizations = Nil // clear any leaked rule
+    clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
     try {
       def query() = spark.read.parquet(basePath)
@@ -446,10 +446,10 @@ class RollupRewriteSpec extends SparkSpecBase {
       assert(scanned.contains("theta_cust") && scanned.contains("kll_price") &&
         scanned.contains("tuple_cust"), s"sketch aggs not refolded: $scanned")
       val got = q.collect().map(_.toString).sorted
-      spark.experimental.extraOptimizations = Nil
+      clearRollupRules()
       // below nominal/k everything is exact → base-scan values match exactly
       val exp = query().collect().map(_.toString).sorted
-      spark.experimental.extraOptimizations = Nil // clear any leaked rule
+      clearRollupRules() // clear any leaked rule
       RollupRewrite.enable(spark, catalog)
       assert(got.sameElements(exp), s"refolded sketch values differ:\n${got.mkString("\n")}\nvs\n${exp.mkString("\n")}")
 
@@ -466,7 +466,7 @@ class RollupRewriteSpec extends SparkSpecBase {
       val scannedSig = qSig.queryExecution.optimizedPlan.collectLeaves().mkString
       assert(!scannedSig.contains("tuple_cust"),
         s"different-signature tuple wrongly rewritten: $scannedSig")
-    } finally { spark.experimental.extraOptimizations = Nil }
+    } finally { clearRollupRules() }
   }
 
   test("with P1D and P1M rollups registered the rule picks the COARSEST " +
@@ -491,7 +491,7 @@ class RollupRewriteSpec extends SparkSpecBase {
     catalog.register(RollupDef(basePath, spark.read.parquet(monthDir),
       Set.empty, Map("o_totalprice" -> Seq("sum" -> "sum_price_month")), "cnt",
       timeColumn = Some("o_orderdate"), granularity = Some(gM)))
-    spark.experimental.extraOptimizations = Nil // clear any leaked rule
+    clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
     try {
       // a YEAR query: both eligible, the P1M table wins (≈1/30th the rows)
@@ -510,16 +510,16 @@ class RollupRewriteSpec extends SparkSpecBase {
         s"day query did not pick the P1D rollup: $scannedD")
       // values from the coarser table still match the base scan
       val got = qy.collect().map(_.toString).sorted
-      spark.experimental.extraOptimizations = Nil
+      clearRollupRules()
       val exp = spark.read.parquet(basePath)
         .groupBy(date_trunc("year", $"o_orderdate").as("y"))
         .agg(count(lit(1)).as("n")).collect().map(_.toString).sorted
       assert(got.sameElements(exp))
-    } finally { spark.experimental.extraOptimizations = Nil }
+    } finally { clearRollupRules() }
   }
 
   test("the oracle-gated rollup queries (SparkEntry registry) redirect — plan-asserted") {
-    spark.experimental.extraOptimizations = Nil // start from a clean session
+    clearRollupRules() // start from a clean session
     try {
       val q = graft.queries.RollupQueries.queries("rollup_rewrite_coarse")(spark, sf())
       val scanned = q.queryExecution.optimizedPlan.collectLeaves().mkString
@@ -543,6 +543,6 @@ class RollupRewriteSpec extends SparkSpecBase {
         scanned3.contains("tuple_cust"),
         s"rollup_rewrite_sketch did not refold the stored sketches: $scanned3")
       assert(q3.count() > 0)
-    } finally spark.experimental.extraOptimizations = Nil
+    } finally clearRollupRules()
   }
 }

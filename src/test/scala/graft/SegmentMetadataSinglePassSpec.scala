@@ -71,4 +71,13 @@ class SegmentMetadataSinglePassSpec extends SparkSpecBase {
       Sources.table(spark, sf(), "region").columns.toSet)
     assert(rows("r_regionkey").getLong(2) == 5L) // 5 regions, exact at tiny n
   }
+
+  test("segment_metadata_approx pins its HLL++ cardinalities at sf0.001") {
+    val got = SparkEntry.benchOnly("segment_metadata_approx")(spark, sf()).collect()
+      .map(r => r.getString(0) -> r.getLong(2)).toMap
+    // HLL++ estimates, pinned as values: at this size every one equals the
+    // exact distinct count
+    assert(got == Map("o_orderkey" -> 1500L, "o_custkey" -> 150L,
+      "o_orderstatus" -> 3L, "o_orderpriority" -> 5L), got)
+  }
 }

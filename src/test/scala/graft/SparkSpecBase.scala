@@ -8,6 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Detach every RollupRewrite rule from the session, keeping the rules
+    * GraftSession.configure installed. */
+  def clearRollupRules(): Unit =
+    spark.experimental.extraOptimizations = spark.experimental.extraOptimizations
+      .filterNot(_.isInstanceOf[graft.plans.RollupRewrite.RewriteRule])
 }
 
 object SparkSpecBase {

@@ -127,7 +127,7 @@ class StreamingIngestSpec extends SparkSpecBase {
         countColumn = "cnt",
         timeColumn = Some("ts"),
         granularity = Some(PeriodGranularity("PT5M"))))
-    spark.experimental.extraOptimizations = Nil // clear any leaked rule
+    clearRollupRules() // clear any leaked rule
     RollupRewrite.enable(spark, catalog)
     try {
       mem.addData(finalized: _*)
@@ -153,7 +153,7 @@ class StreamingIngestSpec extends SparkSpecBase {
         s"streamed-rollup answers differ: $rows")
     } finally {
       q.stop()
-      spark.experimental.extraOptimizations = Nil
+      clearRollupRules()
     }
   }
 
