@@ -6,21 +6,15 @@ import org.apache.spark.sql.graftbridge.CatalystBridge
 /** Engine session setup as a LIBRARY concern, not a launcher concern.
   *
   * [[GraftSession.configure]] is the only code that sets session-level
-  * engine state. It runs once per session and installs:
-  *
-  *  - the conf defaults below, each only where the embedder left the key
-  *    unset — a key already present in the session's settings map
-  *    (builder option, sparkContext conf, or a prior `spark.conf.set`) is
-  *    left alone;
-  *  - the engine's SQL functions (`GraftSqlFunctions.register`);
-  *  - the HOF unroll optimizer rule (`HofUnroll.enable`), so a plan never
-  *    depends on which query ran first on the session;
-  *  - the analysis check that rejects a malformed time literal in a
-  *    comparison (`PlannerChecks.illegalTimeLiterals`), as Druid SQL does.
-  *    It reaches every analyzer built after the first `configure` — a
-  *    session's own is built on its first query.
-  *
-  * The conf defaults:
+  * engine state. It runs once per session and installs the conf defaults
+  * below, the engine's SQL functions, the HOF unroll optimizer rule (so a
+  * plan never depends on which query ran first) and the malformed time
+  * literal check (`PlannerChecks.illegalTimeLiterals`, an analysis check
+  * that reaches the analyzers built after the first `configure`;
+  * SqlLifecycle also runs it on every statement). A tuning default yields
+  * to a key the embedder set explicitly (builder option, sparkContext conf
+  * or a prior `spark.conf.set`); a dialect key does not, so every route
+  * runs one dialect.
   *
   *  - `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` — the
   *    first/last/any pair folds (FirstLastFoldAgg/AnyFoldAgg) and every
@@ -35,15 +29,12 @@ import org.apache.spark.sql.graftbridge.CatalystBridge
   *    metadata count path.
   *  - `spark.sql.session.timeZone = UTC` — the reference's timeline is UTC
   *    epoch millis; granularity bucketing and timestamp rendering assume it.
-  *  - `spark.sql.ansi.enabled = false` — the engine has one expression
-  *    dialect, Druid's: native engines do Java arithmetic (longs wrap, a
-  *    bad cast is null, nothing throws) and Druid SQL plans through
-  *    Calcite's lenient coercion to the same rules
+  *  - `spark.sql.ansi.enabled = false` (dialect) — Druid's one expression
+  *    semantics: longs wrap, a bad cast is null, nothing throws
   *    (CalciteParameterQueryTest.java:623 binds VARCHAR 'wat' against a
   *    float and expects 0 rows, not an error).
-  *  - `spark.sql.legacy.sizeOfNull = false` — with ANSI off Spark's legacy
-  *    `size(null) = -1` would apply; Druid's ARRAY_LENGTH/MV_LENGTH of null
-  *    is null.
+  *  - `spark.sql.legacy.sizeOfNull = false` (dialect) — ARRAY_LENGTH and
+  *    MV_LENGTH of null are null, not Spark's legacy -1.
   */
 object GraftSession {
   /** (key, engine default) — all runtime-settable SQL confs. */
@@ -53,6 +44,9 @@ object GraftSession {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.ansi.enabled" -> "false",
     "spark.sql.legacy.sizeOfNull" -> "false")
+
+  /** The keys of [[defaults]] that define the engine's expression dialect. */
+  private val dialectKeys = Set("spark.sql.ansi.enabled", "spark.sql.legacy.sizeOfNull")
 
   /** Marker conf: present once this session has been configured, so the
     * entry points that take a caller's session cost one conf lookup after
@@ -82,7 +76,7 @@ object GraftSession {
     if (!spark.conf.getOption(configuredKey).contains("true")) synchronized {
       if (!spark.conf.getOption(configuredKey).contains("true")) {
         defaults.foreach { case (k, v) =>
-          if (!CatalystBridge.confIsSet(spark, k))
+          if (dialectKeys(k) || !CatalystBridge.confIsSet(spark, k))
             spark.conf.set(k, v)
         }
         graft.functions.GraftSqlFunctions.register(spark)

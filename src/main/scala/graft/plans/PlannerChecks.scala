@@ -15,7 +15,7 @@ object PlannerChecks {
     * .testCountStarWithTimeFilterUsingStringLiteralsInvalid); Spark's
     * lenient coercion would cast it to null and silently match nothing. An
     * explicit CAST keeps its null. `GraftSession.configure` installs this
-    * as an analysis check. */
+    * as an analysis check; SQL statements and INSERTs also run it. */
   val illegalTimeLiterals: LogicalPlan => Unit = _.foreachWithSubqueries(
     _.expressions.foreach(_.foreach {
       case c @ Cast(Literal(v, _: StringType), TimestampType | TimestampNTZType, _, _)

@@ -113,9 +113,12 @@ object SqlLifecycle {
   }
 
   /** Plan a query: Catalyst, then the context's approximate count-distinct
-    * rewrite and outer limit. Call inside [[scoped]]. */
+    * rewrite and outer limit. Call inside [[scoped]]. The malformed-time-
+    * literal check runs here too: the analysis check `configure` installs
+    * misses a session whose analyzer was built before it. */
   def plan(spark: SparkSession, sql: String, ctx: PlannerContext): DataFrame = {
     val df = spark.sql(sql)
+    graft.plans.PlannerChecks.illegalTimeLiterals(df.queryExecution.analyzed)
     val approx =
       if (ctx.useApproximateCountDistinct) graft.plans.PlannerChecks.approximateCountDistinct(df)
       else df

@@ -337,6 +337,8 @@ object SqlInsertDml {
         r.multipartIdentifier.last.toLowerCase
     }.contains(stmt.target.toLowerCase)
     val selectedRaw = org.apache.spark.sql.graftbridge.CatalystBridge.ofRows(spark, selectPlan)
+    // as SqlLifecycle.plan: whatever analyzer the session was built with
+    graft.plans.PlannerChecks.illegalTimeLiterals(selectedRaw.queryExecution.analyzed)
     // r17: with CLUSTERED BY, the range exchange's boundary sampling
     // executes the full SELECT once and the shuffle map stage executes it
     // AGAIN — a lazy checkpoint bounds the INSERT to ONE execution of the

@@ -76,6 +76,17 @@ class GraftSessionSpec extends SparkSpecBase {
     assert(s.conf.get(thresholdKey) == "4096")
   }
 
+  test("configure sets the dialect keys over an explicit embedder setting") {
+    val s = defaultConfigSession()
+    s.conf.set("spark.sql.ansi.enabled", "true")
+    s.conf.set("spark.sql.legacy.sizeOfNull", "true")
+    GraftSession.configure(s)
+    assert(s.conf.get("spark.sql.ansi.enabled") == "false")
+    assert(s.conf.get("spark.sql.legacy.sizeOfNull") == "false")
+    assert(s.sql("SELECT size(CAST(NULL AS ARRAY<INT>)), CAST('x' AS INT)").head().toSeq ==
+      Seq(null, null))
+  }
+
   test(">128-distinct-group EARLIEST through the HTTP facade on a DEFAULT-config " +
       "session executes as ObjectHashAggregate with the raised fallback threshold") {
     val fresh = defaultConfigSession()
@@ -141,6 +152,25 @@ class GraftSessionSpec extends SparkSpecBase {
           "resultFormat": "array"}""")
       assert(status == 200, JsonMethods.compact(JsonMethods.render(out)))
       assert(JsonMethods.compact(JsonMethods.render(out)) == "[[1,1],[null,null]]")
+    } finally facade.stop()
+  }
+
+  test("/druid/v2/sql rejects a malformed time literal in a comparison; an explicit " +
+      "CAST keeps its null") {
+    val fresh = GraftSession.configure(spark.newSession())
+    val facade = HttpFacade.start(fresh, name => Sources.table(fresh, sf(), name))
+    def count(where: String) = post(facade.port, "/druid/v2/sql",
+      s"""{"query": "SELECT COUNT(*) AS c FROM VALUES (TIMESTAMP '2000-01-02 00:00:00') AS t(__time) WHERE $where",
+        "resultFormat": "array"}""")
+    try {
+      val (status, out) = count("__time >= 'z2000-01-01 00:00:00'")
+      val body = JsonMethods.compact(JsonMethods.render(out))
+      assert(status != 200 && body.contains("Illegal TIMESTAMP constant: 'z2000-01-01 00:00:00'"),
+        s"HTTP $status: $body")
+      val (castStatus, castOut) = count("__time >= CAST('z2000-01-01 00:00:00' AS TIMESTAMP)")
+      assert(castStatus == 200 &&
+        JsonMethods.compact(JsonMethods.render(castOut)) == "[[0]]", s"HTTP $castStatus")
+      assert(count("__time >= '2000-01-01 00:00:00'")._2 == JArray(List(JArray(List(JInt(1))))))
     } finally facade.stop()
   }
 

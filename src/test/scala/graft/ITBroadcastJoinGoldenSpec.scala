@@ -73,12 +73,15 @@ class ITBroadcastJoinGoldenSpec extends SparkSpecBase {
     back.drop("__chunk")
   }
 
+  /** Run `f` with Druid SQL's double-quoted identifiers. Spark honours
+    * `doubleQuotedIdentifiers` only with ANSI on, so both keys are scoped
+    * around the verbatim corpus query (the engine dialect is ANSI off). */
   private def withDoubleQuotedIds[T](f: => T): T = {
-    val key = "spark.sql.ansi.doubleQuotedIdentifiers"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key)
+    val keys = Seq("spark.sql.ansi.enabled", "spark.sql.ansi.doubleQuotedIdentifiers")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "true"))
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v); case (k, None) => spark.conf.unset(k)
     }
   }
 
