@@ -1074,16 +1074,16 @@ object GraftSqlFunctions {
         s"Invalid number of arguments to function '${name.toUpperCase}'")
     }
 
-  /** Idempotent per-session registration. */
+  /** Idempotent per-session registration. An existing entry (a builtin of
+    * the same name, or an earlier registration) is dropped first, so the
+    * registry does not warn that it was replaced. */
   def register(spark: SparkSession): Unit = {
     val registry = CatalystBridge.functionRegistry(spark)
-    builders.foreach { case (name, b) =>
-      registry.createOrReplaceTempFunction(name, guarded(name, b), "internal")
-    }
     val byName = builders.toMap
-    aliases.foreach { case (name, target) =>
-      val b = byName(target)
-      registry.createOrReplaceTempFunction(name, guarded(name, b), "internal")
+    (builders ++ aliases.map { case (name, target) => name -> byName(target) }).foreach {
+      case (name, b) =>
+        registry.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+        registry.createOrReplaceTempFunction(name, guarded(name, b), "internal")
     }
   }
 

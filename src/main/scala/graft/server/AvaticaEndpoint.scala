@@ -28,12 +28,14 @@ import org.json4s.jackson.JsonMethods
   * DruidMeta.java:754 "Too many connections, limit is[%,d] per broker",
   * DruidConnection.java:92 "Too many open statements, limit is[%,d]"), and
   * results stream in frames of `maxRowsPerFrame` continued by fetch calls
-  * (AvaticaServerConfig.maxRowsPerFrame).
+  * (AvaticaServerConfig.maxRowsPerFrame). Executed statements run in the
+  * façade's request lifecycle, or in their own when standalone.
   */
 final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
     maxConnections: Int = 25, maxStatementsPerConnection: Int = 4,
     maxRowsPerFrame: Int = 5000, minRowsPerFrame: Int = 100,
-    maxResultRows: Int = 100000) {
+    maxResultRows: Int = 100000,
+    val lifecycle: HttpFacade.RequestLifecycle = new HttpFacade.RequestLifecycle()) {
 
   // standalone-embedding path (Avatica without the HTTP facade): the
   // engine's session defaults still apply
@@ -119,17 +121,14 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
             val cid = str("connectionId")
             val st = newStatement(cid)
             st.sql = Some(str("sql"))
-            // signature without executing: analyze the plan only. A
-            // parameterized statement can't be analyzed until its `?`s are
-            // bound (DruidStatement defers the same way), so the signature
-            // stays empty until execute. DML and command statements are NOT
-            // planned here — Spark executes command plans eagerly on
-            // spark.sql(), and the reference's DruidMeta.prepare only plans,
-            // never runs side effects
-            SqlLifecycle.classify(st.sql.get) match {
+            // signature without executing: analyze the plan only, never a
+            // command's (signatureOf). A parameterized statement can't be
+            // analyzed until its `?`s are bound (DruidStatement defers the
+            // same way), so the signature stays empty until execute
+            SqlLifecycle.classify(spark, st.sql.get) match {
               case _: SqlLifecycle.Insert => st.statementType = "INSERT"
               case _: SqlLifecycle.Explain => st.metas = SqlLifecycle.ExplainColumns
-              case SqlLifecycle.Query(q) =>
+              case q: SqlLifecycle.Query =>
                 st.metas = try signatureOf(q) catch { case _: Exception => Nil }
             }
             JObject("response" -> JString("prepare"),
@@ -269,46 +268,28 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
   // JDBC connections set no planner context knobs
   private val noContext = new SqlLifecycle.PlannerContext(JObject())
 
-  /** A query's result columns, planned but not executed. Command
-    * statements are refused: spark.sql() executes command plans (DDL,
-    * Spark-dialect DML) eagerly, and prepare must never run side effects
-    * (DruidMeta.prepare only plans). */
-  private def signatureOf(sqlText: String): Seq[HttpFacade.ColMeta] = {
-    val parsed = spark.sessionState.sqlParser.parsePlan(sqlText)
-    val isCommand = parsed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Command] ||
-      parsed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement]
-    if (isCommand)
-      throw new IllegalArgumentException("cannot prepare a non-query statement")
-    SqlLifecycle.scoped(spark, sqlText, noContext)(SqlLifecycle.plan(spark, sqlText, noContext))
-      .schema.fields.toSeq.map(HttpFacade.colMeta)
-  }
+  /** A query's result columns, planned but not executed. A command is
+    * refused: planning it would execute it (DDL, Spark-dialect DML), and
+    * prepare must never run side effects (DruidMeta.prepare only plans). */
+  private def signatureOf(q: SqlLifecycle.Query): Seq[HttpFacade.ColMeta] =
+    SqlLifecycle.scoped(spark, q, noContext) {
+      if (!q.isQuery) throw new IllegalArgumentException("cannot prepare a non-query statement")
+      SqlLifecycle.plan(spark, q, noContext)
+    }.schema.fields.toSeq.map(HttpFacade.colMeta)
 
-  /** One line per executed SQL statement — the RequestLogger surface the
-    * reference emits per query (RequestLogLine.forSql with queryStats
-    * success/sqlQuery/time/sqlQuery/bytes;
-    * DruidAvaticaHandlerTest.testSqlRequestLog counts and inspects them). */
-  final case class RequestLogLine(sql: String, success: Boolean, timeMs: Long)
-  private val requestLogLines =
-    new java.util.concurrent.ConcurrentLinkedQueue[RequestLogLine]
-  def sqlRequestLog: Seq[RequestLogLine] = {
-    import scala.jdk.CollectionConverters._
-    requestLogLines.asScala.toSeq
-  }
-
-  /** runSql, releasing the statement slot on failure — the reference closes
-    * the statement when execution throws (DruidStatement.nextFrame's catch
-    * → close()), so 50 consecutive failing statements never exhaust the
-    * 4-slot cap (testNotTooManyStatementsWhenTheyThrowErrors) — and logging
-    * the request line either way. */
+  /** runSql in the request lifecycle under a generated sqlQueryId (the log
+    * line has no byte count: frames leave later, through fetch), releasing
+    * the statement slot on failure — the reference closes the statement
+    * when execution throws (DruidStatement.nextFrame's catch → close()), so
+    * 50 consecutive failing statements never exhaust the 4-slot cap
+    * (testNotTooManyStatementsWhenTheyThrowErrors). */
   private def runGuarded(cid: String, st: Statement, sqlText: String): Unit = {
-    val t0 = System.nanoTime()
-    try {
-      runSql(st, sqlText)
-      requestLogLines.add(RequestLogLine(sqlText, success = true,
-        (System.nanoTime() - t0) / 1000000L))
-    } catch { case e: Throwable =>
-      requestLogLines.add(RequestLogLine(sqlText, success = false,
-        (System.nanoTime() - t0) / 1000000L))
+    val queryId = java.util.UUID.randomUUID().toString
+    try lifecycle.run(spark, queryId) { (ms, out: scala.util.Try[Unit]) =>
+      lifecycle.requestLog.logSql("", sqlText, JObject("sqlQueryId" -> JString(queryId)),
+        ms, -1L, out.failed.toOption)
+    }(runSql(st, sqlText))
+    catch { case e: Throwable =>
       connection(cid).statements.remove(st.id)
       throw e
     }
@@ -318,7 +299,8 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
     st.sql = Some(sqlText)
     st.updateCount = -1L
     st.statementType = "SELECT"
-    SqlLifecycle.scoped(spark, sqlText, noContext)(SqlLifecycle.classify(sqlText) match {
+    val statement = SqlLifecycle.classify(spark, sqlText)
+    SqlLifecycle.scoped(spark, statement, noContext)(statement match {
       // JDBC executeUpdate surface: INSERT DML reports the published row
       // count as the update count; the signature carries the DML statement
       // type (Meta.StatementType.INSERT)
@@ -331,8 +313,8 @@ final class AvaticaEndpoint(spark: SparkSession, serverAddress: String,
         st.metas = SqlLifecycle.ExplainColumns
         st.rows = SqlLifecycle.explainRows(spark, e).toIndexedSeq.map(o =>
           JArray(List(o \ "PLAN", o \ "RESOURCES")))
-      case _: SqlLifecycle.Query =>
-        val df = SqlLifecycle.plan(spark, sqlText, noContext)
+      case q: SqlLifecycle.Query =>
+        val df = SqlLifecycle.plan(spark, q, noContext)
         val fields = df.schema.fields
         st.metas = fields.toSeq.map(HttpFacade.colMeta)
         st.rows = HttpFacade.capRows(df, maxResultRows).toIndexedSeq.map { r =>

@@ -11,7 +11,7 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.operators.{DruidTime, NativeQuery}
 import graft.sources.LookupRegistry
-import scala.util.{Success, Try}
+import scala.util.{Failure, Success, Try}
 
 /** Thin HTTP query façade — the reference's actual entry points
   * (sql/.../http/SqlResource.java:73 `/druid/v2/sql`,
@@ -226,27 +226,49 @@ object HttpFacade {
         "Please try your query again later.")
   }
 
-  /** Total + per-lane concurrency guard — the QueryScheduler analog.
-    * `limit <= 0` means unlimited (the default: this driver-side facade is
-    * usually single-tenant; a shared broker sets a limit sized to its
-    * executor slots so queued queries fail fast instead of piling onto the
-    * scheduler). The
-    * "low" lane follows HiLoQueryLaningStrategy: a query lands there when
-    * its context names the lane or carries a negative priority
-    * (HiLoQueryLaningStrategy.java:76-85), and the lane's capacity is
-    * ceil(total × maxLowPercent / 100) (QueryLaningStrategy.java:57-60).
-    * A full lane rejects with the lane-flavored capacity message; the lane
-    * permit holds while the total permit is acquired so the two compose. */
-  private[server] final class CapacityGuard(limit: Int, maxLowPercent: Int = 0) {
-    private val sem =
-      if (limit > 0) Some(new java.util.concurrent.Semaphore(limit)) else None
+  /** The one request lifecycle of the query routes and the Avatica
+    * statements — the reference's QueryLifecycle/SqlLifecycle: admission,
+    * a job group cancel-registered under the query id for the whole plan
+    * and execute ([[CancelRegistry]]), and one request-log line, success or
+    * failure (QueryLifecycle.emitLogsAndMetrics feeding the RequestLogger).
+    *
+    * Admission is the QueryScheduler analog, a total + per-lane concurrency
+    * guard. `maxConcurrentQueries <= 0` means unlimited (the default: this
+    * driver-side facade is usually single-tenant; a shared broker sets a
+    * limit sized to its executor slots so queued queries fail fast instead
+    * of piling onto the scheduler). The "low" lane follows
+    * HiLoQueryLaningStrategy: a query lands there when its context names
+    * the lane or carries a negative priority (HiLoQueryLaningStrategy.java
+    * :76-85), and the lane's capacity is ceil(total × maxLowPercent / 100)
+    * (QueryLaningStrategy.java:57-60). A full lane rejects with the
+    * lane-flavored capacity message; the lane permit holds while the total
+    * permit is acquired so the two compose. */
+  final class RequestLifecycle(maxConcurrentQueries: Int = 0, maxLowPercent: Int = 0) {
+    val requestLog = new RequestLog()
+    private[server] val cancels = new CancelRegistry
+    private val sem = if (maxConcurrentQueries > 0)
+      Some(new java.util.concurrent.Semaphore(maxConcurrentQueries)) else None
     private val lowLimit =
-      if (limit > 0 && maxLowPercent > 0) math.ceil(limit * maxLowPercent / 100.0).toInt
+      if (maxConcurrentQueries > 0 && maxLowPercent > 0)
+        math.ceil(maxConcurrentQueries * maxLowPercent / 100.0).toInt
       else 0
     private val lowSem =
       if (lowLimit > 0) Some(new java.util.concurrent.Semaphore(lowLimit)) else None
 
-    def run[A](lane: Option[String], priority: Option[Int])(body: => A): A = {
+    /** Run `body`, then `log` its elapsed millis and outcome. */
+    def run[A](spark: SparkSession, queryId: String, timeoutMs: Long = 0L,
+        lane: Option[String] = None, priority: Option[Int] = None)
+        (log: (Long, Try[A]) => Unit)(body: => A): A = {
+      val startNs = System.nanoTime()
+      val out =
+        try Success(admitted(lane, priority)(
+          cancels.run(spark.sparkContext, queryId, timeoutMs)(body)))
+        catch { case e: Throwable => Failure(e) }
+      log((System.nanoTime() - startNs) / 1000000L, out)
+      out.get
+    }
+
+    private def admitted[A](lane: Option[String], priority: Option[Int])(body: => A): A = {
       val effectiveLane =
         lane.orElse(if (priority.exists(_ < 0)) Some("low") else None)
       val lowHeld = (effectiveLane, lowSem) match {
@@ -258,7 +280,7 @@ object HttpFacade {
       try sem match {
         case None => body
         case Some(s) =>
-          if (!s.tryAcquire()) throw QueryCapacityException.total(limit)
+          if (!s.tryAcquire()) throw QueryCapacityException.total(maxConcurrentQueries)
           try body finally s.release()
       } finally if (lowHeld) lowSem.get.release()
     }
@@ -272,8 +294,8 @@ object HttpFacade {
     * (SparkContext.cancelJobGroup with task interruption) and flags the
     * entry so a cancel that lands between plan and execute still fails the
     * request — the reference removes the lifecycle snapshot the same way. */
-  private[server] final class CancelRegistry(sc: org.apache.spark.SparkContext) {
-    final class State(val groupId: String, val runner: Thread) {
+  private[server] final class CancelRegistry {
+    final class State(sc: org.apache.spark.SparkContext, val groupId: String, val runner: Thread) {
       @volatile var cancelled = false
       @volatile var timedOut = false
       // guards runner.interrupt() against the request having already
@@ -303,8 +325,9 @@ object HttpFacade {
         val t = new Thread(r, "graft-query-timeout"); t.setDaemon(true); t
       })
 
-    def run[A](queryId: String, timeoutMillis: Long = 0L)(body: => A): A = {
-      val st = new State(s"graft-query-$queryId-${counter.incrementAndGet()}",
+    def run[A](sc: org.apache.spark.SparkContext, queryId: String, timeoutMillis: Long)
+        (body: => A): A = {
+      val st = new State(sc, s"graft-query-$queryId-${counter.incrementAndGet()}",
         Thread.currentThread())
       running.put(queryId, st)
       // thread-local: the handler thread submits the query's jobs, so the
@@ -366,13 +389,12 @@ object HttpFacade {
     // the longer context path wins over /druid/v2/sql for both the trailing-
     // slash and bare spellings (the reference accepts both:
     // DruidAvaticaJsonHandler.java:38-39)
-    val avatica = new AvaticaEndpoint(spark,
-      s"127.0.0.1:${server.getAddress.getPort}", maxResultRows = maxResultRows)
-    server.createContext("/druid/v2/sql/avatica", statusHandler(avatica.handle))
+    val lifecycle = new RequestLifecycle(maxConcurrentQueries, maxLowPercent)
+    val avatica = new AvaticaEndpoint(spark, s"127.0.0.1:${server.getAddress.getPort}",
+      maxResultRows = maxResultRows, lifecycle = lifecycle)
+    server.createContext("/druid/v2/sql/avatica", restHandler((method, _, body) =>
+      if (method == "POST") avatica.handle(body) else (405, PostOnly)))
 
-    val cancels = new CancelRegistry(spark.sparkContext)
-    val capacity = new CapacityGuard(maxConcurrentQueries, maxLowPercent)
-    val requestLog = new RequestLog()
     val planCache = new QueryCache[DataFrame](lookups)
     // payloads above 2 MiB are served but not stored
     val resultCache = new QueryCache[String](lookups, _.length <= (2 << 20))
@@ -380,8 +402,8 @@ object HttpFacade {
     val defaults = JsonMethods.parse(JsonMethods.compact(JsonMethods.render(defaultContext)))
       .asInstanceOf[JObject]
 
-    server.createContext("/druid/v2/sql", queryHandler(sql = true, cancels, capacity,
-        requestLog, defaults) { req =>
+    server.createContext("/druid/v2/sql", queryHandler(spark, sql = true, lifecycle,
+        defaults) { req =>
       val (sqlText, format, header, typesHeader, sqlTypesHeader, context) =
         req.query match {
         case Success(o: JObject) =>
@@ -424,8 +446,8 @@ object HttpFacade {
           (req.body, "object", false, false, false, JObject())
       }
       val planner = new SqlLifecycle.PlannerContext(context)
-      val statement = SqlLifecycle.classify(sqlText)
-      SqlLifecycle.scoped(spark, sqlText, planner) {
+      val statement = SqlLifecycle.classify(spark, sqlText)
+      SqlLifecycle.scoped(spark, statement, planner) {
         statement match {
           case e: SqlLifecycle.Explain =>
             renderObjects(SqlLifecycle.explainRows(spark, e), SqlLifecycle.ExplainColumns,
@@ -434,31 +456,22 @@ object HttpFacade {
             renderObjects(Seq(JObject("inserted" -> JLong(SqlLifecycle.insert(spark, ins)))),
               Seq(ColMeta("inserted", Some("LONG"), "BIGINT")),
               format, header, typesHeader, sqlTypesHeader)
-          case _: SqlLifecycle.Query =>
+          case q: SqlLifecycle.Query =>
             // repeated dashboard SQL pays the same constant
             // plan-construction floor as native JSON, so the compiled
             // DataFrame caches under the BOUND text (parameters already
-            // inlined) + planner knobs + zone. Skipped for metadata
-            // queries (the plan would snapshot catalog temp views) and
-            // statements with evaluation-time "now" functions
-            // (ComputeCurrentTime would freeze them into the cached plan).
-            val lower = sqlText.toLowerCase(java.util.Locale.ROOT)
-            val trimmed = lower.trim
-            // only plain read statements: DDL/SET execute eagerly inside
-            // spark.sql and must never be skipped by a cache hit
-            val cacheable =
-              (trimmed.startsWith("select") || trimmed.startsWith("with") ||
-                trimmed.startsWith("values")) &&
-              !lower.contains("information_schema.") &&
-              !lower.contains("sys.") && !lower.contains("current_") &&
-              !lower.contains("now()") && !lower.contains("localtimestamp")
+            // inlined) + planner knobs + zone. Only a plain read caches: a
+            // command executes when planned and must never be skipped by a
+            // hit, a metadata plan would snapshot catalog views, and a
+            // clock function would freeze into the cached plan.
+            val cacheable = q.isQuery && !q.readsMetadata && !q.readsClock
             val knobs = s"${planner.useApproximateCountDistinct}:${planner.sqlOuterLimit}:" +
               planner.sqlTimeZone.map(_.getId).getOrElse("UTC")
             def produce(): String = {
               val df =
                 if (cacheable)
-                  planCache.get(s"sql:$knobs:$sqlText")(SqlLifecycle.plan(spark, sqlText, planner))
-                else SqlLifecycle.plan(spark, sqlText, planner)
+                  planCache.get(s"sql:$knobs:$sqlText")(SqlLifecycle.plan(spark, q, planner))
+                else SqlLifecycle.plan(spark, q, planner)
               SqlLifecycle.check(df, planner)
               render(df, format, header, typesHeader, sqlTypesHeader, maxResultRows,
                 planner.sqlTimeZone.getOrElse(ZoneOffset.UTC))
@@ -479,8 +492,8 @@ object HttpFacade {
     })
 
     // registered second so the more specific /druid/v2/sql path wins
-    server.createContext("/druid/v2", queryHandler(sql = false, cancels, capacity,
-        requestLog, defaults) { req =>
+    server.createContext("/druid/v2", queryHandler(spark, sql = false, lifecycle,
+        defaults) { req =>
       val q = req.query.get
       // result cache first (broker result-level cache): a hit returns the
       // rendered payload without planning or executing; a miss plans and
@@ -568,12 +581,14 @@ object HttpFacade {
       }))
 
     server.start()
-    new Facade(server, requestLog, planCache, resultCache)
+    new Facade(server, lifecycle.requestLog, planCache, resultCache)
   }
 
-  /** Method-and-path routing handler for the REST-ish admin resources:
-    * passes (method, sub-path, body) through and writes (status, body) back
-    * (an empty body sends just the status, like Response.status().build()). */
+  /** Method-and-path routing handler for the REST-ish admin resources and
+    * Avatica (which answers 500 with its own ErrorResponse envelope on
+    * failure, matching Calcite's AvaticaJsonHandler): passes (method,
+    * sub-path, body) through and writes (status, body) back (an empty body
+    * sends just the status, like Response.status().build()). */
   private def restHandler(f: (String, String, String) => (Int, String)): HttpHandler =
     new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
@@ -591,23 +606,9 @@ object HttpFacade {
       }
     }
 
-  /** POST-only handler whose `f` chooses the HTTP status itself (the
-    * Avatica endpoint answers 500 with its own ErrorResponse envelope on
-    * failure, matching Calcite's AvaticaJsonHandler). */
-  private def statusHandler(f: String => (Int, String)): HttpHandler = new HttpHandler {
-    override def handle(ex: HttpExchange): Unit = {
-      val (status, payload) =
-        try {
-          if (ex.getRequestMethod != "POST") (405, PostOnly)
-          else f(readBody(ex))
-        } catch { case e: Throwable => queryError(e) }
-      respond(ex, status, "application/json", payload)
-    }
-  }
-
-  /** The one request lifecycle of both query routes — the reference's
-    * QueryLifecycle (/druid/v2, QueryResource.java:90) and SqlLifecycle
-    * (/druid/v2/sql, SqlResource.java:73):
+  /** The HTTP side of both query routes — the reference's QueryResource
+    * (/druid/v2, QueryResource.java:90) and SqlResource (/druid/v2/sql,
+    * SqlResource.java:73):
     *
     *  - `DELETE <route>/{id}` cancels. The native route answers 202 even
     *    for an id the scheduler never registered (QueryResource.java:142-166
@@ -618,25 +619,22 @@ object HttpFacade {
     *    (QueryResource QUERY_ID_RESPONSE_HEADER) and every SQL response
     *    X-Druid-SQL-Query-Id (SqlResource.java:75,173), errors included
     *    (SqlResourceTest.testErrorResponseReturnSameQueryIdWhenSetInContext).
-    *  - The query runs under the capacity guard and is cancel-registered
-    *    under that id for its whole lifecycle — plan and execute — so a
+    *  - The query runs in the [[RequestLifecycle]] under that id, so a
     *    DELETE with the returned id works even without a client id, and a
     *    cancel landing between plan and execute still voids the request
     *    (the QueryScheduler registers unconditionally; SqlLifecycleManager
     *    .add runs at doPost entry).
-    *  - One request-log line per query, success or failure
-    *    (QueryLifecycle.emitLogsAndMetrics feeding the RequestLogger).
     *  - Failures render as the QueryException envelope; SQL successes carry
     *    the format's content type (ResultFormat.java:38-96 — array/object
     *    JSON, the Lines formats text/plain, csv text/csv). */
-  private def queryHandler(sql: Boolean, cancels: CancelRegistry, capacity: CapacityGuard,
-      requestLog: RequestLog, defaults: JObject)(run: QueryRequest => String): HttpHandler =
+  private def queryHandler(spark: SparkSession, sql: Boolean, lifecycle: RequestLifecycle,
+      defaults: JObject)(run: QueryRequest => String): HttpHandler =
     new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         if (ex.getRequestMethod == "DELETE") {
           val id = ex.getRequestURI.getPath
             .stripPrefix(ex.getHttpContext.getPath).stripPrefix("/")
-          val status = try { if (cancels.cancel(id) || !sql) 202 else 404 }
+          val status = try { if (lifecycle.cancels.cancel(id) || !sql) 202 else 404 }
             catch { case _: Throwable => 500 }
           ex.sendResponseHeaders(status, -1)
           ex.close()
@@ -649,22 +647,22 @@ object HttpFacade {
         else if (post) ex.getResponseHeaders.set("X-Druid-Query-Id", queryId)
         val remoteAddr = Option(ex.getRemoteAddress)
           .map(_.getAddress.getHostAddress).getOrElse("")
-        val startNs = System.nanoTime()
-        def log(bytes: Long, failure: Option[Throwable]): Unit = {
-          val ms = (System.nanoTime() - startNs) / 1000000L
-          if (!sql) requestLog.logNative(remoteAddr, req.text, ms, bytes, failure)
-          else requestLog.logSql(remoteAddr, req.field("query") match {
+        def log(ms: Long, out: Try[String]): Unit = {
+          val bytes = out.fold(_ => 0L, _.getBytes(StandardCharsets.UTF_8).length.toLong)
+          if (!sql) lifecycle.requestLog.logNative(remoteAddr, req.text, ms, bytes, out.failed.toOption)
+          else lifecycle.requestLog.logSql(remoteAddr, req.field("query") match {
             case JString(s) => s; case _ => ""
-          }, req.context, ms, bytes, failure)
+          }, req.context, ms, bytes, out.failed.toOption)
         }
         val (status, payload, contentType) =
           if (!post) (405, PostOnly, "application/json")
           else try {
-            // a native body that is not JSON fails before admission
-            if (!sql) req.query.get
-            val out = capacity.run(req.lane, req.priority)(
-              cancels.run(queryId, req.timeoutMs)(run(req)))
-            log(out.getBytes(StandardCharsets.UTF_8).length.toLong, None)
+            val out = req.query match {
+              // a native body that is not JSON fails before admission
+              case Failure(e) if !sql => log(0L, Failure(e)); throw e
+              case _ => lifecycle.run(spark, queryId, req.timeoutMs, req.lane, req.priority)(log)(
+                run(req))
+            }
             val format = req.field("resultFormat") match {
               case JString(f) if sql => canonicalFormat(f); case _ => "object"
             }
@@ -674,7 +672,6 @@ object HttpFacade {
               case _ => "application/json"
             })
           } catch { case e: Throwable =>
-            log(0L, Some(e))
             val (s, p) = queryError(e); (s, p, "application/json")
           }
         respond(ex, status, contentType, payload)

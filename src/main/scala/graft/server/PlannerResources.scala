@@ -1,8 +1,6 @@
 package graft.server
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
 
 /** Planner resource analysis — which named resources a SQL statement reads
   * or writes, before anything executes (the reference's
@@ -71,7 +69,7 @@ object PlannerResources {
       context: Map[String, Any] = Map.empty,
       authorizeSysTables: Boolean = false,
       authorizeQueryContextParams: Boolean = false): Set[ResourceAction] =
-    resources(spark, SqlLifecycle.classify(sql), context, authorizeSysTables,
+    resources(spark, SqlLifecycle.classify(spark, sql), context, authorizeSysTables,
       authorizeQueryContextParams)
 
   /** [[analyze]] over an already-classified statement. */
@@ -79,26 +77,17 @@ object PlannerResources {
       context: Map[String, Any] = Map.empty,
       authorizeSysTables: Boolean = false,
       authorizeQueryContextParams: Boolean = false): Set[ResourceAction] = {
-    def target(s: SqlLifecycle.Statement): (String, Option[String]) = s match {
-      case e: SqlLifecycle.Explain => target(e.inner)
-      case SqlLifecycle.Insert(ins) => (ins.selectSql, Some(ins.target))
-      case SqlLifecycle.Query(q) => (q, None)
-    }
-    val (selectSql, writeTarget) = target(statement)
-
-    var external = false
-    // positional `?` parameters carry no resources — analysis replaces
-    // them with an inert literal so the statement parses unbound (the
-    // reference analyzes resources before parameters bind:
-    // testDynamicParameters)
-    val neutralized = graft.sources.SqlInsertDml.ExternRe.replaceAllIn(
-      SqlLifecycle.replaceParameters(selectSql)(_ => "1"), _ => {
-        external = true
-        "__extern__"
-      })
-
-    val parsed = spark.sessionState.sqlParser.parsePlan(neutralized)
-    val fromTables = collectRelations(parsed).filterNot(_ == Seq("__extern__"))
+    def insert(s: SqlLifecycle.Statement): Option[graft.sources.SqlInsertDml.InsertStatement] =
+      s match {
+        case e: SqlLifecycle.Explain => insert(e.inner)
+        case SqlLifecycle.Insert(ins) => Some(ins)
+        case _: SqlLifecycle.Query => None
+      }
+    val fromTables = statement.relations
+    val dml = insert(statement)
+    // each EXTERN input is the one EXTERNAL resource
+    val external = dml.exists(ins =>
+      graft.sources.SqlInsertDml.ExternRe.findFirstIn(ins.selectSql).isDefined)
 
     // schema spellings are case-insensitive (Calcite resolves
     // INFORMATION_SCHEMA/sys/view/druid regardless of case; Spark's parser
@@ -119,24 +108,10 @@ object PlannerResources {
         context.keys.map(k => write(k, "QUERY_CONTEXT"))
       else Nil
     val writeResources =
-      writeTarget.map(t => write(t, "DATASOURCE")).toSeq ++
+      dml.map(ins => write(ins.target, "DATASOURCE")).toSeq ++
         (if (external) Seq(read("EXTERNAL", "EXTERNAL")) else Nil)
 
     (tableResources ++ contextResources ++ writeResources).toSet
-  }
-
-  /** Relation names referenced FROM the plan, minus CTE aliases (a WITH
-    * alias is plan-local, not a resource). */
-  private def collectRelations(plan: LogicalPlan): Seq[Seq[String]] = {
-    val cteAliases = plan.collectWithSubqueries {
-      case w: UnresolvedWith => w.cteRelations.map(_._1.toLowerCase)
-    }.flatten.toSet
-    // collectWithSubqueries walks expression-level subqueries too (an
-    // IN-subquery's relation is a resource: testSubquery, testSubqueryView)
-    plan.collectWithSubqueries { case r: UnresolvedRelation => r.multipartIdentifier }
-      .filterNot(parts => parts.length == 1 && cteAliases.contains(parts.head.toLowerCase))
-      .map(_.map(_.toString))
-      .distinct
   }
 
   private def typeOf(spark: SparkSession, name: String): String =

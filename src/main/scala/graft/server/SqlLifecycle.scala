@@ -3,6 +3,11 @@ package graft.server
 import java.time.{Instant, LocalDateTime, ZoneId, ZoneOffset}
 import java.time.format.DateTimeFormatter
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedExecuteImmediate,
+  UnresolvedFunction, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoDir, InsertIntoStatement,
+  LogicalPlan, UnresolvedWith}
+import org.apache.spark.sql.graftbridge.CatalystBridge
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.sources.SqlInsertDml
@@ -17,23 +22,93 @@ import graft.sources.SqlInsertDml
 object SqlLifecycle {
 
   /** A statement, classified once per request. */
-  sealed trait Statement
+  sealed trait Statement {
+    /** The relation names it reads: subqueries and CTE bodies included, CTE
+      * aliases and EXTERN inputs not. Forces the parse: call inside
+      * [[scoped]], whose zone the parse reads. */
+    def relations: Seq[Seq[String]]
+  }
   /** `EXPLAIN PLAN FOR <sql>`. The inner statement is classified on first
     * use, so preparing an EXPLAIN never parses the INSERT inside it. */
-  final case class Explain(sql: String) extends Statement {
-    lazy val inner: Statement = classify(sql)
+  final case class Explain(sql: String)(spark: SparkSession) extends Statement {
+    lazy val inner: Statement = classify(spark, sql)
+    def relations: Seq[Seq[String]] = inner.relations
   }
-  /** Druid INSERT DML, parsed. */
-  final case class Insert(stmt: SqlInsertDml.InsertStatement) extends Statement
-  /** Anything else: planned by Catalyst as written. */
-  final case class Query(sql: String) extends Statement
+  /** Druid INSERT DML. Its SELECT, EXTERN inputs rewritten to temp views,
+    * is parsed once, on first use: planned by [[SqlInsertDml.run]] and
+    * explained by [[explainRows]]. */
+  final case class Insert(stmt: SqlInsertDml.InsertStatement)(spark: SparkSession)
+      extends Statement {
+    lazy val select: LogicalPlan = parse(spark, SqlInsertDml.rewriteExtern(spark, stmt.selectSql))
+    lazy val relations: Seq[Seq[String]] = {
+      val externs = SqlInsertDml.externViews(stmt.selectSql)
+      relationsOf(planNodes(select)).filterNot(r => r.length == 1 && externs(r.head))
+    }
+  }
+  /** Anything else: parsed once, on first use, and planned by Catalyst from
+    * that parse. The parsed plan answers what the routes ask of a
+    * statement; no text test does. */
+  final case class Query(sql: String)(spark: SparkSession) extends Statement {
+    lazy val parsed: LogicalPlan = parse(spark, sql)
+    private lazy val nodes = planNodes(parsed)
+    /** No write anywhere in the tree: planning a command executes it, and
+      * a `WITH … INSERT`, an `INSERT OVERWRITE DIRECTORY` or an `EXECUTE
+      * IMMEDIATE` (whose text may hold a command) is one too. */
+    lazy val isQuery: Boolean = !nodes.exists {
+      case _: Command | _: InsertIntoStatement | _: InsertIntoDir |
+           _: UnresolvedExecuteImmediate => true
+      case _ => false
+    }
+    lazy val relations: Seq[Seq[String]] = relationsOf(nodes)
+    /** Some relation lives in `sys` or `information_schema`. */
+    def readsMetadata: Boolean = relations.exists(SystemSchema.metadataSchema(_).isDefined)
+    /** A current-time function or keyword appears among the parsed
+      * expressions (ComputeCurrentTime would freeze it into a cached plan). */
+    lazy val readsClock: Boolean = nodes.flatMap(_.expressions).exists(_.exists {
+      case f: UnresolvedFunction => clockCall(f.nameParts.last, f.arguments.isEmpty)
+      // the bare keywords (CURRENT_DATE, CURRENT_TIMESTAMP) parse as
+      // attributes under the engine dialect, resolved by name later
+      case a: UnresolvedAttribute => a.nameParts.length == 1 && clockCall(a.name, noArgs = true)
+      case _ => false
+    })
+  }
+
+  /** The functions that read the clock at evaluation time;
+    * `unix_timestamp` only without arguments. */
+  private def clockCall(name: String, noArgs: Boolean): Boolean =
+    name.toLowerCase(java.util.Locale.ROOT) match {
+      case "now" | "current_timestamp" | "current_date" | "current_time" | "localtimestamp" |
+           "curdate" => true
+      case "unix_timestamp" => noArgs
+      case _ => false
+    }
 
   private val ExplainRe = "(?is)\\s*EXPLAIN\\s+PLAN\\s+FOR\\s+(.*)".r
 
   /** The request's one EXPLAIN match and one INSERT parse. */
-  def classify(sql: String): Statement = sql match {
-    case ExplainRe(inner) => Explain(inner)
-    case _ => SqlInsertDml.parse(sql).fold[Statement](Query(sql))(Insert(_))
+  def classify(spark: SparkSession, sql: String): Statement = sql match {
+    case ExplainRe(inner) => Explain(inner)(spark)
+    case _ => SqlInsertDml.parse(sql).fold[Statement](Query(sql)(spark))(Insert(_)(spark))
+  }
+
+  /** The one parse of request SQL, as `spark.sql` parses it. */
+  def parse(spark: SparkSession, sql: String): LogicalPlan = CatalystBridge.parsePlan(spark, sql)
+
+  /** Every node of a parsed plan, expression subqueries and CTE bodies
+    * included (a CTE body is not a child of its UnresolvedWith). */
+  private def planNodes(plan: LogicalPlan): Seq[LogicalPlan] =
+    plan.collectWithSubqueries {
+      case w: UnresolvedWith => w +: w.cteRelations.flatMap(r => planNodes(r._2))
+      case p => Seq(p)
+    }.flatten
+
+  /** The relation names among a parsed plan's nodes, minus CTE aliases (a
+    * WITH alias is plan-local, not a relation). */
+  private def relationsOf(nodes: Seq[LogicalPlan]): Seq[Seq[String]] = {
+    val cteAliases =
+      nodes.collect { case w: UnresolvedWith => w.cteRelations.map(_._1.toLowerCase) }.flatten.toSet
+    nodes.collect { case r: UnresolvedRelation => r.multipartIdentifier }
+      .filterNot(parts => parts.length == 1 && cteAliases(parts.head.toLowerCase)).distinct
   }
 
   /** The planner knobs a request context sets (PlannerContext /
@@ -74,16 +149,19 @@ object SqlLifecycle {
     val groupByEnableMultiValueUnnesting: Boolean = flag("groupByEnableMultiValueUnnesting", true)
   }
 
-  /** Run `body` in the statement's planning scope: metadata snapshots
-    * refreshed when the text reads INFORMATION_SCHEMA or sys, and the
-    * context's sqlTimeZone ([[SessionScope]]). Execution must run inside
-    * the scope too, so runtime casts and renders see the same zone. The
-    * engine's dialect (lenient casts, wrapping arithmetic) and functions
-    * are the session's own (`GraftSession.configure`). */
-  def scoped[A](spark: SparkSession, sql: String, ctx: PlannerContext)(body: => A): A = {
-    SystemSchema.refreshIfMetadataQuery(spark, sql)
-    SessionScope.run(spark, ctx.sqlTimeZone)(body)
-  }
+  /** Run `body` in the statement's planning scope: the context's
+    * sqlTimeZone ([[SessionScope]]), then the snapshots of the metadata
+    * schemas the statement reads refreshed. The statement is parsed here,
+    * inside the scope, since the parser reads the zone (a TIMESTAMP
+    * literal is an instant in it). Execution must run inside the scope
+    * too, so runtime casts and renders see the same zone. The engine's
+    * dialect (lenient casts, wrapping arithmetic) and functions are the
+    * session's own (`GraftSession.configure`). */
+  def scoped[A](spark: SparkSession, statement: Statement, ctx: PlannerContext)(body: => A): A =
+    SessionScope.run(spark, ctx.sqlTimeZone) {
+      SystemSchema.refreshFor(spark, statement.relations)
+      body
+    }
 
   /** The one session-conf write a request makes: its own sqlTimeZone. The
     * server runs requests on a thread pool and two zones cannot share one
@@ -116,8 +194,8 @@ object SqlLifecycle {
     * rewrite and outer limit. Call inside [[scoped]]. The malformed-time-
     * literal check runs here too: the analysis check `configure` installs
     * misses a session whose analyzer was built before it. */
-  def plan(spark: SparkSession, sql: String, ctx: PlannerContext): DataFrame = {
-    val df = spark.sql(sql)
+  def plan(spark: SparkSession, query: Query, ctx: PlannerContext): DataFrame = {
+    val df = CatalystBridge.ofRows(spark, query.parsed)
     graft.plans.PlannerChecks.illegalTimeLiterals(df.queryExecution.analyzed)
     val approx =
       if (ctx.useApproximateCountDistinct) graft.plans.PlannerChecks.approximateCountDistinct(df)
@@ -137,7 +215,7 @@ object SqlLifecycle {
   /** INSERT DML routes through the ingest path; the published row count is
     * the statement's update count (the write is synchronous here, where the
     * reference hands back an ingest task handle). */
-  def insert(spark: SparkSession, ins: Insert): Long = SqlInsertDml.run(spark, ins.stmt).count()
+  def insert(spark: SparkSession, ins: Insert): Long = SqlInsertDml.run(spark, ins).count()
 
   /** The EXPLAIN result columns (DruidPlanner.getExplainStructType,
     * DruidPlanner.java:669). */
@@ -157,10 +235,11 @@ object SqlLifecycle {
     // `EXPLAIN PLAN FOR INSERT ...` explains the inner SELECT's plan (the
     // reference renders the underlying scan query: CalciteInsertDmlTest
     // .testExplainInsertFromExternal)
-    val explained = explain.inner match {
-      case Insert(ins) => spark.sql(SqlInsertDml.rewriteExtern(spark, ins.selectSql))
-      case _ => spark.sql(explain.sql)
-    }
+    val explained = CatalystBridge.ofRows(spark, explain.inner match {
+      case ins: Insert => ins.select
+      case q: Query => q.parsed
+      case _: Explain => parse(spark, explain.sql) // a nested EXPLAIN: Spark's parse error
+    })
     val plan = explained.queryExecution.explainString(
       org.apache.spark.sql.execution.SimpleMode).trim
     val resources = JsonMethods.compact(JsonMethods.render(JArray(
@@ -169,10 +248,13 @@ object SqlLifecycle {
     Seq(JObject("PLAN" -> JString(plan), "RESOURCES" -> JString(resources)))
   }
 
-  /** Replace each positional `?` placeholder with `f(position)` (0-based);
-    * a `?` inside a string literal, a `--` line comment or a block comment
-    * is left alone. */
-  private[server] def replaceParameters(sql: String)(f: Int => String): String = {
+  /** Bind positional `?` placeholders to typed parameter literals — the
+    * reference's prepared-statement path (SqlQuery.java getParameterList →
+    * Calcite TypedValue binding). Literal rendering by declared SQL type; a
+    * null entry is an explicitly-unbound position. A `?` inside a string
+    * literal, a `--` line comment or a block comment is left alone. */
+  def bindParameters(sql: String, params: Seq[(String, JValue)]): String = {
+    if (params.isEmpty) return sql
     val out = new StringBuilder
     var inString = false
     var inComment = false
@@ -196,28 +278,19 @@ object SqlLifecycle {
           inComment = true; out.append(c)
         case '/' if i + 1 < sql.length && sql.charAt(i + 1) == '*' =>
           inBlock = true; out.append("/*"); i += 1
-        case '?' => out.append(f(next)); next += 1
+        case '?' =>
+          // the reference's unbound-parameter surface (SqlPlanningException,
+          // 0-indexed position: CalciteParameterQueryTest
+          // .testPartiallyMissingParameter expects position[1])
+          if (next >= params.length || params(next) == null)
+            throw new IllegalArgumentException(s"Parameter at position[$next] is not bound")
+          out.append(literal(params(next))); next += 1
         case other => out.append(other)
       }
       i += 1
     }
     out.toString
   }
-
-  /** Bind positional `?` placeholders to typed parameter literals — the
-    * reference's prepared-statement path (SqlQuery.java getParameterList →
-    * Calcite TypedValue binding). Literal rendering by declared SQL type; a
-    * null entry is an explicitly-unbound position. */
-  def bindParameters(sql: String, params: Seq[(String, JValue)]): String =
-    if (params.isEmpty) sql
-    else replaceParameters(sql) { next =>
-      // the reference's unbound-parameter surface (SqlPlanningException,
-      // 0-indexed position: CalciteParameterQueryTest
-      // .testPartiallyMissingParameter expects position[1])
-      if (next >= params.length || params(next) == null)
-        throw new IllegalArgumentException(s"Parameter at position[$next] is not bound")
-      literal(params(next))
-    }
 
   private def literal(p: (String, JValue)): String = {
     val (tpe, v) = p

@@ -15,24 +15,30 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * cross-database views over temp state, and permanent views may not
   * reference temp views — so each register() materializes a SNAPSHOT as
   * `CREATE OR REPLACE VIEW ... AS VALUES` (plan-inlined literal rows, no
-  * filesystem writes). The SQL entry points call refreshIfMetadataQuery
-  * before planning, so metadata queries always see the live catalog — the
+  * filesystem writes). The SQL entry points call refreshFor before
+  * planning, so metadata queries always see the live catalog — the
   * same effect as the reference's broker refreshing its DruidSchema on
   * segment change. sys.server_segments is NOT a snapshot: it's a lazy view
   * over sys.servers × sys.segments, computed distributed at query time.
   */
 object SystemSchema {
 
-  /** Register-on-access: the SQL entry points call this with the statement
-    * text before planning; when it references a metadata schema, the
-    * snapshots refresh from the live catalog/runtime state first — the
-    * analog of the reference broker refreshing DruidSchema on segment
-    * change (sql/.../schema/DruidSchema.java), without a manual
-    * register(). A non-metadata query pays only a substring check. */
-  def refreshIfMetadataQuery(spark: SparkSession, sql: String): Unit = {
-    val s = sql.toLowerCase(java.util.Locale.ROOT)
-    if (s.contains("information_schema.")) register(spark)
-    if (s.contains("sys.")) registerServers(spark)
+  /** The metadata schema a relation name lives in, `sys` or
+    * `information_schema` in any case, if it lives in one. */
+  def metadataSchema(relation: Seq[String]): Option[String] =
+    relation.init.lastOption.map(_.toLowerCase(java.util.Locale.ROOT))
+      .filter(s => s == "information_schema" || s == "sys")
+
+  /** Register-on-access: the SQL entry points call this with the relation
+    * names a statement reads, before planning; the snapshots of the
+    * metadata schemas among them refresh from the live catalog/runtime
+    * state first — the analog of the reference broker refreshing
+    * DruidSchema on segment change (sql/.../schema/DruidSchema.java),
+    * without a manual register(). */
+  def refreshFor(spark: SparkSession, relations: Seq[Seq[String]]): Unit = {
+    val schemas = relations.flatMap(metadataSchema).toSet
+    if (schemas("information_schema")) register(spark)
+    if (schemas("sys")) registerServers(spark)
   }
 
   /** Register INFORMATION_SCHEMA views over the current catalog state. */

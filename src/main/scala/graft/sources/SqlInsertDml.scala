@@ -204,10 +204,16 @@ object SqlInsertDml {
     ExternRe.replaceAllIn(sql, m => {
       def unq(s: String) = s.replace("''", "'")
       val df = readExtern(spark, unq(m.group(1)), unq(m.group(2)), unq(m.group(3)))
-      val view = "extern_" + java.lang.Integer.toHexString(m.group(0).hashCode & 0x7fffffff)
+      val view = externView(m)
       df.createOrReplaceTempView(view)
       java.util.regex.Matcher.quoteReplacement(view)
     })
+
+  /** The temp views [[rewriteExtern]] puts in place of `sql`'s EXTERN calls. */
+  def externViews(sql: String): Set[String] = ExternRe.findAllMatchIn(sql).map(externView).toSet
+
+  private def externView(m: scala.util.matching.Regex.Match): String =
+    "extern_" + java.lang.Integer.toHexString(m.group(0).hashCode & 0x7fffffff)
 
   private def readExtern(spark: SparkSession, inputSource: String,
       inputFormat: String, signature: String): DataFrame = {
@@ -294,27 +300,27 @@ object SqlInsertDml {
     }
   }
 
-  /** Parse + execute an INSERT statement; see the [[InsertStatement]]
-    * overload. */
+  /** Parse + execute an INSERT statement; see the
+    * [[graft.server.SqlLifecycle.Insert]] overload. */
   def run(spark: SparkSession, sql: String, outBase: String): DataFrame =
-    run(spark, parse(sql).getOrElse(
-      throw new IllegalArgumentException(s"not an INSERT statement: $sql")), outBase)
+    run(spark, graft.server.SqlLifecycle.Insert(parse(sql).getOrElse(
+      throw new IllegalArgumentException(s"not an INSERT statement: $sql")))(spark), outBase)
 
-  /** Execute a parsed INSERT statement: run the SELECT, publish through
-    * BatchIngest under `outBase/<table>`, and register the table. Returns
-    * the published DataFrame. */
-  def run(spark: SparkSession, stmt: InsertStatement,
+  /** Execute a classified INSERT statement: run its parsed SELECT, publish
+    * through BatchIngest under `outBase/<table>`, and register the table.
+    * Returns the published DataFrame. */
+  def run(spark: SparkSession, ins: graft.server.SqlLifecycle.Insert,
       outBase: String = defaultOutBase): DataFrame = {
+    val stmt = ins.stmt
     // SQL views are not insertable datasources (CalciteInsertDmlTest
     // .testInsertIntoView; the view schema itself is caught at parse)
     if (graft.server.PlannerResources.isView(spark, stmt.target))
       throw new IllegalArgumentException(
         s"Cannot INSERT into [view.${stmt.target}] because it is not a Druid datasource.")
-    val selectSql = rewriteExtern(spark, stmt.selectSql)
 
     // the reference rejects ORDER BY on the outer SELECT (CLUSTERED BY owns
     // segment ordering); LIMIT/OFFSET wrappers above the Sort stay legal
-    val selectPlan = spark.sessionState.sqlParser.parsePlan(selectSql)
+    val selectPlan = ins.select
     var parsed = selectPlan
     var unwrapping = true
     while (unwrapping) parsed match {
@@ -330,12 +336,9 @@ object SqlInsertDml {
     // self-insert (INSERT INTO foo SELECT ... FROM foo — the reference's
     // testInsertIntoExistingTable): materialize the read eagerly so the
     // append doesn't scan the directory it is writing into
-    // collectWithSubqueries: a target read hidden in an expression subquery
-    // (WHERE x IN (SELECT ... FROM target)) must also trigger checkpointing
-    val readsTarget = selectPlan.collectWithSubqueries {
-      case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
-        r.multipartIdentifier.last.toLowerCase
-    }.contains(stmt.target.toLowerCase)
+    // (relations include expression subqueries: WHERE x IN (SELECT ... FROM
+    // target) must also trigger checkpointing)
+    val readsTarget = ins.relations.exists(_.last.equalsIgnoreCase(stmt.target))
     val selectedRaw = org.apache.spark.sql.graftbridge.CatalystBridge.ofRows(spark, selectPlan)
     // as SqlLifecycle.plan: whatever analyzer the session was built with
     graft.plans.PlannerChecks.illegalTimeLiterals(selectedRaw.queryExecution.analyzed)

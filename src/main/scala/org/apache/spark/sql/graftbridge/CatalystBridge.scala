@@ -52,6 +52,13 @@ object CatalystBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Parse SQL text as `spark.sql` does: the session's parser, the session active. */
+  def parsePlan(spark: org.apache.spark.sql.SparkSession, sql: String)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    s.withActive(s.sessionState.sqlParser.parsePlan(sql))
+  }
+
   /** The analyzed logical plan of a DataFrame. */
   def analyzed(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

@@ -687,14 +687,102 @@ class AvaticaEndpointSpec extends SparkSpecBase {
         "sql" -> JString(sql), "maxRowCount" -> JInt(-1)))))
     }
     (1 to 3).foreach(_ => execute("SELECT COUNT(*) AS cnt FROM foo"))
-    val valid = ep.sqlRequestLog
+    val valid = ep.lifecycle.requestLog.recent
     assert(valid.size == 3)
-    assert(valid.forall(l => l.success && l.timeMs >= 0))
+    assert(valid.forall(l => l.success &&
+      (JsonMethods.parse(l.statsJson) \ "query/time").asInstanceOf[JInt].num >= 0))
     // invalid sql logs success=false
     execute("SELECT notexist FROM foo")
-    val all = ep.sqlRequestLog
+    val all = ep.lifecycle.requestLog.recent
     assert(all.size == 4)
     assert(!all.last.success)
+  }
+
+  test("prepare of a Spark WITH … INSERT writes nothing: the parsed plan holds a " +
+      "command below its CTE (and INSERT OVERWRITE DIRECTORY or EXECUTE IMMEDIATE " +
+      "writes nothing)") {
+    val dir = java.nio.file.Files.createTempDirectory("prep_with_insert").toString
+    spark.sql(s"CREATE TABLE prep_with_insert_t (x INT) USING parquet LOCATION '$dir'")
+    try withFacade { port =>
+      val path = "/druid/v2/sql/avatica/"
+      post(port, path, """{"request":"openConnection","connectionId":"prep4"}""")
+      val prepared = post(port, path, JsonMethods.compact(JsonMethods.render(JObject(
+        "request" -> JString("prepare"), "connectionId" -> JString("prep4"),
+        "sql" -> JString(
+          "WITH s AS (SELECT 1 AS x) INSERT INTO prep_with_insert_t SELECT x FROM s"),
+        "maxRowCount" -> JInt(-1)))))
+      assert((prepared \ "response") == JString("prepare"))
+      assert((prepared \ "statement" \ "signature" \ "columns") == JArray(Nil))
+      assert(spark.table("prep_with_insert_t").count() == 0)
+      // a directory write is no Command node, and is refused too
+      val out = new java.io.File(dir + "_dir")
+      val toDir = post(port, path, JsonMethods.compact(JsonMethods.render(JObject(
+        "request" -> JString("prepare"), "connectionId" -> JString("prep4"),
+        "sql" -> JString(s"INSERT OVERWRITE DIRECTORY '$out' USING parquet SELECT 1 AS x"),
+        "maxRowCount" -> JInt(-1)))))
+      assert((toDir \ "statement" \ "signature" \ "columns") == JArray(Nil))
+      assert(!out.exists, "prepare must not write the directory")
+      post(port, path, JsonMethods.compact(JsonMethods.render(JObject(
+        "request" -> JString("prepare"), "connectionId" -> JString("prep4"),
+        "sql" -> JString("EXECUTE IMMEDIATE 'INSERT INTO prep_with_insert_t SELECT 1'"),
+        "maxRowCount" -> JInt(-1)))))
+      assert(spark.table("prep_with_insert_t").count() == 0,
+        "prepare must not run the text of an EXECUTE IMMEDIATE")
+    } finally spark.sql("DROP TABLE IF EXISTS prep_with_insert_t")
+  }
+
+  test("Avatica statements share the façade's capacity: with the one slot held, " +
+      "prepareAndExecute is refused and its statement slot is freed (a malformed " +
+      "native body still gets 400)") {
+    import AvaticaEndpointSpec.{entered, release}
+    foo.createOrReplaceTempView("foo")
+    spark.udf.register("hold_capacity_slot", org.apache.spark.sql.functions.udf { () =>
+      entered.countDown()
+      release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      1
+    }.asNondeterministic())
+    val facade = HttpFacade.start(spark, name => Sources.table(spark, sf(), name),
+      maxConcurrentQueries = 1)
+    val client = HttpClient.newHttpClient()
+    try {
+      val held = client.sendAsync(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${facade.port}/druid/v2/sql"))
+          .POST(HttpRequest.BodyPublishers.ofString(
+            """{"query": "SELECT hold_capacity_slot() AS h"}"""))
+          .header("Content-Type", "application/json").build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        s"the slot-holding query never ran: ${Option(held.getNow(null)).map(_.body())}")
+      val path = "/druid/v2/sql/avatica/"
+      post(facade.port, path, """{"request":"openConnection","connectionId":"cap1"}""")
+      val sid = (post(facade.port, path,
+        """{"request":"createStatement","connectionId":"cap1"}""") \ "statementId")
+      val (status, refused) = postStatus(facade.port, path,
+        JsonMethods.compact(JsonMethods.render(JObject(
+          "request" -> JString("prepareAndExecute"), "connectionId" -> JString("cap1"),
+          "statementId" -> sid, "sql" -> JString("SELECT COUNT(*) AS cnt FROM foo"),
+          "maxRowCount" -> JInt(-1)))))
+      assert(status == 500 && (refused \ "response") == JString("error"))
+      assert((refused \ "errorMessage").asInstanceOf[JString].s.startsWith(
+        "Too many concurrent queries, total query capacity of 1 exceeded"))
+      // the refused statement's slot is free: the connection's 4 slots all open
+      (1 to 4).foreach { _ =>
+        assert((post(facade.port, path,
+          """{"request":"createStatement","connectionId":"cap1"}""") \ "response")
+          == JString("createStatement"))
+      }
+      // a native body that is not JSON is refused before admission: 400, not 429
+      val badJson = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${facade.port}/druid/v2"))
+          .POST(HttpRequest.BodyPublishers.ofString("{not json")).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(badJson.statusCode() == 400, badJson.body())
+      release.countDown()
+      assert(held.get(60, java.util.concurrent.TimeUnit.SECONDS).statusCode() == 200)
+    } finally {
+      release.countDown()
+      facade.stop()
+    }
   }
 
   test("testAutoReconnectOnNoSuchConnection (:820) — closeConnection drops " +
@@ -716,4 +804,10 @@ class AvaticaEndpointSpec extends SparkSpecBase {
         \ "response") == JString("openConnection"))
     }
   }
+}
+
+object AvaticaEndpointSpec {
+  // static: a task runs a deserialized copy of the UDF's closure
+  val entered = new java.util.concurrent.CountDownLatch(1)
+  val release = new java.util.concurrent.CountDownLatch(1)
 }

@@ -174,6 +174,31 @@ class GraftSessionSpec extends SparkSpecBase {
     } finally facade.stop()
   }
 
+  test("configure registers the SQL functions without replacement warnings") {
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val name = classOf[org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry].getName
+    val logger = org.apache.logging.log4j.LogManager.getLogger(name).asInstanceOf[CoreLogger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("function-registry-probe", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    val level = logger.getLevel
+    appender.start()
+    logger.addAppender(appender)
+    logger.setLevel(org.apache.logging.log4j.Level.WARN)
+    try GraftSession.configure(spark.newSession())
+    finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    val replaced = seen.asScala.filter(_.contains("replaced a previously registered function"))
+    assert(replaced.isEmpty, replaced.take(3).mkString("\n"))
+  }
+
   test("a native façade request waits for an exclusive sqlTimeZone scope instead of " +
       "running inside it") {
     import GraftSessionSpec.{entered, release}

@@ -1099,6 +1099,67 @@ class HttpFacadeSpec extends SparkSpecBase {
     } finally facade.stop()
   }
 
+  /** Run `f` against a façade, with `sql` posting one statement to it and
+    * `hits` reading the (plan, result) cache hit counts. */
+  private def withSqlCaches(f: (String => (Int, JValue), () => (Long, Long)) => Unit): Unit = {
+    val facade = HttpFacade.start(spark, name => Sources.table(spark, sf(), name))
+    try {
+      Sources.table(spark, sf(), "orders").createOrReplaceTempView("orders")
+      f(q => post(facade.port, "/druid/v2/sql", s"""{"query": "$q"}"""),
+        () => (facade.planCache.hits, facade.resultCache.hits))
+    } finally facade.stop()
+  }
+
+  test("SQL caches: a Spark WITH … INSERT (into a table or a directory, or run " +
+      "by EXECUTE IMMEDIATE) is a command, so each POST runs it and neither hits a cache") {
+    val dir = java.nio.file.Files.createTempDirectory("with_insert").toString
+    spark.sql(s"CREATE TABLE with_insert_t (x INT) USING parquet LOCATION '$dir'")
+    try withSqlCaches { (sql, hits) =>
+      val before = hits()
+      val insert = "WITH s AS (SELECT 1 AS x) INSERT INTO with_insert_t SELECT x FROM s"
+      assert(sql(insert)._1 == 200 && sql(insert)._1 == 200)
+      assert(spark.table("with_insert_t").count() == 2, "each POST must run the INSERT")
+      assert(hits() == before, "neither POST may hit a cache")
+      // a directory write is no Command node, and is one too
+      val out = new java.io.File(dir + "_dir")
+      val toDir = s"WITH s AS (SELECT 1 AS x) INSERT OVERWRITE DIRECTORY '$out' " +
+        "USING parquet SELECT x FROM s"
+      assert(sql(toDir)._1 == 200 && out.isDirectory)
+      org.apache.commons.io.FileUtils.deleteDirectory(out)
+      assert(sql(toDir)._1 == 200 && out.isDirectory, "the second POST must write again")
+      assert(hits() == before, "neither directory write may hit a cache")
+      // nor is the text an EXECUTE IMMEDIATE runs
+      val immediate = "EXECUTE IMMEDIATE 'INSERT INTO with_insert_t SELECT 1'"
+      assert(sql(immediate)._1 == 200 && sql(immediate)._1 == 200)
+      assert(spark.table("with_insert_t").count() == 4, "each EXECUTE IMMEDIATE must run")
+      assert(hits() == before, "neither EXECUTE IMMEDIATE may hit a cache")
+    } finally spark.sql("DROP TABLE IF EXISTS with_insert_t")
+  }
+
+  test("SQL caches: a statement that reads the clock never hits either cache, " +
+      "however it is spelled") {
+    withSqlCaches { (sql, hits) =>
+      for (q <- Seq("SELECT NOW () AS t", "SELECT unix_timestamp() AS t",
+          "WITH c AS (SELECT current_date() AS d) SELECT d FROM c")) {
+        val before = hits()
+        assert(sql(q)._1 == 200 && sql(q)._1 == 200)
+        assert(hits() == before, s"$q reads the clock: it must bypass both caches")
+      }
+    }
+  }
+
+  test("SQL caches: text that only looks like metadata (a sys. string literal) " +
+      "caches") {
+    withSqlCaches { (sql, hits) =>
+      val like = "SELECT COUNT(*) AS c FROM orders WHERE o_orderpriority LIKE '%sys.%'"
+      val (s1, r1) = sql(like)
+      val before = hits()
+      val (s2, r2) = sql(like)
+      assert(s1 == 200 && s2 == 200 && r1 == r2, JsonMethods.compact(JsonMethods.render(r1)))
+      assert(hits()._2 == before._2 + 1, "the repeat must hit the result cache")
+    }
+  }
+
   test("native result cache (CachingClusteredClient result-level cache): " +
       "repeat POSTs return the cached payload; populateCache=false skips " +
       "storing; admin invalidation clears it") {

@@ -407,6 +407,21 @@ class SqlResourceGoldenSpec extends SparkSpecBase {
     }
   }
 
+  test("sqlTimeZone also reads the statement's time literals: a TIMESTAMP " +
+      "literal is an instant in the query's zone") {
+    withFacade { port =>
+      for (lit <- Seq("TIMESTAMP", "TIMESTAMP_LTZ")) {
+        val q = s"SELECT COUNT(*) AS c FROM foo WHERE __time >= $lit '2000-01-02 00:00:00'"
+        // 2000-01-02T08:00Z in Los Angeles: the 2000-01-02 row falls out
+        val (s1, la, _) = post(port,
+          s"""{"query": "$q", "context": {"sqlTimeZone": "America/Los_Angeles"}}""")
+        assert(s1 == 200 && la == "[{\"c\":4}]\n", s"$lit: $la")
+        val (s2, utc, _) = post(port, s"""{"query": "$q"}""")
+        assert(s2 == 200 && utc == "[{\"c\":5}]\n", s"$lit: $utc")
+      }
+    }
+  }
+
   test("testArrayLinesResultFormatWithHeader_nullColumnType (:796) — a ROW " +
       "value has no Druid type (null) and SQL type ROW in the type headers") {
     withFacade { port =>

@@ -94,6 +94,29 @@ class SystemSchemaSpec extends SparkSpecBase {
     }
   }
 
+  test("a quoted metadata schema refreshes too: `information_schema`.tables lists " +
+      "a table created after the last register()") {
+    SystemSchema.register(spark)
+    import spark.implicits._
+    Seq((1, "a")).toDF("k", "v").createOrReplaceTempView("fresh_after_quoted")
+    val facade = graft.server.HttpFacade.start(spark,
+      name => Sources.table(spark, sf(), name))
+    try {
+      val client = java.net.http.HttpClient.newHttpClient()
+      val req = java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://127.0.0.1:${facade.port}/druid/v2/sql"))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
+          """{"query": "SELECT table_name FROM `information_schema`.tables WHERE table_name = 'fresh_after_quoted'"}"""))
+        .header("Content-Type", "application/json").build()
+      val body = client.send(req,
+        java.net.http.HttpResponse.BodyHandlers.ofString()).body()
+      assert(body.contains("fresh_after_quoted"), body)
+    } finally {
+      facade.stop()
+      spark.catalog.dropTempView("fresh_after_quoted")
+    }
+  }
+
   test("sys.server_segments is a lazy view: segments registered AFTER " +
       "registerServers appear without another registerServers call") {
     SystemSchema.registerServers(spark)
