@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.CatalystBridge
+import org.apache.spark.sql.graftbridge.{CatalystBridge, ParamLiterals}
 
 /** Engine session setup as a LIBRARY concern, not a launcher concern.
   *
@@ -11,10 +11,13 @@ import org.apache.spark.sql.graftbridge.CatalystBridge
   * plan never depends on which query ran first) and the malformed time
   * literal check (`PlannerChecks.illegalTimeLiterals`, an analysis check
   * that reaches the analyzers built after the first `configure`;
-  * SqlLifecycle also runs it on every statement). A tuning default yields
-  * to a key the embedder set explicitly (builder option, sparkContext conf
-  * or a prior `spark.conf.set`); a dialect key does not, so every route
-  * runs one dialect.
+  * SqlLifecycle also runs it on every statement). It also installs
+  * `ParamLiterals`, the physical-plan rule that keeps literal values out of
+  * generated code, so a query shape compiles once whatever its interval
+  * bounds and filter values (SCALE.md, "Generated code and literals").
+  * A tuning default yields to a key the embedder set explicitly (builder
+  * option, sparkContext conf or a prior `spark.conf.set`); a dialect key
+  * does not, so every route runs one dialect.
   *
   *  - `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` — the
   *    first/last/any pair folds (FirstLastFoldAgg/AnyFoldAgg) and every
@@ -49,9 +52,11 @@ object GraftSession {
   private val dialectKeys = Set("spark.sql.ansi.enabled", "spark.sql.legacy.sizeOfNull")
 
   /** Marker conf: present once this session has been configured, so the
-    * entry points that take a caller's session cost one conf lookup after
-    * the first call. */
+    * entry points that take a caller's session cost one extensions check
+    * and one conf lookup after the first call. */
   private val configuredKey = "spark.graft.sessionDefaultsApplied"
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** CPUs for a local session: `SPARK_GRAFT_CPUS`, else every core. */
   def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
@@ -73,8 +78,15 @@ object GraftSession {
   }
 
   def configure(spark: SparkSession): SparkSession = {
+    // before the first conf read: that read builds the session state, and a
+    // session state's columnar rules are fixed when it is built
+    synchronized(CatalystBridge.installColumnarRule(spark, ParamLiterals))
     if (!spark.conf.getOption(configuredKey).contains("true")) synchronized {
       if (!spark.conf.getOption(configuredKey).contains("true")) {
+        if (!CatalystBridge.columnarRules(spark).contains(ParamLiterals))
+          log.warn("GraftSession.configure: this session's state was built before " +
+            "configure ran, so its generated code keeps literal values and compiles a " +
+            "class per new value; its newSession() children parameterize them")
         defaults.foreach { case (k, v) =>
           if (dialectKeys(k) || !CatalystBridge.confIsSet(spark, k))
             spark.conf.set(k, v)

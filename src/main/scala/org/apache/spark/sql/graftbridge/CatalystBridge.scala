@@ -38,6 +38,21 @@ object CatalystBridge {
     if (!s.extensions.buildCheckRules(s).contains(rule)) s.extensions.injectCheckRule(_ => rule)
   }
 
+  /** Add a columnar rule to the session's extensions unless it is there.
+    * A session state takes its columnar rules when it is built, so the rule
+    * reaches this session only if its state is built afterwards; it reaches
+    * the `newSession()` children, which share the extensions, either way. */
+  def installColumnarRule(spark: org.apache.spark.sql.SparkSession,
+      rule: org.apache.spark.sql.execution.ColumnarRule): Unit = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    if (!s.extensions.buildColumnarRules(s).contains(rule)) s.extensions.injectColumnar(_ => rule)
+  }
+
+  /** The columnar rules of the session's state (building the state). */
+  def columnarRules(spark: org.apache.spark.sql.SparkSession)
+      : Seq[org.apache.spark.sql.execution.ColumnarRule] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.columnarRules
+
   /** Session FunctionRegistry (private[sql] on the classic session). */
   def functionRegistry(spark: org.apache.spark.sql.SparkSession)
       : org.apache.spark.sql.catalyst.analysis.FunctionRegistry =

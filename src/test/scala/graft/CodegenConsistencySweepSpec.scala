@@ -14,15 +14,17 @@ import org.apache.spark.sql.Row
   * for exactly the code class this catches: the repo's
   * TypedImperativeAggregates (sketches, first/last pair-folds, variance,
   * approx histograms, lambda folds — all CodegenFallback objects whose
-  * SERIALIZATION path differs between modes), RuntimeReplaceables, and the
-  * HofUnroll / expression-macro outputs.
+  * SERIALIZATION path differs between modes), RuntimeReplaceables, the
+  * HofUnroll / expression-macro outputs, and the filter- and interval-heavy
+  * queries whose literal operands run as ParamLiterals.
   *
   * Queries run at sf0.001 through the same SparkEntry entries the oracle
   * gate uses, so a divergence here is a divergence the gate would ship.
   */
 class CodegenConsistencySweepSpec extends SparkSpecBase {
 
-  // the TypedImperativeAggregate / RuntimeReplaceable / HOF-heavy slice
+  // the TypedImperativeAggregate / RuntimeReplaceable / HOF-heavy slice, then
+  // the filter- and interval-heavy queries
   private val swept = Seq(
     // first/last/any pair-folds + rollup refold
     "agg_first_last", "agg_first_last_rollup", "agg_any_value",
@@ -45,7 +47,12 @@ class CodegenConsistencySweepSpec extends SparkSpecBase {
     "text_analysis", "text_fingerprint",
     // r15 additions: window averagers over spine-filled buckets, and the
     // contrib timeMin/timeMax/distinctCount aggregators
-    "moving_average", "agg_time_minmax_distinct")
+    "moving_average", "agg_time_minmax_distinct",
+    // filter- and interval-heavy queries: their comparison, arithmetic and
+    // IN operands reach generated code as ParamLiterals
+    "filter_selector_in_bound", "filter_interval", "filter_colcmp_expression",
+    "filter_like_regex_search", "timeseries_month", "timeseries_zerofill",
+    "timeseries_desc_limit", "topn_supplier_revenue", "groupby_having", "scan_orders")
 
   /** Stable rendering: binary → hex, arrays/rows recursed, floats exact. */
   private def canon(v: Any): String = v match {

@@ -226,10 +226,11 @@ class SystemSchemaSpec extends SparkSpecBase {
     val mets = rows.head.getAs[String]("metrics")
     assert(dims.contains("o_orderstatus") && !dims.contains("o_totalprice"))
     assert(mets.contains("o_totalprice") && !mets.contains("o_orderstatus"))
-    // the reference's canonical sys query: sum sizes per datasource
+    // the reference's canonical sys query: sum sizes per datasource (on
+    // orders_ds alone: other suites may have registered more datasources)
     val bySize = spark.sql(
       """SELECT datasource, SUM(size) AS total, COUNT(*) AS n
-        |FROM sys.segments GROUP BY 1""".stripMargin).head()
+        |FROM sys.segments WHERE datasource = 'orders_ds' GROUP BY 1""".stripMargin).head()
     assert(bySize.getString(0) == "orders_ds" && bySize.getLong(1) > 0L)
   }
 }
