@@ -169,10 +169,6 @@ object SimilarityFunctions {
   def int8Quantize(a: Column, scale: Column): Column =
     transform(a, x => floor(x.cast("double") / scale + lit(0.5)))
 
-  /** Cosine similarity in double precision. */
-  def cosineSimilarity(a: Column, b: Column): Column =
-    dotProduct(a, b) / (l2Norm(a) * l2Norm(b))
-
   /** Hyperplane weights, computed driver-side (plane j, dim i):
     * (md5-first-8-hex("j_i") % 2001 - 1000) / 1000.0 — deterministic, no RNG
     * state, and reproducible in any engine with md5 (the DuckDB oracle

@@ -86,33 +86,17 @@ object TextFunctions {
     * `(text)`-taking wrappers exist for small/ad-hoc use only.
     */
 
-  /** Rolling-hash fingerprint over a PRE-MATERIALIZED normalized column.
-    * Single fused pass: hash each k-gram as it is cut, rather than
-    * materializing the full gram array and then a second hash array (two
-    * HOF passes + an intermediate ~len(n)-element array per row). */
+  /** Rolling-hash content fingerprint over a PRE-MATERIALIZED normalized
+    * column: the minimum 60-bit hash over its character k-grams (a 1-perm
+    * minhash — robust to small edits; winnowing's "record the minimum"
+    * step), null when shorter than k. Single fused pass: hash each k-gram
+    * as it is cut, rather than materializing the full gram array and then
+    * a second hash array (two HOF passes + an intermediate ~len(n)-element
+    * array per row). */
   def rollingMinHashOfNormalized(n: Column, k: Int = 8): Column =
     when(length(n) >= k,
       array_min(transform(sequence(lit(1), length(n) - (k - 1)),
         i => hexLong60(n.substr(i, lit(k))))))
-
-  /** Rolling-hash-style content fingerprint: minimum 60-bit hash over
-    * character k-grams (a 1-perm minhash — robust to small edits;
-    * winnowing's "record the minimum" step). Null when text shorter than k.
-    * See the trap note above: prefer [[rollingMinHashOfNormalized]].
-    */
-  def rollingMinHash(c: Column, k: Int = 8): Column =
-    rollingMinHashOfNormalized(normalizeWs(c), k)
-
-  /** Character k-gram shingles over a PRE-MATERIALIZED normalized column. */
-  def charShinglesOfNormalized(n: Column, k: Int): Column =
-    when(length(n) >= k,
-      transform(sequence(lit(1), length(n) - (k - 1)), i => n.substr(i, lit(k))))
-      .otherwise(array().cast("array<string>"))
-
-  /** Character k-gram shingles of the normalized text (empty array when
-    * shorter than k). See the trap note above. */
-  def charShingles(c: Column, k: Int): Column =
-    charShinglesOfNormalized(normalizeWs(c), k)
 
   /** Word k-gram shingles over a PRE-MATERIALIZED token-array column. */
   def wordShinglesOfTokens(t: Column, k: Int): Column =

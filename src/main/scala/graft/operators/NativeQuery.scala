@@ -95,7 +95,7 @@ object NativeQuery {
         .foreach(n => throw new IllegalArgumentException(s"[$n] already defined"))
     }
     // maxSubqueryRows (QueryContexts.getMaxSubqueryRows): caps every inlined
-    // subquery datasource of this query; unlimited when absent
+    // subquery datasource of this query
     val maxSubqueryRows = (q \ "context" \ "maxSubqueryRows") match {
       case JInt(n) => Some(n.toInt); case JLong(n) => Some(n.toInt); case _ => None
     }
@@ -608,12 +608,12 @@ object NativeQuery {
           // and serve the outer query from the inlined rows — a probe
           // count() followed by re-execution would run the subquery twice
           // and could return different rows for nondeterministic inputs.
-          // The context key overrides the server-level default
-          // (QueryContexts.DEFAULT_MAX_SUBQUERY_ROWS = 100000), configurable
-          // via spark.graft.maxSubqueryRows; <= 0 disables inlining (the
-          // subquery stays a lazy distributed plan, unbounded).
-          val max = maxSubqueryRows.getOrElse(
-            spark.conf.get("spark.graft.maxSubqueryRows", "100000").toInt)
+          // The limit comes from the query's context, which carries the
+          // server-level default when one is configured
+          // (HttpFacade.start's defaultContext); absent both, it is
+          // QueryContexts.DEFAULT_MAX_SUBQUERY_ROWS = 100000. <= 0 disables
+          // inlining (the subquery stays a lazy distributed plan, unbounded).
+          val max = maxSubqueryRows.getOrElse(100000)
           if (max <= 0) sub
           else {
             val rows = sub.limit(max + 1).collect()

@@ -533,7 +533,10 @@ final case class TopNQuery(
     // TopNQueryRunnerTest.testTopNOverFirstLastAggregator's MONTH ranking);
     // buckets with no rows are skipped, topN never zero-fills
     granularity: Granularity = AllGranularity,
-    timeColumn: String = "__time") {
+    timeColumn: String = "__time",
+    // the aggregator count from which the two-phase plan below is taken;
+    // Int.MaxValue keeps every list single-phase
+    twoPhaseMinAggs: Int = 6) {
 
   def run(ds: DataFrame): DataFrame = {
     GraftSession.configure(ds.sparkSession)
@@ -578,12 +581,10 @@ final case class TopNQuery(
     // on the rank metric being one of the aggregators (not a dimension
     // ordering or a post-agg). Null-safe (<=>) keys keep a null dimension
     // group rankable.
-    val twoPhaseMin = ds.sparkSession.conf
-      .get("spark.graft.topn.aggregateMetricFirstThreshold", "6").toInt
     val rankAggOpt = aggregations.find(_.name == metric)
     val aggInput =
       if (sortKey.isEmpty && rankAggOpt.isDefined &&
-          aggregations.size >= twoPhaseMin) {
+          aggregations.size >= twoPhaseMinAggs) {
         val p1 = finalizeFn(
           prepared.groupBy(dimCols: _*).agg(rankAggOpt.get.aliased))
         val p1ord = if (ascending) col(metric).asc else col(metric).desc

@@ -112,25 +112,22 @@ object Similarity {
     // could force a multi-GB broadcast; AQE broadcasts the built side at
     // runtime whenever it actually fits (guide §3.1) and degrades to a
     // shuffle join when it does not.
-    // r17: the capped path caches sh0 only until the eager checkpoint
-    // below materializes (it is read by the histogram AND the anti-join
-    // probe inside that one job); the uncapped path skips the cache —
-    // its only consumer is the checkpoint itself (§5: unpersist when done).
-    val cached = if (maxDf == Int.MaxValue) None else Some(sh0.cache())
+    // The capped path reads sh0 twice (the DF histogram and the anti-join
+    // probe), so it is materialized once; the uncapped path's only consumer
+    // is the checkpoint below. Posture of both: SCALE.md §11.
     val sh =
-      (cached match {
-        case None => sh0
-        case Some(c) =>
-          val hot = c.groupBy("sh").agg(count(lit(1)).as("df"))
-            .filter(col("df") > maxDf).select("sh")
-          c.join(hot, Seq("sh"), "left_anti")
-      })
+      (if (maxDf == Int.MaxValue) sh0
+       else {
+         val all = sh0.localCheckpoint(true)
+         val hot = all.groupBy("sh").agg(count(lit(1)).as("df"))
+           .filter(col("df") > maxDf).select("sh")
+         all.join(hot, Seq("sh"), "left_anti")
+       })
       // r16: materialize the capped shingle set ONCE — the sizes branch and
       // both self-join sides consumed it independently before, re-running
       // the DF histogram + cap join per consumer (4 extra aggregate/
       // broadcast subtrees in the r16-baseline plan; guide §2.4)
       .localCheckpoint(true)
-    cached.foreach(_.unpersist())
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
     val inter = sh.as("x").join(sh.as("y"), col("x.sh") === col("y.sh") && col("x.id") < col("y.id"))
       .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
@@ -204,8 +201,8 @@ object Similarity {
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4x16-bit banding guarantees completeness only for hamming <= 3")
-    val sh = simhashTable(df, idCol, textCol)
-      .cache() // consumed by both sides of the band join
+    // consumed by both sides of the band join: materialized once per call
+    val sh = simhashTable(df, idCol, textCol).localCheckpoint(true)
     val banded = sh.select(col("id"), col("simhash"),
       explode(array((0 until 4).map(b => SF.simhashBandKey(col("simhash"), b)): _*)).as("band_key"))
     val a = banded.select(col("band_key"), col("id").as("id_a"), col("simhash").as("sh_a"))
@@ -250,12 +247,16 @@ object Similarity {
     * width. Input edges cross the session boundary as eagerly-materialized
     * RDDs; the final labels carry a LAZY checkpoint mark, so the caller's
     * first action computes them (on the caller's session) and the blocks
-    * are cached for any re-read.
+    * are kept for any re-read.
     *
     * Returns (id, cluster_id) for every node that appears in a pair;
-    * cluster_id = min id in the component. */
+    * cluster_id = min id in the component.
+    *
+    * @param localThreshold graphs of at most this many pair rows are solved
+    *                       on the driver; 0 forces the distributed loop */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIter: Int = 20): DataFrame = {
+      idB: String = "id_b", maxIter: Int = 20,
+      localThreshold: Int = 1 << 20): DataFrame = {
     // materialize the pair-finder ONCE — everything downstream re-reads the
     // checkpointed blocks, never the (expensive) upstream plan
     val spark0 = pairs.sparkSession
@@ -270,17 +271,17 @@ object Similarity {
     // merges small per-segment results centrally the same way. The probe is
     // a limit(T+1) collect — bounded whatever the graph size — and any
     // larger graph falls through to the alternating loop unchanged (the
-    // checkpoint is already materialized either way). The probe holds up to
-    // T+1 pairs on the driver as boxed `Row`s; T defaults to 1M pair rows
-    // (override with spark.graft.cc.localThreshold).
-    val localT = spark0.conf.getOption("spark.graft.cc.localThreshold")
-      .map(_.toInt).getOrElse(1 << 20)
-    val head = pc.limit(localT + 1).collect()
-    if (head.length <= localT) {
+    // checkpoint is already materialized either way). The probe brings up
+    // to T+1 pairs to the driver as primitive longs (see packPairs); T is
+    // `localThreshold` pair rows.
+    val head = pc.limit(localThreshold + 1).queryExecution.toRdd
+      .mapPartitions(packPairs).collect()
+    val pairRows = head.map(p => p._1.length / 2 + p._3).sum
+    if (pairRows <= localThreshold) {
       // DSU with path halving; label = min id per component (the exact
       // semantics of the star-forest fixpoint below, asserted equal in
       // SimilaritySpec's forced-threshold test)
-      val parent = new java.util.HashMap[Long, Long](head.length * 2)
+      val parent = new java.util.HashMap[Long, Long](pairRows * 2)
       def find(x0: Long): Long = {
         var x = x0
         var p = parent.get(x)
@@ -296,17 +297,16 @@ object Similarity {
       // null ids as on the distributed path: an edge with a null endpoint
       // joins nothing (`a =!= b` drops it), its other endpoint still labels
       // itself, and the null node is one (null, null) row
-      var nullNode = false
-      head.foreach { r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) {
-          nullNode = true
-          if (!r.isNullAt(0)) add(r.getLong(0))
-          if (!r.isNullAt(1)) add(r.getLong(1))
-        } else {
-          val a = r.getLong(0); val b = r.getLong(1)
+      val nullNode = head.exists(_._3 > 0)
+      head.foreach { case (ab, loose, _) =>
+        loose.foreach(add)
+        var i = 0
+        while (i < ab.length) {
+          val a = ab(i); val b = ab(i + 1)
           add(a); add(b)
           val ra = find(a); val rb = find(b)
           if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
+          i += 2
         }
       }
       // component minimum per root (roots are already minima under the
@@ -332,14 +332,9 @@ object Similarity {
       // nullability mirrors the distributed path's schema (id from a
       // distinct over nullable inputs; cluster_id from a coalesce) so the
       // dumped parquet schema is identical either way
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("cluster_id",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      return spark0.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](java.util.Arrays.asList(out: _*)),
-        schema)
+      val schema = new org.apache.spark.sql.types.StructType() // nullable fields
+        .add("id", "long").add("cluster_id", "long")
+      return spark0.createDataFrame(java.util.Arrays.asList(out: _*), schema)
     }
     // Clone the session and pin the ITERATION's shuffle width there: the
     // caller's session conf is never touched, so a query planned on it
@@ -425,6 +420,28 @@ object Similarity {
     // hand the (small) result back on the CALLER's session so downstream
     // composition never mixes sessions
     spark0.createDataFrame(labels.rdd, labels.schema)
+  }
+
+  /** One partition of the CC driver probe as primitive longs: both
+    * endpoints of every pair without a null, interleaved (a, b, a, b, …);
+    * the non-null endpoints of the pairs with a null; and how many pairs
+    * had a null. */
+  private def packPairs(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow])
+      : Iterator[(Array[Long], Array[Long], Int)] = {
+    val ab = Array.newBuilder[Long]
+    val loose = Array.newBuilder[Long]
+    var nullRows = 0
+    rows.foreach { r =>
+      if (r.isNullAt(0) || r.isNullAt(1)) {
+        nullRows += 1
+        if (!r.isNullAt(0)) loose += r.getLong(0)
+        if (!r.isNullAt(1)) loose += r.getLong(1)
+      } else {
+        ab += r.getLong(0)
+        ab += r.getLong(1)
+      }
+    }
+    Iterator.single((ab.result(), loose.result(), nullRows))
   }
 
   /** Brute-force cosine top-k: exact baseline for ANN. Queries broadcast;

@@ -23,7 +23,8 @@ object CoreQueries {
   /** The 10-aggregator topN behind `topn_wide_aggs` / `_onepass` — over the
     * default gate (6), so the default run takes the two-phase
     * AggregateTopNMetricFirst shape. */
-  private def wideAggTopN(s: SparkSession, dir: String): DataFrame = {
+  private def wideAggTopN(s: SparkSession, dir: String,
+      twoPhaseMinAggs: Int = 6): DataFrame = {
     // r16 note: rebalancing this scan (Sources.parallelized, projected) was
     // MEASURED and rejected — the two-phase plan consumes the scan twice, so
     // an un-materialized rebalance shuffles the fact twice and the headline
@@ -44,7 +45,8 @@ object CoreQueries {
         Agg("max_qty", max(col("l_quantity").cast("long"))),
         Agg("disc", sum(col("l_discount").cast(D)).cast("double")),
         Agg("tax", sum(col("l_tax").cast(D)).cast("double")),
-        Agg("nd_part", count_distinct(col("l_partkey"))))
+        Agg("nd_part", count_distinct(col("l_partkey")))),
+      twoPhaseMinAggs = twoPhaseMinAggs
     ).run(li)
   }
   // money sums: exact decimal accumulation, but OUTPUT as double — the
@@ -92,21 +94,17 @@ object CoreQueries {
 
     // --- topN, WIDE aggregator list: the two-phase AggregateTopNMetricFirst
     // shape (AggregateTopNMetricFirstAlgorithm.java:47) — 10 aggregators is
-    // over the default gate (spark.graft.topn.aggregateMetricFirstThreshold
-    // = 6), so the plan aggregates ONLY the rank metric, broadcast-semi-
-    // joins the 5 survivors back onto the scan, and computes the remaining
-    // 9 aggregators over just those groups ---
+    // over the default gate (TopNQuery.twoPhaseMinAggs = 6), so the plan
+    // aggregates ONLY the rank metric, broadcast-semi-joins the 5 survivors
+    // back onto the scan, and computes the remaining 9 aggregators over just
+    // those groups ---
     "topn_wide_aggs" -> ((s, dir) => wideAggTopN(s, dir)),
 
     // the SAME wide-aggregator topN with the two-phase gate disabled — the
     // single-phase comparison twin for SCALE.md's measured pair (same
     // oracle, so both shapes stay hash-exact)
-    "topn_wide_aggs_onepass" -> ((s, dir) => {
-      val key = "spark.graft.topn.aggregateMetricFirstThreshold"
-      val prev = s.conf.get(key, "6")
-      s.conf.set(key, Int.MaxValue.toString)
-      try wideAggTopN(s, dir) finally s.conf.set(key, prev)
-    }),
+    "topn_wide_aggs_onepass" -> ((s, dir) =>
+      wideAggTopN(s, dir, twoPhaseMinAggs = Int.MaxValue)),
 
     // --- topN: dimension-ordered page-2 via previousStop
     // (DimensionTopNMetricSpec previousStop pagination) ---

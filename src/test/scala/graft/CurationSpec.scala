@@ -35,7 +35,7 @@ class CurationSpec extends SparkSpecBase {
   }
 
   test("connectedComponents: small-graph driver path ≡ the distributed loop") {
-    // r17: graphs under spark.graft.cc.localThreshold are solved with
+    // r17: graphs under the local threshold are solved with
     // driver-side union-find; labels must be IDENTICAL to the alternating
     // star loop's fixpoint on the same input — chains, cycles, self-pairs,
     // duplicate and reversed edges all present
@@ -45,11 +45,8 @@ class CurationSpec extends SparkSpecBase {
     val pairs = edges.toDF("id_a", "id_b")
     val local = Similarity.connectedComponents(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set("spark.graft.cc.localThreshold", "0")
-    val dist =
-      try Similarity.connectedComponents(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.unset("spark.graft.cc.localThreshold")
+    val dist = Similarity.connectedComponents(pairs, localThreshold = 0).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == dist)
   }
 
@@ -62,9 +59,8 @@ class CurationSpec extends SparkSpecBase {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.graft.cc.localThreshold", "0")
     val pairs = (1L until 2000L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val fut = Future(Similarity.connectedComponents(pairs).collect())
+    val fut = Future(Similarity.connectedComponents(pairs, localThreshold = 0).collect())
     var samples = 0
     while (!fut.isCompleted) {
       // every observation of the shared session, including one mid-plan
@@ -73,9 +69,7 @@ class CurationSpec extends SparkSpecBase {
       assert(spark.range(30).groupBy((col("id") % 3).as("k")).count().count() == 3L)
       samples += 1
     }
-    val got =
-      try Await.result(fut, 180.seconds)
-      finally spark.conf.unset("spark.graft.cc.localThreshold")
+    val got = Await.result(fut, 180.seconds)
     assert(got.length == 2000 && got.forall(_.getLong(1) == 1L))
     assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
     assert(samples > 0, "CC finished before any concurrent observation — lengthen the chain")

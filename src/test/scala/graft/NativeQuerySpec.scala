@@ -798,13 +798,25 @@ class NativeQuerySpec extends SparkSpecBase {
     val e = intercept[graft.operators.SubqueryRowLimitExceededException](
       run(q(""", "context": {"maxSubqueryRows": 10}""")).count())
     assert(e.getMessage == "Subquery generated results beyond maximum[10]")
-    // absent: the server-level default applies
-    // (QueryContexts.DEFAULT_MAX_SUBQUERY_ROWS, spark.graft.maxSubqueryRows)
+    // absent: QueryContexts.DEFAULT_MAX_SUBQUERY_ROWS applies
     assert(run(q("")).count() > 0)
-    spark.conf.set("spark.graft.maxSubqueryRows", "10")
-    try intercept[graft.operators.SubqueryRowLimitExceededException](
-      run(q("")).count())
-    finally spark.conf.unset("spark.graft.maxSubqueryRows")
+    // a server-level default context sets it for every query without one
+    // of its own (DefaultQueryConfig)
+    val facade = graft.server.HttpFacade.start(spark, resolver,
+      defaultContext = org.json4s.JObject(
+        "maxSubqueryRows" -> org.json4s.JInt(10)))
+    try {
+      val client = java.net.http.HttpClient.newHttpClient()
+      val resp = client.send(
+        java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://127.0.0.1:${facade.port}/druid/v2"))
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(q("")))
+          .header("Content-Type", "application/json").build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(resp.statusCode() == 400, resp.body())
+      assert(resp.body().contains("Subquery generated results beyond maximum[10]"),
+        resp.body())
+    } finally facade.stop()
   }
 
   test("duration and none granularities (DurationGranularity.java, " +

@@ -251,13 +251,10 @@ class SimilaritySpec extends SparkSpecBase {
     val pairs = Seq[(Option[Long], Option[Long])](
       (Some(1L), Some(2L)), (Some(2L), None), (None, Some(7L)), (None, None),
       (Some(3L), Some(1L))).toDF("id_a", "id_b")
-    def labels(): Seq[String] =
-      Similarity.connectedComponents(pairs).collect().map(_.toString).sorted.toSeq
-    val local = labels()
-    spark.conf.set("spark.graft.cc.localThreshold", "0")
-    val dist =
-      try labels()
-      finally spark.conf.unset("spark.graft.cc.localThreshold")
+    def labels(cc: org.apache.spark.sql.DataFrame): Seq[String] =
+      cc.collect().map(_.toString).sorted.toSeq
+    val local = labels(Similarity.connectedComponents(pairs))
+    val dist = labels(Similarity.connectedComponents(pairs, localThreshold = 0))
     assert(local == dist)
     assert(local == Seq("[1,1]", "[2,1]", "[3,1]", "[7,7]", "[null,null]"))
   }

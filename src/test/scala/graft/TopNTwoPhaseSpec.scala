@@ -34,19 +34,12 @@ class TopNTwoPhaseSpec extends SparkSpecBase {
       ]
     }"""
 
-  private def runAt(threshold: Int): org.apache.spark.sql.DataFrame = {
-    spark.conf.set("spark.graft.topn.aggregateMetricFirstThreshold",
-      threshold.toString)
-    try NativeQuery.run(spark, WideAggJson,
-      name => Sources.table(spark, sf(), name))
-    finally spark.conf.set("spark.graft.topn.aggregateMetricFirstThreshold", "6")
-  }
-
   test("a 10-aggregator topN takes the two-phase plan (rank-only aggregate " +
       "-> broadcast LeftSemi -> full aggregate) and returns the same rows " +
       "as the single-phase plan") {
-    val single = runAt(Int.MaxValue) // gate unreachable -> single phase
-    val two = runAt(2)               // gate armed
+    // the declared twins: the default gate, and the gate unreachable
+    val two = SparkEntry.queries("topn_wide_aggs")(spark, sf())
+    val single = SparkEntry.queries("topn_wide_aggs_onepass")(spark, sf())
 
     val planSingle = single.queryExecution.executedPlan.toString
     val planTwo = two.queryExecution.executedPlan.toString
@@ -61,6 +54,16 @@ class TopNTwoPhaseSpec extends SparkSpecBase {
     val b = two.collect().map(_.toSeq).toSeq
     assert(a == b, s"two-phase diverged:\nsingle=$a\ntwo=$b")
     assert(a.size == 5)
+
+    // the native 10-aggregator JSON reaches the same plan at the default gate
+    val native = NativeQuery.run(spark, WideAggJson,
+      name => Sources.table(spark, sf(), name))
+    val planNative = native.queryExecution.executedPlan.toString
+    assert(planNative.contains("LeftSemi"),
+      s"the native topN must semi-join the phase-1 survivors:\n$planNative")
+    assert("BroadcastHashJoin".r.findAllIn(planNative).nonEmpty,
+      "the K survivors must broadcast, never shuffle the fact side")
+    assert(native.collect().length == 5)
   }
 
   test("a null dimension group survives the two-phase semi-join (null-safe " +
@@ -75,23 +78,27 @@ class TopNTwoPhaseSpec extends SparkSpecBase {
         lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
           .cast("timestamp_ntz").as("__time"))
       .write.mode("overwrite").parquet(dir)
-    spark.conf.set("spark.graft.topn.aggregateMetricFirstThreshold", "2")
-    try {
-      val rows = NativeQuery.run(spark,
-        """{
-          "queryType": "topN", "dataSource": "t", "granularity": "all",
-          "dimension": "g", "metric": "s", "threshold": 2,
-          "aggregations": [
-            {"type": "longSum", "name": "s", "fieldName": "v"},
-            {"type": "count", "name": "rows"},
-            {"type": "longMax", "name": "mx", "fieldName": "v"}
-          ]
-        }""", _ => spark.read.parquet(dir)).collect()
-      assert(rows.length == 2)
-      assert(rows(0).isNullAt(rows(0).fieldIndex("g")),
-        s"the null group (40 rows) must rank first: ${rows.toSeq}")
-      assert(rows(0).getAs[Long]("s") == 40L)
-      assert(rows(0).getAs[Long]("rows") == 40L)
-    } finally spark.conf.set("spark.graft.topn.aggregateMetricFirstThreshold", "6")
+    // six aggregators: the default two-phase gate
+    val df = NativeQuery.run(spark,
+      """{
+        "queryType": "topN", "dataSource": "t", "granularity": "all",
+        "dimension": "g", "metric": "s", "threshold": 2,
+        "aggregations": [
+          {"type": "longSum", "name": "s", "fieldName": "v"},
+          {"type": "count", "name": "rows"},
+          {"type": "longMax", "name": "mx", "fieldName": "v"},
+          {"type": "longMin", "name": "mn", "fieldName": "v"},
+          {"type": "longSum", "name": "s2", "fieldName": "v"},
+          {"type": "doubleSum", "name": "ds", "fieldName": "v"}
+        ]
+      }""", _ => spark.read.parquet(dir))
+    assert(df.queryExecution.executedPlan.toString.contains("LeftSemi"),
+      "six aggregators must take the two-phase plan")
+    val rows = df.collect()
+    assert(rows.length == 2)
+    assert(rows(0).isNullAt(rows(0).fieldIndex("g")),
+      s"the null group (40 rows) must rank first: ${rows.toSeq}")
+    assert(rows(0).getAs[Long]("s") == 40L)
+    assert(rows(0).getAs[Long]("rows") == 40L)
   }
 }
