@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.operators.{DruidTime, NativeQuery}
-import graft.sources.LookupRegistry
+import graft.sources.{BatchIngest, LookupRegistry}
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 /** Thin HTTP query façade — the reference's actual entry points
@@ -84,42 +85,74 @@ object HttpFacade {
     *    cache is configured), and values failing `fits` are not stored (the
     *    reference's `cache.resultLevelCacheLimit`).
     *
-    * Keys include the lookup registry's generation and the ingest layer's
-    * data generation, so a lookup update or an in-process write/compaction
-    * invalidates every entry (the reference's CachingClusteredClient keys
-    * on segment identifiers the same way). The generations only see
-    * IN-PROCESS writes (BatchIngest.write/registerSpec, lookup updates) —
-    * data rewritten by an external writer (a direct spark write to the same
+    * Keys include the lookup registry's generation, so a lookup update
+    * invalidates every entry. Each entry also records the ingest
+    * generations (BatchIngest.generations) of the datasource keys its build
+    * read, taken from a snapshot made before the build, and a hit needs
+    * every one of them still current: an in-process write, INSERT,
+    * compaction or spec registration retires only the entries that read
+    * its datasource (the reference's CachingClusteredClient keys on
+    * segment identifiers the same way), and a write that lands during a
+    * build leaves that entry stale, never wrong. A build reports what it
+    * read through [[QueryCache.read]]; a nested lookup (the plan cache
+    * inside a result-cache build) passes its keys, hit or miss, to the
+    * enclosing build. The generations only see IN-PROCESS writes — data
+    * rewritten by an external writer (a direct spark write to the same
     * path, another process) is invisible to them, so operators must POST
     * the invalidation endpoint after out-of-band changes. A build that
     * throws counts as neither hit nor miss. */
   private[server] final class QueryCache[V](lookups: LookupRegistry,
       fits: V => Boolean = (_: V) => true, capacity: Int = 64) {
+    private final class Entry(val value: V, val reads: Map[String, Long]) {
+      def current(now: BatchIngest.Generations): Boolean =
+        reads.forall { case (k, g) => now.of(k) == g }
+    }
     private val hitCount = new java.util.concurrent.atomic.AtomicLong(0L)
     private val missCount = new java.util.concurrent.atomic.AtomicLong(0L)
     private val map =
-      new java.util.LinkedHashMap[(String, Long, Long), V](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), V]): Boolean =
+      new java.util.LinkedHashMap[(String, Long), Entry](16, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[(String, Long), Entry]): Boolean =
           size() > capacity
       }
 
     def get(key: String, useCache: Boolean = true, populateCache: Boolean = true)
         (build: => V): V = {
-      val k = (key, lookups.generation, graft.sources.BatchIngest.dataGeneration)
-      if (useCache) map.synchronized(Option(map.get(k))) match {
-        case Some(v) => hitCount.incrementAndGet(); return v
+      val k = (key, lookups.generation)
+      if (useCache) map.synchronized(Option(map.get(k)))
+          .filter(_.current(BatchIngest.generations)) match {
+        case Some(e) => hitCount.incrementAndGet(); QueryCache.read(e.reads.keys); return e.value
         case None => ()
       }
-      val v = build
+      val before = BatchIngest.generations
+      val (v, keys) = QueryCache.recording(build)
       missCount.incrementAndGet()
-      if (populateCache && fits(v)) map.synchronized(map.put(k, v))
+      if (populateCache && fits(v))
+        map.synchronized(map.put(k, new Entry(v, keys.map(r => r -> before.of(r)).toMap)))
       v
     }
 
     def invalidateAll(): Unit = map.synchronized(map.clear())
     def hits: Long = hitCount.get()
     def misses: Long = missCount.get()
+  }
+
+  private[server] object QueryCache {
+    private val builds = new ThreadLocal[scala.collection.mutable.Set[String]]
+
+    /** Run `body`, returning it with the keys it reported through [[read]];
+      * they also count as read by the enclosing recording, if any. */
+    def recording[A](body: => A): (A, Set[String]) = {
+      val outer = builds.get()
+      val keys = scala.collection.mutable.Set.empty[String]
+      builds.set(keys)
+      try (body, keys.toSet) finally {
+        builds.set(outer)
+        if (outer != null) outer ++= keys
+      }
+    }
+
+    /** Report generation keys the current build read. */
+    def read(keys: Iterable[String]): Unit = Option(builds.get()).foreach(_ ++= keys)
   }
 
   /** One POSTed query, parsed once at entry; every later step — id,
@@ -469,8 +502,11 @@ object HttpFacade {
               planner.sqlTimeZone.map(_.getId).getOrElse("UTC")
             def produce(): String = {
               val df =
-                if (cacheable)
-                  planCache.get(s"sql:$knobs:$sqlText")(SqlLifecycle.plan(spark, q, planner))
+                if (cacheable) planCache.get(s"sql:$knobs:$sqlText") {
+                  val planned = SqlLifecycle.plan(spark, q, planner)
+                  QueryCache.read(BatchIngest.readKeys(planned.queryExecution.analyzed))
+                  planned
+                }
                 else SqlLifecycle.plan(spark, q, planner)
               SqlLifecycle.check(df, planner)
               render(df, format, header, typesHeader, sqlTypesHeader, maxResultRows,
@@ -500,8 +536,20 @@ object HttpFacade {
       // executes in the shared zone scope
       resultCache.get(req.cacheKey, req.flag("useCache", true), req.flag("populateCache", true)) {
         SqlLifecycle.SessionScope.run(spark, None) {
-          envelope(q, planCache.get(req.cacheKey)(NativeQuery.run(spark, q, resolve, lookups)),
-            maxResultRows)
+          envelope(q, planCache.get(req.cacheKey) {
+            // the build reads every datasource the resolver hands it
+            // (inlined `query` subqueries included), and the ingest specs
+            // of those names (segmentMetadata's spec analyses)
+            val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]
+            val df = NativeQuery.run(spark, q, name => {
+              val ds = resolve(name)
+              reads.add(name)
+              BatchIngest.readKeys(ds.queryExecution.analyzed).foreach(reads.add)
+              ds
+            }, lookups)
+            QueryCache.read(reads.asScala)
+            df
+          }, maxResultRows)
         }
       }
     })
@@ -552,8 +600,9 @@ object HttpFacade {
       (method, sub, _) => ClusterResource.overlord(spark, method, sub)))
 
     // plan-cache admin: DELETE (or POST …/invalidate) drops every cached
-    // plan. The cache's generation keys only observe IN-PROCESS writes
-    // (BatchIngest / lookup registry); data rewritten out-of-band — an
+    // plan. An entry's per-datasource generations only observe IN-PROCESS
+    // writes (BatchIngest writes, compactions, INSERTs and spec
+    // registrations; the lookup registry); data rewritten out-of-band — an
     // external writer, a direct spark write to a served path — is invisible
     // to them, so operators hit this endpoint after such changes (the
     // reference's broker exposes the same per-cache admin surface).

@@ -256,7 +256,7 @@ object SystemSchema {
       timeColumn: String): Unit = {
     spark.sql("CREATE DATABASE IF NOT EXISTS sys")
     val inv = graft.sources.BatchIngest.segments(spark, path, timeColumn).collect().toSeq
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.sources.Sources.parquet(spark, path).schema
     val (metrics, dims) = schema.fields.filterNot(_.name == timeColumn)
       .filterNot(_.name == "__chunk")
       .partition(f => f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])

@@ -61,7 +61,7 @@ object BatchIngest {
   private val specs = scala.collection.concurrent.TrieMap.empty[String, IngestSpec]
   def registerSpec(name: String, spec: IngestSpec): Unit = {
     specs.put(name, spec)
-    dataGen.incrementAndGet() // spec-describing analyses read this catalog
+    bump(name) // spec-describing analyses read this catalog by name
   }
   def specOf(name: String): Option[IngestSpec] = specs.get(name)
 
@@ -326,16 +326,63 @@ object BatchIngest {
     }
   }
 
+  /** Write generations, one per datasource key (the reference's broker
+    * keys cached results on segment ids, CachingClusteredClient, so a new
+    * segment in one datasource leaves every other datasource's entries
+    * alone). A key is a qualified root path, bumped by every in-process
+    * [[write]] (the INSERT path included) and [[compact]] of it, or a
+    * datasource name, bumped by [[registerSpec]]. Every bump also advances
+    * `writes`, the generation of [[AnyWrite]]. The façade caches record,
+    * per entry, the generations its build read from a snapshot taken
+    * before the build ([[readKeys]] names what a plan reads). */
+  final case class Generations(byKey: Map[String, Long], writes: Long) {
+    /** The generation of `key`: the sum over the keys equal to it or above
+      * or below it in the path tree, so a write to a directory also retires
+      * the readers of its subdirectories, and the other way round. */
+    def of(key: String): Long =
+      if (key == AnyWrite) writes
+      else byKey.iterator.collect {
+        case (k, g) if k == key || k.startsWith(key + "/") || key.startsWith(k + "/") => g
+      }.sum
+  }
+
+  /** The key of a read no path or name describes (an RDD, a V2 or JDBC
+    * relation): every write retires it. */
+  private val AnyWrite = "*"
+
+  private val gens =
+    new java.util.concurrent.atomic.AtomicReference(Generations(Map.empty, 0L))
+  def generations: Generations = gens.get()
+
+  private def bump(key: String): Unit = gens.updateAndGet(g =>
+    Generations(g.byKey.updated(key, g.byKey.getOrElse(key, 0L) + 1L), g.writes + 1L))
+
+  def bumpPath(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    bump(p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString)
+  }
+
+  /** The generation keys a plan reads: the root paths of its file
+    * relations, subquery expressions included; local rows read none, and
+    * any other leaf reads [[AnyWrite]]. */
+  def readKeys(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Set[String] = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    plan.collectWithSubqueries {
+      case r: LogicalRelation => r.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
+        case _ => Seq(AnyWrite)
+      }
+      // a CTE reference reads what its definition, walked on its own, reads
+      case _: LocalRelation | _: OneRowRelation | _: Range | _: CTERelationRef => Nil
+      case _: LeafNode => Seq(AnyWrite)
+    }.flatten.toSet
+  }
+
   /** Publish: time-chunked + partitioned parquet (the segment layout).
     * segmentGranularity "ALL" puts everything in one eternity chunk (the
     * reference's ALL-granularity segment); `mode` Append adds new segments
     * to an existing datasource, the INSERT DML path. */
-  /** Monotonic data-change counter: every in-process ingest write or
-    * compaction bumps it, so the façade's native plan cache (keyed on it)
-    * never serves a plan whose file-listing snapshot predates a rewrite. */
-  private val dataGen = new java.util.concurrent.atomic.AtomicLong(0L)
-  def dataGeneration: Long = dataGen.get()
-
   def write(df: DataFrame, spec: IngestSpec, outPath: String,
       mode: SaveMode = SaveMode.Overwrite): Unit = {
     val chunked =
@@ -350,7 +397,7 @@ object BatchIngest {
       case RangePartitions(n, dims)   => chunked.repartitionByRange(n, dims.map(col): _*)
     }
     arranged.write.mode(mode).partitionBy("__chunk").parquet(outPath)
-    dataGen.incrementAndGet() // after completion: invalidates cached plans
+    bumpPath(df.sparkSession, outPath) // after completion: retires cached reads of it
   }
 
   def run(spark: SparkSession, spec: IngestSpec, outPath: String): DataFrame = {
@@ -360,7 +407,7 @@ object BatchIngest {
     // TIMESTAMPSPEC) resolve through the name a query actually uses
     registerSpec(outPath, spec)
     spec.dataSource.foreach(registerSpec(_, spec))
-    spark.read.parquet(outPath)
+    Sources.parquet(spark, outPath)
   }
 
   /** Compaction (reference: indexing-service CompactionTask; Delta OPTIMIZE
@@ -375,7 +422,7 @@ object BatchIngest {
   }
 
   def compact(spark: SparkSession, path: String, targetBytes: Long = 256L << 20): Unit = {
-    val df = spark.read.parquet(path)
+    val df = Sources.parquet(spark, path)
     val totalBytes = df.inputFiles.map(f => localFile(f).length).sum
     val nFiles = math.max(1, (totalBytes / targetBytes).toInt)
     val tmp = path.stripSuffix("/") + "__compacting"
@@ -391,6 +438,8 @@ object BatchIngest {
       if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
     }
     rm(old)
+    // cached plans hold the file listing the swap just deleted
+    bumpPath(spark, path)
   }
 
   /** sys.segments-style view (reference: sql/.../schema/SystemSchema —
@@ -404,7 +453,7 @@ object BatchIngest {
     */
   def segments(spark: SparkSession, path: String, timeColumn: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    spark.read.parquet(path)
+    Sources.parquet(spark, path)
       .select(col(timeColumn),
         input_file_name().as("segment"),
         input_file_block_start().as("__blk"),

@@ -17,7 +17,65 @@ object Sources {
     * or any path. Columnar scan + pushdown come free from the parquet source.
     */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** A parquet datasource at `path`, its schema read through the schema
+    * catalog (the reference's broker refreshes DruidSchema per datasource,
+    * so no query pays for a schema read). An entry holds the schema the
+    * footers gave, keyed on the qualified path, the session's
+    * parquet-inference confs and a fingerprint of the path's files (path,
+    * length, mtime) from one Hadoop listing, so a rewritten table is read
+    * again. The catalog holds metadata only: every query still lists and
+    * scans its files. A path the listing cannot fingerprint (a glob, a
+    * missing or empty directory) reads as a plain `spark.read.parquet`,
+    * which raises its own errors. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    filesOf(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some((root, fingerprint)) =>
+        val key = (root, InferenceConfs.map(spark.conf.getOption))
+        val schema = Option(schemas.get(key)).collect { case (`fingerprint`, s) => s }
+          .getOrElse {
+            // no lock is held while the inference job runs; two racing
+            // misses both infer, and the later put wins
+            val s = spark.read.parquet(path).schema
+            schemas.put(key, (fingerprint, s))
+            s
+          }
+        spark.read.schema(schema).parquet(path)
+    }
+
+  // every session conf that changes what parquet inference returns
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[Option[String]]), (String, org.apache.spark.sql.types.StructType)]
+
+  /** The qualified root and a SHA-256 over its files' (path, length,
+    * mtime), or None when the path lists no data file. */
+  private def filesOf(spark: SparkSession, path: String): Option[(String, String)] =
+    scala.util.Try {
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(root, true)
+      val files = scala.collection.mutable.ArrayBuffer.empty[String]
+      var data = false
+      while (it.hasNext) {
+        val f = it.next()
+        files += s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n"
+        data ||= !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")
+      }
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      files.sorted.foreach(f => md.update(f.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      if (data) Some((fs.makeQualified(root).toString, BigInt(1, md.digest()).toString(16)))
+      else None
+    }.toOption.flatten
 
   /** Rebalance a CPU-dense input up to cluster width when the scan
     * under-partitions (a small file / single parquet row group scans as ONE

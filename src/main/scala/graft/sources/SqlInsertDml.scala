@@ -408,6 +408,9 @@ object SqlInsertDml {
         "__chunk", org.apache.spark.sql.types.StringType, true))
     val published = spark.read.schema(publishedSchema).parquet(outPath).drop("__chunk")
     published.createOrReplaceTempView(stmt.target)
+    // the write's bump landed before the view listed the new files: a read
+    // of the old view in between recorded the new generation
+    BatchIngest.bumpPath(spark, outPath)
     published
   }
 

@@ -55,6 +55,5 @@ object ResultCacheProbe {
     println(json)
     facade.stop()
     spark.stop()
-    println(json)
   }
 }
